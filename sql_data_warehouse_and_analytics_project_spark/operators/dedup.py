@@ -15,13 +15,16 @@ Scale design notes (100 TB):
   buckets: cost is k min-aggregations over the exploded shingles plus a
   groupBy per band — all linear shuffles; candidates are verified with the
   same Jaccard join restricted to bucket pairs.
-- SimHash is a single groupBy over exploded (token, bit) contributions;
-  near-dup candidates come from 16-bit band blocking on the 64-bit key.
+- SimHash is a per-doc bit vote over shingle hashes; near-dup candidates
+  come from 6-bit band blocking on the 48-bit key.
+- MinHash, SimHash and the perceptual hashes in multimodal.py share one
+  banded-candidate skeleton (:func:`_banded_pairs`).
 """
 
 from __future__ import annotations
 
 import random
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -309,7 +312,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     internal shingle cache before returning (see :func:`_materialized`)."""
     caches: list = []
     return _materialized(
-        ngram_jaccard_pairs(_docs(spark, sf_dir), _caches=caches, _sorted=False),
+        ngram_jaccard_pairs(_docs(spark, sf_dir), _caches=caches),
         caches,
         order=["doc_id_1", "doc_id_2"],
     )
@@ -320,7 +323,6 @@ def ngram_jaccard_pairs(
     threshold: float = _NEARDUP_THRESHOLD,
     df_cut: int = _JACCARD_DF_CUT,
     _caches: list | None = None,
-    _sorted: bool = True,
 ) -> DataFrame:
     """The full Jaccard near-dup pipeline over an arbitrary documents frame
     (columns: doc_id, lang, text). The exploded shingle frame is
@@ -348,7 +350,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return out.orderBy("doc_id_1", "doc_id_2") if _sorted else out
 
 
 # --- MinHash + LSH ---------------------------------------------------------
@@ -459,16 +460,14 @@ def lsh_bucket_overflow(bands: DataFrame, cap: int = _LSH_BUCKET_CAP) -> DataFra
     )
 
 
-def _expand_member_pairs(
-    rep_pairs: DataFrame, members: DataFrame, intra_cols: list[Column], carry: list[str]
-) -> DataFrame:
+def _expand_member_pairs(rep_pairs: DataFrame, members: DataFrame, intra: Column) -> DataFrame:
     """Expand representative-level near-dup pairs back to ALL member pairs so
     the collapsed pipeline's output is bit-identical to the uncollapsed
-    ground truth: cross-group pairs inherit the rep pair's score (members
-    have identical shingle sets, so identical Jaccard/Hamming), intra-group
-    pairs get the exact-duplicate score (``intra_cols``). Joins are linear
-    in output size — the quadratic intra-group blowup is inherent to the
-    requested all-pairs OUTPUT, not to any shuffle key."""
+    ground truth: cross-group pairs inherit the rep pair's score columns
+    (members have identical shingle sets, so identical Jaccard/Hamming),
+    intra-group pairs get the exact-duplicate score ``intra``. Joins are
+    linear in output size — the quadratic intra-group blowup is inherent to
+    the requested all-pairs OUTPUT, not to any shuffle key."""
     m1 = members.select(F.col("rep_id").alias("doc_id_1"), F.col("doc_id").alias("m1"))
     m2 = members.select(F.col("rep_id").alias("doc_id_2"), F.col("doc_id").alias("m2"))
     cross = (
@@ -477,24 +476,126 @@ def _expand_member_pairs(
         .select(
             F.least("m1", "m2").alias("doc_id_1"),
             F.greatest("m1", "m2").alias("doc_id_2"),
-            *carry,
+            *rep_pairs.columns[2:],
         )
     )
     a = members.alias("ma")
     b = members.alias("mb")
-    intra = (
-        a.join(
-            b,
-            (F.col("ma.rep_id") == F.col("mb.rep_id"))
-            & (F.col("ma.doc_id") < F.col("mb.doc_id")),
-        )
-        .select(
-            F.col("ma.doc_id").alias("doc_id_1"),
-            F.col("mb.doc_id").alias("doc_id_2"),
-            *intra_cols,
-        )
+    same = a.join(
+        b, (F.col("ma.rep_id") == F.col("mb.rep_id")) & (F.col("ma.doc_id") < F.col("mb.doc_id"))
+    ).select(F.col("ma.doc_id").alias("doc_id_1"), F.col("mb.doc_id").alias("doc_id_2"), intra)
+    return cross.unionAll(same)
+
+
+# --- banded-candidate skeleton ----------------------------------------------
+#
+# Every LSH near-dup pipeline — MinHash, SimHash, and the image/audio/video
+# perceptual hashes in multimodal.py — runs one dataflow over collapsed
+# representatives: band table → capped buckets → (band, bucket) self-join →
+# distinct rep pairs → optional verify leg → expansion back to all member
+# pairs. The pipelines differ only in their bucket expressions, an in-join
+# confirm predicate, and the verify leg. The DuckDB oracles replay the same
+# steps (_SQL_CAP_CANDIDATES and the per-pipeline band CTEs).
+
+
+def _band_table(sigs: DataFrame, buckets: list[Column], carry: Sequence[str] = ()) -> DataFrame:
+    """(doc_id, *carry, band, bucket): the band table as ONE explode over
+    per-band bucket expressions (band id = list position) — NOT a union of
+    per-band projections, which would recompute the signature pipeline once
+    per band. ``carry`` columns ride through the explode and the cap window
+    so a confirm predicate can read them inside the band self-join."""
+    band_structs = [
+        F.struct(F.lit(band).alias("band"), bucket.alias("bucket"))
+        for band, bucket in enumerate(buckets)
+    ]
+    return sigs.select("doc_id", *carry, F.explode(F.array(*band_structs)).alias("bb")).select(
+        "doc_id", *carry, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
-    return cross.unionAll(intra)
+
+
+def _banded_pairs(
+    bands: DataFrame,
+    members: DataFrame | None = None,
+    intra: Column | None = None,
+    confirm: Column | None = None,
+    score: Sequence[Column] = (),
+    verify: Callable[[DataFrame], DataFrame] | None = None,
+    _caches: list | None = None,
+) -> DataFrame:
+    """The banded-candidate skeleton: cap ``bands`` (see :func:`_cap_buckets`),
+    self-join on ``(band, bucket, a.doc_id < b.doc_id)`` — AND ``confirm``
+    when given, a predicate over the ``a.``/``b.`` sides that runs where the
+    pair is born — select (doc_id_1, doc_id_2, *score), distinct, then
+    ``verify`` the rep pairs and expand them to ``members`` with
+    exact-duplicate score ``intra``. ``members=None`` returns the verified
+    rep pairs (the estimator audit scores representatives).
+
+    A verify leg reads the candidate pairs from several branches (candidate-
+    doc semi joins, pair joins), so they are cached first — uncached, each
+    branch would re-run the whole signature pipeline; the pairs are tiny by
+    construction (LSH prunes the quadratic space, the cap bounds hot
+    buckets). A confirm-in-join pipeline has one reader and no cache: its
+    distinct dedupes confirmed SURVIVORS only (band duplicates ≤ n_bands× a
+    small set), not the raw band-join rows — same output set, since distinct
+    commutes with a deterministic per-pair filter."""
+    capped = _cap_buckets(bands, _LSH_BUCKET_CAP)
+    a, b = capped.alias("a"), capped.alias("b")
+    on = (
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.doc_id") < F.col("b.doc_id"))
+    )
+    if confirm is not None:
+        on = on & confirm
+    pairs = a.join(b, on).select(
+        F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2"), *score
+    ).distinct()
+    if verify is not None:
+        pairs = pairs.cache()
+        if _caches is not None:
+            _caches.append(pairs)
+        pairs = verify(pairs)
+    return pairs if members is None else _expand_member_pairs(pairs, members, intra)
+
+
+def _hamming_pairs(
+    reps: DataFrame,
+    members: DataFrame,
+    sig_col: str,
+    n_bands: int,
+    band_bits: int,
+    hamming_max: int,
+) -> DataFrame:
+    """(doc_id_1, doc_id_2, hamming) near-dup pairs from a (doc_id,
+    <sig_col>) frame of distinct integer signatures — the skeleton at
+    Hamming settings, shared by SimHash and every perceptual-hash modality.
+    Buckets are ``n_bands`` slices of ``band_bits`` bits, the signature
+    rides through the band table so bit_count(XOR) <= ``hamming_max``
+    confirms inside the self-join, and intra-group pairs score exactly 0."""
+    mask = (1 << band_bits) - 1
+    buckets = [
+        F.expr(f"shiftright({sig_col}, {band * band_bits}) & {mask}").cast("string")
+        for band in range(n_bands)
+    ]
+    ham = F.bit_count(F.expr(f"a.{sig_col} ^ b.{sig_col}"))
+    return _banded_pairs(
+        _band_table(reps, buckets, carry=[sig_col]),
+        members,
+        intra=F.lit(0).cast("bigint").alias("hamming"),
+        confirm=ham <= hamming_max,
+        score=[ham.cast("bigint").alias("hamming")],
+    )
+
+
+def _minhash_sig_cols() -> list[Column]:
+    """The 64 ``sig_i`` min-hash columns over a staged ``_base`` array of
+    shingle hashes — one ``array_min(transform(...))`` per universal hash."""
+    return [
+        F.array_min(
+            F.transform(F.col("_base"), lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(_P)))
+        ).alias(f"sig_{i}")
+        for i, (a, b) in enumerate(_HASH_AB)
+    ]
 
 
 def _rep_shingle_sigs(reps: DataFrame) -> DataFrame:
@@ -513,12 +614,6 @@ def _rep_shingle_sigs(reps: DataFrame) -> DataFrame:
     whole-stage codegen does not share subexpressions across the
     Filter/Project boundary (verified on the executed plan). The hash chain
     is exactly :func:`minhash_signatures`'s (md5-derived, oracle-replayed)."""
-    sigs = [
-        F.array_min(
-            F.transform(F.col("_base"), lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(_P)))
-        ).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(_HASH_AB)
-    ]
     return (
         reps.select("doc_id", tokens_col(F.col("text")).alias("_t"))
         .select("doc_id", shingles_from(F.col("_t")).alias("_sh"))
@@ -529,7 +624,7 @@ def _rep_shingle_sigs(reps: DataFrame) -> DataFrame:
                 "_base"
             ),
         )
-        .select("doc_id", "_sh", *sigs)
+        .select("doc_id", "_sh", *_minhash_sig_cols())
         .localCheckpoint(eager=True)
     )
 
@@ -547,12 +642,6 @@ def minhash_signatures(docs: DataFrame, spread: bool = True) -> DataFrame:
     source scan is narrower than the core count. The base hash is
     md5-derived (not xxhash64) so the DuckDB oracle can replay the exact
     signature pipeline."""
-    sigs = [
-        F.array_min(
-            F.transform(F.col("_base"), lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(_P)))
-        ).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(_HASH_AB)
-    ]
     return (
         _spread(docs, spread)
         # stage tokens as a column so the shingle lambda doesn't
@@ -566,7 +655,7 @@ def minhash_signatures(docs: DataFrame, spread: bool = True) -> DataFrame:
                 shingles_from(F.col("_t")), lambda s: F.pmod(_md5_long(s, 15), F.lit(_P))
             ).alias("_base"),
         )
-        .select("doc_id", *sigs)
+        .select("doc_id", *_minhash_sig_cols())
     )
 
 
@@ -691,24 +780,18 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_band_table(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) LSH band table from a signature frame.
-
-    One band table via a single explode — NOT a 16-way union of per-band
-    projections, which would recompute the shingle-explode + 64-min-hash
-    signature pipeline once per band (16× the work at any scale). The
-    bucket id is the concatenated row signature (cross-engine string, no
-    xxhash64) — band id disambiguates buckets across bands in the join."""
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
+    """(doc_id, band, bucket) LSH band table from a signature frame: 16
+    bands × 4 rows, the bucket id the concatenated row signature
+    (cross-engine string, no xxhash64) — band id disambiguates buckets
+    across bands in the join."""
+    return _band_table(
+        sigs,
+        [
             F.concat_ws(
                 ":", *[F.col(f"sig_{band * _LSH_ROWS + r}").cast("string") for r in range(_LSH_ROWS)]
-            ).alias("bucket"),
-        )
-        for band in range(_LSH_BANDS)
-    ]
-    return sigs.select("doc_id", F.explode(F.array(*band_structs)).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+            )
+            for band in range(_LSH_BANDS)
+        ],
     )
 
 
@@ -874,78 +957,61 @@ def _candidate_shared_arrays(
     )
 
 
+def _rep_minhash_frames(reps: DataFrame, _caches: list | None) -> tuple[DataFrame, DataFrame]:
+    """(sh, sigs) for the MinHash candidate path both :func:`minhash_lsh_pairs`
+    and :func:`minhash_estimator_error` run: ONE tokenize+shingle+hash
+    checkpoint (:func:`_rep_shingle_sigs`) that the band table, the
+    signature joins and the verify leg all read, plus a narrow signature
+    copy, re-checkpointed: the band table and the signature joins read it
+    several times, and a localCheckpoint does NOT column-prune — without the
+    copy every downstream scan deserializes the full shingle arrays it never
+    uses (profiled: the band-side stages tripled their executor CPU reading
+    the wide blocks). The eager checkpoints also materialize any upstream
+    cache sequentially before the concurrent downstream branches read it."""
+    sh = _rep_shingle_sigs(reps)
+    sigs = sh.drop("_sh").localCheckpoint(eager=True)
+    if _caches is not None:
+        _caches.extend([sh, sigs])
+    return sh, sigs
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = _NEARDUP_THRESHOLD,
-    cap: int = _LSH_BUCKET_CAP,
     _caches: list | None = None,
     _sorted: bool = True,
 ) -> DataFrame:
     """The full MinHash/LSH near-dup pipeline over an arbitrary documents
     frame (columns: doc_id, lang, text). See :func:`dedup_minhash_lsh`.
 
-    The pipeline caches three intermediates (members, candidate pairs,
-    candidate shingles) that live for the session by default; a caller that
-    materializes the result and moves on (e.g. the curation pipeline's
+    The pipeline caches its intermediates (members, candidate pairs,
+    candidate shingles), which live for the session by default; a caller
+    that materializes the result and moves on (e.g. the curation pipeline's
     repeated passes) should pass ``_caches=[]`` and unpersist the collected
     frames afterwards, or executor storage accumulates per call."""
     mem = token_dedup_members(docs).cache()
     if _caches is not None:
         _caches.append(mem)
-    members = mem.select("doc_id", "rep_id")
     reps = mem.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id", "lang", "text")
-    # ONE tokenize+shingle+hash checkpoint shared by the band table, the
-    # signature joins, and the verify leg (r19 — in r18 the verify leg
-    # re-projected shingles from text, and the band self-join's sides would
-    # re-run the 64-hash projection without an ordering point); the eager
-    # checkpoint also materializes the mem cache sequentially before the
-    # concurrent downstream branches read it
-    sh = _rep_shingle_sigs(reps)
-    # narrow signature copy, re-checkpointed: the band table and both
-    # confirm joins read these blocks several times, and a localCheckpoint
-    # does NOT column-prune — without the copy every downstream scan
-    # deserializes the full shingle arrays it never uses (profiled: the
-    # band-side stages tripled their executor CPU reading the wide blocks)
-    sigs = sh.drop("_sh").localCheckpoint(eager=True)
-    if _caches is not None:
-        _caches.extend([sh, sigs])
-    bands = minhash_band_table(sigs)
-    capped = _cap_buckets(bands, cap)
-    a = capped.alias("a")
-    b = capped.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    sh, sigs = _rep_minhash_frames(reps, _caches)
+
+    def jaccard(candidates: DataFrame) -> DataFrame:
+        # exact Jaccard over per-doc shingle ARRAYS (see
+        # _candidate_shared_arrays): no shingle-keyed shuffle, no
+        # hot-shingle guard needed; output pinned bit-identical to the
+        # exploded self-join in tests/test_hot_shingle_guard.py
+        shared = _candidate_shared_arrays(reps, candidates, _caches=_caches, sh=sh)
+        jac = F.col("shared").cast("double") / (F.col("n1") + F.col("n2") - F.col("shared"))
+        return shared.select("doc_id_1", "doc_id_2", jac.alias("jaccard")).filter(
+            F.col("jaccard") >= threshold
         )
-        .select(F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2"))
-        .distinct()
-        # cached: referenced by three downstream branches (candidate-doc
-        # semi joins + final filter); uncached, each branch would re-run the
-        # whole signature pipeline. Candidate pairs are tiny by construction
-        # (LSH prunes the quadratic space + the bucket cap bounds hot
-        # buckets), so this is safe at any scale.
-        .cache()
-    )
-    if _caches is not None:
-        _caches.append(candidates)
-    # verify candidates with exact Jaccard over per-doc shingle ARRAYS
-    # (r18, see _candidate_shared_arrays): the semi join prunes to
-    # candidate docs, overlap + sizes come from one array-intersect pair
-    # join — no shingle-keyed shuffle, no hot-shingle guard needed, five
-    # shuffles and a checkpoint fewer than the exploded self-join it
-    # replaces (output bit-identical, pinned in
-    # tests/test_hot_shingle_guard.py). r19: reads the shared shingle
-    # frame instead of re-projecting shingles from text.
-    shared = _candidate_shared_arrays(reps, candidates, _caches=_caches, sh=sh)
-    jac = F.col("shared").cast("double") / (F.col("n1") + F.col("n2") - F.col("shared"))
-    rep_pairs = shared.select(
-        "doc_id_1", "doc_id_2", jac.alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
-    out = _expand_member_pairs(
-        rep_pairs, members, intra_cols=[F.lit(1.0).alias("jaccard")], carry=["jaccard"]
+
+    out = _banded_pairs(
+        minhash_band_table(sigs),
+        mem.select("doc_id", "rep_id"),
+        intra=F.lit(1.0).alias("jaccard"),
+        verify=jaccard,
+        _caches=_caches,
     )
     return out.orderBy("doc_id_1", "doc_id_2") if _sorted else out
 
@@ -971,69 +1037,48 @@ def minhash_lsh_pairs(
 def minhash_estimator_error(docs: DataFrame, _caches: list | None = None) -> DataFrame:
     """One row (n_pairs, max_err_ppm, sum_err_ppm, mean_abs_err): the
     minhash Jaccard estimator's absolute error over the LSH candidate
-    population of ``docs``."""
+    population of ``docs`` — the candidate path of :func:`minhash_lsh_pairs`
+    with an estimate leg in place of its verify leg."""
     mem = token_dedup_members(docs)
     reps = mem.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id", "lang", "text")
-    # ONE tokenize+shingle+hash checkpoint shared by the band table, both
-    # sides of the agreement join, and the exact leg (r19); narrow sig copy
-    # re-checkpointed for the three sig consumers (see minhash_lsh_pairs)
-    sh = _rep_shingle_sigs(reps)
-    sigs = sh.drop("_sh").localCheckpoint(eager=True)
-    if _caches is not None:
-        _caches.extend([sh, sigs])
-    bands = minhash_band_table(sigs)
-    capped = _cap_buckets(bands, _LSH_BUCKET_CAP)
-    a, b = capped.alias("a"), capped.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    sh, sigs = _rep_minhash_frames(reps, _caches)
+
+    def estimate(candidates: DataFrame) -> DataFrame:
+        sa, sb = sigs.alias("sa"), sigs.alias("sb")
+        matches = None
+        for i in range(_MINHASH_K):
+            t = (F.col(f"sa.sig_{i}") == F.col(f"sb.sig_{i}")).cast("bigint")
+            matches = t if matches is None else matches + t
+        est = (
+            candidates.join(sa, F.col("doc_id_1") == F.col("sa.doc_id"))
+            .join(sb, F.col("doc_id_2") == F.col("sb.doc_id"))
+            .select("doc_id_1", "doc_id_2", matches.alias("matches"))
         )
-        .select(F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2"))
-        .distinct()
-        # two consumers (signature-agreement leg + exact-Jaccard leg);
-        # LSH-bounded tiny, same cache rationale as minhash_lsh_pairs
-        .cache()
-    )
-    if _caches is not None:
-        _caches.append(candidates)
-    sa, sb = sigs.alias("sa"), sigs.alias("sb")
-    matches = None
-    for i in range(_MINHASH_K):
-        t = (F.col(f"sa.sig_{i}") == F.col(f"sb.sig_{i}")).cast("bigint")
-        matches = t if matches is None else matches + t
-    est = (
-        candidates.join(sa, F.col("doc_id_1") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_id_2") == F.col("sb.doc_id"))
-        .select("doc_id_1", "doc_id_2", matches.alias("matches"))
-    )
-    # exact shared counts + sizes via the array-intersect pair join (r18,
-    # see _candidate_shared_arrays) — same rework as the pipeline's verify
-    # leg; every candidate pair gets exactly one row, shared may be 0.
-    # r19: reads the shared shingle frame.
-    shared = _candidate_shared_arrays(reps, candidates, _caches=_caches, sh=sh)
-    paired = est.join(shared, ["doc_id_1", "doc_id_2"]).select(
-        "matches",
-        F.coalesce(F.col("shared"), F.lit(0)).alias("shared"),
-        (F.col("n1") + F.col("n2") - F.coalesce(F.col("shared"), F.lit(0))).alias("u"),
-    )
-    errs = paired.select(
-        F.expr(
-            f"(1000000 * abs({_MINHASH_K}*shared - matches*u)) div ({_MINHASH_K}*u)"
-        ).alias("err_ppm")
-    )
-    return errs.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.max("err_ppm").cast("bigint").alias("max_err_ppm"),
-        F.sum("err_ppm").cast("bigint").alias("sum_err_ppm"),
-        F.round(
-            F.sum("err_ppm").cast("double")
-            / (F.lit(1000000.0) * F.count(F.lit(1)).cast("double")),
-            6,
-        ).alias("mean_abs_err"),
-    )
+        # exact shared counts + sizes, same leg as the pipeline's verify;
+        # every candidate pair gets exactly one row, shared may be 0
+        shared = _candidate_shared_arrays(reps, candidates, _caches=_caches, sh=sh)
+        paired = est.join(shared, ["doc_id_1", "doc_id_2"]).select(
+            "matches",
+            F.coalesce(F.col("shared"), F.lit(0)).alias("shared"),
+            (F.col("n1") + F.col("n2") - F.coalesce(F.col("shared"), F.lit(0))).alias("u"),
+        )
+        errs = paired.select(
+            F.expr(
+                f"(1000000 * abs({_MINHASH_K}*shared - matches*u)) div ({_MINHASH_K}*u)"
+            ).alias("err_ppm")
+        )
+        return errs.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+            F.max("err_ppm").cast("bigint").alias("max_err_ppm"),
+            F.sum("err_ppm").cast("bigint").alias("sum_err_ppm"),
+            F.round(
+                F.sum("err_ppm").cast("double")
+                / (F.lit(1000000.0) * F.count(F.lit(1)).cast("double")),
+                6,
+            ).alias("mean_abs_err"),
+        )
+
+    return _banded_pairs(minhash_band_table(sigs), verify=estimate, _caches=_caches)
 
 
 _SQL_SIG_MATCHES = " + ".join(
@@ -1231,81 +1276,26 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    cap: int = _LSH_BUCKET_CAP,
-    _caches: list | None = None,
-    _sorted: bool = True,
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame, _caches: list | None = None, _sorted: bool = True) -> DataFrame:
     """The full SimHash near-dup pipeline over an arbitrary documents frame
     (columns: doc_id, lang, text). See :func:`dedup_simhash`. ``_caches``
-    collects the internal cached frames for callers that run the pipeline
-    repeatedly — same contract as :func:`minhash_lsh_pairs`."""
+    collects the internal cached frames — same contract as
+    :func:`minhash_lsh_pairs`."""
     mem = token_dedup_members(docs).cache()
-    members = mem.select("doc_id", "rep_id")
     reps = mem.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id", "lang", "text")
-    # three consumers (band table + both confirm sides) sit in separate
-    # subtrees with no shared exchange below them, so a lazy .cache()
-    # lets their stages race and each re-runs the 48-bit vote projection
-    # (the pipeline's CPU peak); the EAGER checkpoint bounds it to one
-    # pass and sequentially materializes the mem cache it reads (r18 —
-    # the phash discipline)
-    sigs = simhash_signatures(reps, spread=False, prefiltered=True).localCheckpoint(
-        eager=True
-    )
+    # EAGER checkpoint: the 48-bit vote projection (the pipeline's CPU
+    # peak) runs once in its own job and materializes the mem cache first;
+    # a lazy .cache() lets concurrent consumer stages each recompute it
+    sigs = simhash_signatures(reps, spread=False, prefiltered=True).localCheckpoint(eager=True)
     if _caches is not None:
         _caches.extend([mem, sigs])
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.expr(
-                f"shiftright(simhash, {band * _SIMHASH_BAND_BITS})"
-                f" & {(1 << _SIMHASH_BAND_BITS) - 1}"
-            )
-            .cast("string")
-            .alias("bucket"),
-        )
-        for band in range(_SIMHASH_BITS // _SIMHASH_BAND_BITS)
-    ]
-    # the signature rides THROUGH the band explode and the cap window
-    # (+8 bytes per band row), so the Hamming confirm folds INTO the band
-    # self-join (r19): 6-bit buckets are coarse — at sf0.1 the raw band
-    # join emits ~1M candidate rows, and the old shape shuffled ALL of
-    # them through a DISTINCT and then joined signatures back twice.
-    # Confirm-in-join flips the order: the per-pair bit_count filter runs
-    # where the pair is born, and the distinct dedupes SURVIVORS only
-    # (band-duplicate survivors ≤ 8× a small set). Same output set by
-    # construction — distinct commutes with a deterministic per-pair
-    # filter; hamming is functional on the pair.
-    bands = sigs.select(
-        "doc_id", "simhash", F.explode(F.array(*band_structs)).alias("bb")
-    ).select(
-        "doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    capped = _cap_buckets(bands, cap)
-    a = capped.alias("a")
-    b = capped.alias("b")
-    ham = F.bit_count(F.expr("a.simhash ^ b.simhash"))
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (ham <= _SIMHASH_HAMMING_MAX),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-            ham.cast("bigint").alias("hamming"),
-        )
-        .distinct()
-    )
-    out = _expand_member_pairs(
-        rep_pairs,
-        members,
-        intra_cols=[F.lit(0).cast("bigint").alias("hamming")],
-        carry=["hamming"],
+    out = _hamming_pairs(
+        sigs,
+        mem.select("doc_id", "rep_id"),
+        "simhash",
+        _SIMHASH_BITS // _SIMHASH_BAND_BITS,
+        _SIMHASH_BAND_BITS,
+        _SIMHASH_HAMMING_MAX,
     )
     return out.orderBy("doc_id_1", "doc_id_2") if _sorted else out
 

@@ -39,6 +39,8 @@ from pyspark.sql import types as T
 
 from ..registry import query
 from ..sources import tpch
+from .dedup import _LSH_BUCKET_CAP as _PHASH_CAP  # one tuning knob for every banding cap
+from .dedup import _hamming_pairs
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -753,8 +755,8 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Image near-duplicate detection (perceptual hash) ----------------------
 #
-# dHash over decoded pixels, then Hamming-band blocking exactly like the
-# text SimHash pipeline (operators/dedup.py): 56-bit hash (signed-bigint
+# dHash over decoded pixels, then the banded Hamming skeleton the text
+# SimHash pipeline runs (dedup._hamming_pairs): 56-bit hash (signed-bigint
 # safe, like SimHash's 48), 8 bands x 7 bits, so any pair within Hamming <= 7
 # must agree on >= 1 band (pigeonhole) — blocking recall covers the whole
 # confirm range. Reference analog: the reference has no image surface at
@@ -838,30 +840,21 @@ def _hamming_band_pairs(
     n_bands: int,
     band_bits: int,
     hamming_max: int,
-    cap: int | None = None,
     _caches: list | None = None,
     _sorted: bool = True,
 ) -> DataFrame:
     """Near-duplicate (media_id_1, media_id_2, hamming) pairs from a
-    (media_id, <sig_col>) integer-signature frame — the one Hamming-band
-    skeleton every perceptual-hash modality shares (image dHash, audio
-    envelope hash; same shape as the SimHash text pipeline in dedup.py):
-    exact-dup collapse on the hash (partial-agg groupBy over narrow rows +
-    rejoin — never a Window over the content key), band blocking over
-    DISTINCT hashes only, the deterministic bucket cap (audit with
-    dedup.lsh_bucket_overflow), bit_count(XOR) <= hamming_max confirm,
-    then linear expansion back to all member pairs (intra-group Hamming is
-    exactly 0)."""
-    from .dedup import _LSH_BUCKET_CAP, _cap_buckets, _expand_member_pairs
-
-    if cap is None:
-        cap = _LSH_BUCKET_CAP
-    # the signature frame feeds FOUR consumers (the rep_min collapse, the
-    # members rejoin, and both sides of the Hamming confirm) and rep_min
-    # feeds three more (members, bands, confirm) — uncached, every branch
-    # re-runs the upstream Python-side decode+hash pass: the r18 phash
-    # before-plan carried 12 separate MapInPandas nodes, i.e. 12 full
-    # codec round trips over the corpus for one query. A plain .cache()
+    (media_id, <sig_col>) integer-signature frame — every perceptual-hash
+    modality (image dHash, audio envelope hash, video frame hashes) runs
+    this: exact-dup collapse on the hash (partial-agg groupBy over narrow
+    rows + rejoin — never a Window over the content key), then the banded
+    Hamming skeleton (:func:`dedup._hamming_pairs`) over DISTINCT hashes
+    only, renamed to media ids."""
+    # the signature frame feeds several consumers (the rep_min collapse,
+    # the members rejoin, the bands) — uncached, every branch re-runs the
+    # upstream Python-side decode+hash pass: the r18 phash before-plan
+    # carried 12 separate MapInPandas nodes, i.e. 12 full codec round
+    # trips over the corpus for one query. A plain .cache()
     # is NOT enough: the consumers' stages launch concurrently inside one
     # job and each computes the still-unmaterialized cache independently
     # (profiled r18: six 57 KiB-input Python stages despite the cache).
@@ -880,54 +873,7 @@ def _hamming_band_pairs(
         F.col("media_id").alias("doc_id"), F.col("rep_id")
     )
     reps = rep_min.select(F.col("rep_id").alias("doc_id"), sig_col)
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.expr(
-                f"shiftright({sig_col}, {band * band_bits})"
-                f" & {(1 << band_bits) - 1}"
-            )
-            .cast("string")
-            .alias("bucket"),
-        )
-        for band in range(n_bands)
-    ]
-    # the signature rides through the band explode and the cap window so
-    # the Hamming confirm folds INTO the band self-join (r19, the
-    # dedup.simhash_pairs rework): the per-pair bit_count filter runs
-    # where the pair is born, and the distinct dedupes survivors only —
-    # no candidate-wide distinct exchange, no signature re-joins. Same
-    # output set: distinct commutes with a deterministic per-pair filter.
-    bands = reps.select(
-        "doc_id", sig_col, F.explode(F.array(*band_structs)).alias("bb")
-    ).select(
-        "doc_id", sig_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    capped = _cap_buckets(bands, cap)
-    a = capped.alias("a")
-    b = capped.alias("b")
-    ham = F.bit_count(F.expr(f"a.{sig_col} ^ b.{sig_col}"))
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (ham <= hamming_max),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-            ham.cast("bigint").alias("hamming"),
-        )
-        .distinct()
-    )
-    out = _expand_member_pairs(
-        rep_pairs,
-        members,
-        intra_cols=[F.lit(0).cast("bigint").alias("hamming")],
-        carry=["hamming"],
-    ).select(
+    out = _hamming_pairs(reps, members, sig_col, n_bands, band_bits, hamming_max).select(
         F.col("doc_id_1").alias("media_id_1"),
         F.col("doc_id_2").alias("media_id_2"),
         "hamming",
@@ -937,7 +883,6 @@ def _hamming_band_pairs(
 
 def phash_pairs(
     sigs: DataFrame,
-    cap: int | None = None,
     _caches: list | None = None,
     _sorted: bool = True,
 ) -> DataFrame:
@@ -950,7 +895,6 @@ def phash_pairs(
         _PHASH_N_BANDS,
         _PHASH_BAND_BITS,
         _PHASH_HAMMING_MAX,
-        cap,
         _caches=_caches,
         _sorted=_sorted,
     )
@@ -965,8 +909,6 @@ def _sql_phash_gray(x: str, y: str) -> str:
     b = f"(((({x})+1)*(({y})+1)*(s+1)*40503) % 256)"
     return f"(({r}*299 + {g}*587 + {b}*114)//1000)"
 
-
-from .dedup import _LSH_BUCKET_CAP as _PHASH_CAP  # one tuning knob for every banding cap
 
 _SQL_PHASH_BANDS = "\n  UNION ALL\n".join(
     f"  SELECT media_id, {band} AS band,"
@@ -1135,7 +1077,6 @@ def afp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def afp_pairs(
     sigs: DataFrame,
-    cap: int | None = None,
     _caches: list | None = None,
     _sorted: bool = True,
 ) -> DataFrame:
@@ -1147,7 +1088,6 @@ def afp_pairs(
         _AFP_N_BANDS,
         _AFP_BAND_BITS,
         _AFP_HAMMING_MAX,
-        cap,
         _caches=_caches,
         _sorted=_sorted,
     )
@@ -1286,7 +1226,6 @@ def video_frame_signatures(media: DataFrame, n_frames: int = _VFP_FRAMES) -> Dat
 def video_phash_pairs(
     sigs: DataFrame,
     match_min: int = _VFP_MATCH_MIN,
-    cap: int | None = None,
     _caches: list | None = None,
 ) -> DataFrame:
     """(media_id_1, media_id_2, n_frames_matched, avg_hamming) video
@@ -1303,7 +1242,6 @@ def video_phash_pairs(
         _PHASH_N_BANDS,
         _PHASH_BAND_BITS,
         _PHASH_HAMMING_MAX,
-        cap,
         _caches=_caches,
         _sorted=False,  # rolled up by video below; the pair sort would be dropped anyway
     )

@@ -112,159 +112,12 @@ def all_queries() -> dict[str, RegisteredQuery]:
     # Ordering contract (the driver caps its correctness file at 50 entries
     # in registration order): non-deferred oracle-backed queries first —
     # exactly 50 keys, machine-checked by tests/test_registry_contract.py
-    # (a rotation MUST defer one key per key it promotes; r10 went 9-for-8
-    # and silently ejected warehouse_incremental_rollup by registration-
-    # order luck — VERDICT r10 defect #1). Rotation history: r7 promoted
-    # the six r6 flagships; r9 promoted the ten round-7 flagships and
-    # deferred ten redundant olap/event keys; r10 promoted nine r9-
-    # generation flagships (ann_pq_topk, text_nb_langid,
-    # train_contrastive_triplets, mix_temperature_lang,
-    # text_unigram_logprob, text_chunk_sliding, dedup_audio_fingerprint,
-    # dedup_cross_source_matrix, quality_length_decile) deferring eight;
-    # r11 restored the invariant (incremental rollup now defer=True) and
-    # promoted retrieval_rrf_hybrid, corpus_profile_by_lang,
-    # training_epoch_shuffle, eval_stratified_sample, text_ngram_novelty,
-    # dedup_source_fingerprints — sf0.01-parity-verified before the flip —
-    # while deferring six keys each covered by a same-family sibling that
-    # stays (pack_token_chunks, mix_lang_resample, ann_ivf_topk,
-    # dedup_simhash, etl_snapshot_diff, split_leakage_free); later in r11
-    # the two new flagships dedup_cdc_chunks and text_lr_langid_en were
-    # promoted (both sf0.01-parity-verified pre-flip) in place of
-    # dedup_cross_source_matrix (covered by dedup_source_fingerprints,
-    # which stays) and dedup_audio_fingerprint (covered by the
-    # dedup_image_phash banded-Hamming sibling). r12 rotated 10-for-10:
-    # promoted the remaining never-driver-proofed r11 flagships
-    # (warehouse_column_stats, eval_bootstrap_mean_chars,
-    # corpus_jsd_sources, dedup_cdc_strip, graph_pagerank_trade,
-    # cluster_kmeans_fixed, text_pmi_cooccur, quality_perplexity_buckets,
-    # train_triplets_rescored, retrieval_bm25_indexed — all ten
-    # sf0.01-parity-verified pre-flip, ~62 s total gate cost) and
-    # deferred ten long-stable keys (8-11 green driver rounds each)
-    # whose operator coverage is duplicated by rows that stay:
-    # events_sessionize + stream_events_hourly (↔ stream_purchase_
-    # attribution windows), multimodal_features (↔ multimodal pytest
-    # suite + dedup_image_phash), temporal_asof_event_order (↔
-    # temporal pytests), text_pii_scrub + text_quality_gopher (↔
-    # text_decontaminate + quality_perplexity_buckets filters),
-    # etl_scalar_suite + etl_filter_suite (↔ etl_join_suite +
-    # etl_window_keys), security_masked_customer (↔ security_rls_orders),
-    # olap_rollup_region_nation (↔ q11 part-to-whole + q05 grains).
-    # Later in r12 a second 8-for-8 swap promoted the last
-    # never-driver-proofed r11 keys (curation_dsir_select,
-    # events_value_histogram, events_zscore_outliers, mix_epoch_upsample,
-    # text_bigram_logprob, text_bpe_fixed_merges, text_lang_confusion,
-    # train_next_event_examples — all sf0.01-parity-verified pre-flip,
-    # ~17 s total gate cost), deferring eight more keys covered by
-    # siblings that stay (ann_knn_join ↔ the deferred-but-locally-green
-    # pq/sq/ivf family + ann brute; dedup_components + dedup_span_blocks
-    # ↔ minhash/cdc actives; pack_length_batches ↔ pack/mix actives;
-    # text_bm25_topk ↔ retrieval_bm25_indexed + rrf; dedup_image_phash ↔
-    # multimodal pytests (stays a bench headliner); curation_report ↔
-    # curation_drop_reasons, which replays the same stage chain;
-    # etl_join_suite ↔ etl_window_keys).
-    # r15 rotated 12-for-12 (VERDICT r14 ask #1): promoted the twelve
-    # r14-generation keys (events_asof_last_click, events_asof_next_click,
-    # events_error_window_join, events_ewma_hourly, events_winsorized_stats,
-    # text_kn_bigram_logprob, eval_lift_deciles, eval_calibration_bins,
-    # eval_calibration_ece, eval_brier_score, olap_grouping_sets_segment_year,
-    # dedup_methods_ari — all twelve sf0.01-parity-verified pre-flip, then
-    # the full 50-key window re-simulated 50/50 green post-flip), deferring
-    # twelve long-stable sibling-covered keys: events_locf_hourly /
-    # events_twap_daily / events_autocorr_24h (↔ promoted hourly-window
-    # events family), events_peak_rate (↔ events_funnel_latency stays),
-    # eval_roc_auc (↔ eval_roc_auc_by_source stays, a strict
-    # generalization), eval_pr_curve (↔ promoted eval_lift_deciles
-    # threshold-sweep), text_pmi_cooccur (↔ promoted text_kn_bigram_logprob
-    # shares the bigram-count machinery), cluster_silhouette_by_label
-    # (↔ dedup_component_cohesion stays), olap_benford_totalprice
-    # (↔ olap_gini_revenue_by_nation stays), vocab_top_terms_by_source
-    # (↔ corpus_vocab_overlap + corpus_mass_concentration stay),
-    # embed_correlation_matrix (↔ embed_gram_matrix stays — same exact-
-    # bigint statistics pass), retrieval_phrase_snippets
-    # (↔ retrieval_phrase_match stays — same phrase-index machinery).
-    # r16 rotated 11-for-11 (VERDICT r15 ask #1): promoted the eleven
-    # r15-generation keys (ann_opq_recall, er_fuzzy_customer_pairs,
-    # er_entity_clusters, graph_triangle_count, curation_pareto_front,
-    # eval_cohens_kappa, eval_conformal_coverage, eval_information_value,
-    # events_kaplan_meier, eval_cuped_ab, retrieval_ndcg_bm25 — all eleven
-    # sf0.01-parity-verified pre-flip in one batch, 53 s; the full 50-key
-    # window re-simulated post-flip), deferring eleven long-stable
-    # sibling-covered keys: ann_ivf_recall (↔ promoted ann_opq_recall —
-    # the same recall-audit join, OPQ strictly extends IVF),
-    # graph_pagerank_trade (↔ promoted graph_triangle_count keeps the
-    # graph family; 4 green driver rounds), retrieval_ranker_agreement
-    # (↔ promoted retrieval_ndcg_bm25 — same ranking-eval surface),
-    # events_mad_outliers (↔ events_winsorized_stats stays — robust-stats
-    # family), dedup_savings_report (↔ dedup_minhash_error +
-    # dedup_methods_ari stay), olap_basket_affinity (↔
-    # corpus_lang_source_assoc stays — same association/lift machinery),
-    # mix_epoch_upsample (↔ curation_dsir_select stays — weighted-sampling
-    # family), train_next_event_examples (↔ the promoted-and-staying
-    # event-sequence keys events_asof_last_click/next_click),
-    # text_lang_confusion (↔ corpus_lang_source_assoc stays — language
-    # crosstab), quality_perplexity_buckets (↔ text_kn_bigram_logprob
-    # stays — same LM-scoring machinery), eval_hist_quantiles_by_source
-    # (↔ events_winsorized_stats stays — percentile machinery). No
-    # r15-window-debut key was deferred (the calibration family keeps
-    # bins, ece AND brier).
-    # r17 rotated 11-for-11 (VERDICT r16 ask #1): promoted the eleven
-    # r16-generation keys (eval_mann_whitney_ab, eval_ks_two_sample,
-    # eval_bh_fdr_nations, eval_cmh_stratified_ab, eval_delta_ratio_ab,
-    # events_logrank_ab, events_multitouch_attribution, er_fuzzy_pairs_t2,
-    # graph_kcore_copurchase, events_markov_transitions, eval_qte_ab — all
-    # eleven sf0.01-parity-verified pre-flip, the three reworked rank keys
-    # additionally bit-identical-verified against their r16 outputs; the
-    # full 50-key window re-simulated post-flip), deferring eleven
-    # long-stable sibling-covered keys: events_funnel_latency (↔ promoted
-    # events_multitouch_attribution + events_markov_transitions keep the
-    # event-path family), events_ewma_hourly (↔ events_winsorized_stats +
-    # events_error_window_join stay — hourly event-window family),
-    # eval_calibration_bins + eval_brier_score (↔ eval_calibration_ece
-    # stays — same bin table / probability-scoring surface),
-    # eval_lift_deciles (↔ eval_roc_auc_by_source stays — score-ranking
-    # sweep family), dedup_methods_ari (↔ dedup_minhash_error +
-    # dedup_component_cohesion stay — dedup-method-comparison family),
-    # corpus_mass_concentration (↔ corpus_vocab_overlap stays — same
-    # vocab-count machinery), olap_grouping_sets_segment_year (↔
-    # olap_gini_revenue_by_nation + q11 part-to-whole + q05 grains stay),
-    # split_leakage_audit (↔ the md5-parity split machinery is exercised
-    # by all five promoted A/B keys; deferred sibling split_leakage_free
-    # stays suite-verified), ann_rp_topk (↔ ann_opq_recall stays — the
-    # strictest ANN recall audit), retrieval_phrase_match (↔ promoted
-    # retrieval_ndcg_bm25... stays from r16; phrase-index machinery keeps
-    # its pytest suite + deferred sibling retrieval_phrase_snippets).
-    # r18 rotated 8-for-8 (VERDICT r17 ask #1): promoted the eight
-    # r17-generation keys (eval_msprt_ab, events_cusum_hourly,
-    # eval_srm_check, eval_power_mde, events_weekly_seasonality,
-    # graph_degree_stats, er_blocking_quality, olap_abc_parts — all eight
-    # sf0.01-parity-verified pre-flip in one batch; the full 50-key window
-    # re-simulated post-flip), deferring eight long-stable sibling-covered
-    # keys: events_asof_next_click (↔ events_asof_last_click stays — same
-    # as-of window machinery, opposite direction), events_kaplan_meier
-    # (↔ events_logrank_ab stays — the log-rank test is built on the same
-    # per-time risk-set table), graph_triangle_count (↔ promoted
-    # graph_degree_stats + graph_kcore_copurchase stay — graph family),
-    # eval_conformal_coverage (↔ eval_calibration_ece stays —
-    # probability-coverage family; conformal also keeps its span-bound
-    # pytest), eval_cohens_kappa (↔ eval_cmh_stratified_ab stays — same
-    # contingency-table machinery), curation_pareto_front (↔
-    # curation_dsir_select stays — curation family; skyline keeps its
-    # dominance pytests), embed_gram_matrix (↔ ann_opq_recall stays — the
-    # strictest consumer of the embedding statistics pass),
-    # dedup_winnow_index_hits (↔ dedup_minhash_error +
-    # dedup_component_cohesion stay — fingerprint-dedup family; winnowing
-    # keeps its pytest suite + deferred oracle-parity siblings). The same
-    # commit swapped the bench headliner slot dedup_winnow_index_hits →
-    # olap_abc_parts (VERDICT r17 ask #5) so the second _value_cumsums
-    # consumer carries a per-round perf signal.
-    # Deferred queries keep their oracle and stay cross-engine-verified in
-    # tests/test_oracle_parity.py. After the
-    # deferred group come the rows-only-by-design entries
-    # (q01_database_exploration, olap_approx_summary,
-    # multimodal_decode_real, dedup_video_frames, text_bpe_tokenize),
-    # pytest-verified. Sort is
-    # stable, so in-module
-    # registration order is preserved within each group. See COVERAGE.md.
+    # (a rotation MUST defer one key per key it promotes). Deferred queries
+    # keep their oracle and stay cross-engine-verified in
+    # tests/test_oracle_parity.py. After the deferred group come the
+    # rows-only-by-design entries, pytest-verified. Sort is stable, so
+    # in-module registration order is preserved within each group. See
+    # COVERAGE.md.
     return dict(
         sorted(_REGISTRY.items(), key=lambda kv: (kv[1].oracle is None, kv[1].defer))
     )

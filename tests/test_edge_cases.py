@@ -4,6 +4,11 @@ both routine at 100 TB — neither may throw or mis-pair."""
 
 from __future__ import annotations
 
+import random
+from itertools import combinations
+
+import pytest
+
 from sql_data_warehouse_and_analytics_project_spark.operators import dedup
 
 _SCHEMA = "doc_id long, lang string, text string"
@@ -54,20 +59,75 @@ def test_ivf_training_handles_empty_embeddings(spark, tmp_path):
     assert sim.ivf_search(spark, path, [0.0] * 64, k=5, n_probes=3).count() == 0
 
 
-def test_phash_pipeline_handles_empty_and_uniform_signatures(spark):
-    """phash_pairs edge cases: an empty signature frame yields no pairs; a
-    frame where every image shares one phash collapses to a single rep and
-    expands to exactly C(n,2) hamming-0 member pairs (no band self-join
-    blowup — bands see ONE distinct hash)."""
+def _hamming_reference(rows, n_bands, band_bits, hamming_max, cap):
+    """Pure-Python band → cap → confirm → expand over (media_id, hash) rows:
+    exact-dup collapse to the min media_id per hash, the ``cap`` smallest
+    reps per (band, bucket), bit_count(XOR) confirm, then every member pair
+    of every confirmed rep pair plus every intra-group pair at Hamming 0."""
+    rep = {}
+    for mid, h in rows:
+        rep[h] = min(rep.get(h, mid), mid)
+    buckets = {}
+    for h, r in rep.items():
+        for band in range(n_bands):
+            key = (band, (h >> (band * band_bits)) & ((1 << band_bits) - 1))
+            buckets.setdefault(key, []).append((r, h))
+    confirmed = set()
+    for kept in buckets.values():
+        for (r1, h1), (r2, h2) in combinations(sorted(kept)[:cap], 2):
+            d = bin(h1 ^ h2).count("1")
+            if d <= hamming_max:
+                confirmed.add((r1, r2, d))
+    group = {}
+    for mid, h in rows:
+        group.setdefault(rep[h], []).append(mid)
+    out = [(min(m1, m2), max(m1, m2), d) for r1, r2, d in confirmed
+           for m1 in group[r1] for m2 in group[r2]]
+    out += [(m1, m2, 0) for ms in group.values() for m1, m2 in combinations(sorted(ms), 2)]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("caller", ["phash", "afp"])
+def test_hamming_pipelines_degenerate_inputs(spark, caller):
+    """The banded Hamming skeleton through each perceptual-hash caller:
+    an empty signature frame yields no pairs; a frame where every item
+    shares one hash collapses to ONE rep and expands to exactly C(n,2)
+    Hamming-0 member pairs; and a band bucket holding more distinct hashes
+    than the cap agrees with the pure-Python band → cap → confirm → expand
+    reference — the cap trims recall exactly where the reference says."""
     from sql_data_warehouse_and_analytics_project_spark.operators import multimodal as mm
 
-    empty = spark.createDataFrame([], "media_id bigint, phash bigint")
-    assert mm.phash_pairs(empty).count() == 0
+    pairs_fn, n_bands, band_bits, hamming_max = {
+        "phash": (mm.phash_pairs, mm._PHASH_N_BANDS, mm._PHASH_BAND_BITS, mm._PHASH_HAMMING_MAX),
+        "afp": (mm.afp_pairs, mm._AFP_N_BANDS, mm._AFP_BAND_BITS, mm._AFP_HAMMING_MAX),
+    }[caller]
+    schema = f"media_id bigint, {caller} bigint"
 
-    uniform = spark.createDataFrame([(i, 12345) for i in range(10)], "media_id bigint, phash bigint")
-    rows = mm.phash_pairs(uniform).collect()
-    assert len(rows) == 45
-    assert all(r.hamming == 0 for r in rows)
+    def run(rows):
+        out = pairs_fn(spark.createDataFrame(rows, schema)).collect()
+        return [(r.media_id_1, r.media_id_2, r.hamming) for r in out]
+
+    assert run([]) == []
+    assert run([(i, 12345) for i in range(10)]) == [
+        (i, j, 0) for i in range(10) for j in range(i + 1, 10)
+    ]
+
+    # 90 distinct hashes differ from one base only in bands 1 and 2, so
+    # every other band holds them all in ONE over-cap bucket and pairs
+    # straddle the confirm bound (up to 2*band_bits bits apart); 20 unrelated
+    # hashes, and 1..3 members per hash under shuffled media ids
+    rng = random.Random(7)
+    width = n_bands * band_bits
+    base = rng.getrandbits(width)
+    hashes = [base ^ (v << band_bits) for v in rng.sample(range(1 << (2 * band_bits)), 90)]
+    hashes += [rng.getrandbits(width) for _ in range(20)]
+    rows = [(h, n) for h in hashes for n in range(rng.randint(1, 3))]
+    ids = rng.sample(range(10_000), len(rows))
+    rows = [(mid, h) for mid, (h, _) in zip(ids, rows)]
+
+    want = _hamming_reference(rows, n_bands, band_bits, hamming_max, dedup._LSH_BUCKET_CAP)
+    assert want != _hamming_reference(rows, n_bands, band_bits, hamming_max, len(rows))
+    assert sorted(run(rows)) == want
 
 
 def test_r11_operators_handle_degenerate_inputs(spark):

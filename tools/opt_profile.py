@@ -1,8 +1,9 @@
 """Per-stage profiler for one registry query (guide §1/§7 without the UI).
 
-Runs the query warm, then once timed with the Spark event log enabled, and
-prints each stage of the timed run: wall span, total executor run time,
-task count, shuffle read/write bytes, input bytes, and the stage callsite.
+Runs the query warm on the session get_spark() builds, then once timed with
+the Spark event log enabled, and prints each stage of the timed run: wall
+span, total executor run time, task count, shuffle read/write bytes, input
+bytes, and the stage callsite.
 
 Usage: python tools/opt_profile.py <query_name> [more names...]
 SF dir from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
@@ -13,12 +14,14 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shlex
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sql_data_warehouse_and_analytics_project_spark.registry import all_queries
+from sql_data_warehouse_and_analytics_project_spark.session import get_spark
 
 
 def main() -> None:
@@ -30,30 +33,19 @@ def main() -> None:
     for f in glob.glob(evdir + "/*"):
         shutil.rmtree(f) if os.path.isdir(f) else os.remove(f)
 
-    from pyspark.sql import SparkSession
-
-    from sql_data_warehouse_and_analytics_project_spark.session import (
-        default_parallelism,
+    # the event log must be on before the JVM starts: pass it through
+    # PYSPARK_SUBMIT_ARGS (as perfbench/run.py does) so the session is the
+    # one get_spark() builds, with every plan-affecting setting of bench.py
+    # and the benchmark intact
+    submit = [
+        "--conf", "spark.eventLog.enabled=true",
+        "--conf", f"spark.eventLog.dir={evdir}",
+        "--conf", "spark.eventLog.compress=false",
+    ]
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        shlex.join(submit) + " " + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
     )
-
-    cpus = default_parallelism()
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("opt_profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.codegen.cache.maxEntries", "2000")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("opt_profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     from pyspark.sql import functions as F
