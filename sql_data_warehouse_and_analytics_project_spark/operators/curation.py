@@ -26,6 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import released
 from ..sources import tpch
 from . import dedup
 from .text import (
@@ -36,10 +37,38 @@ from .text import (
 )
 
 
-# Near-dedup iterates to a fixpoint (see curate_documents stage 4); the cap
+# Near-dedup iterates to a fixpoint (see _near_dedup_fixpoint); the cap
 # bounds adversarial corpora where the LSH bucket cap keeps revealing new
 # pairs each pass.
 _MAX_NEAR_DEDUP_PASSES = 5
+
+
+def _near_dedup_fixpoint(survivors: DataFrame) -> tuple[DataFrame, int]:
+    """(checkpointed survivors, passes run) of near dedup to a FIXPOINT:
+    drop the higher id of every MinHash/LSH pair, then re-run until LSH
+    finds nothing. One pass is not always enough — the deterministic
+    band-bucket cap trims buckets to their smallest doc_ids, so on
+    cap-overflowing corpora a second pass can surface pairs among docs the
+    first pass never compared. Each pass releases the LSH pipeline's caches
+    once its survivor set is checkpointed; the pass cap bounds the cost on
+    adversarial corpora (overflow is audited, not silently retried
+    forever)."""
+    for n_passes in range(1, _MAX_NEAR_DEDUP_PASSES + 1):
+        with released():
+            pairs = dedup.minhash_lsh_pairs(survivors.select("doc_id", "lang", "text"))
+            # checkpoint losers WHILE the LSH caches are warm: counting after
+            # the release would re-run the whole pipeline uncached
+            losers = (
+                pairs.select(F.col("doc_id_2").alias("doc_id"))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
+            if losers.count() == 0:
+                break
+            survivors = survivors.join(losers, "doc_id", "left_anti").localCheckpoint(
+                eager=True
+            )
+    return survivors, n_passes
 
 
 # one constant drives BOTH the Python default and the oracle SQL's split
@@ -118,37 +147,9 @@ def curate_documents(
     )
     survivors, n_exact = _stage(survivors.join(keeper, "doc_id", "left_semi"))
 
-    # 4. near dedup to a FIXPOINT: drop the higher id of every pair, then
-    # re-run until LSH finds nothing. One pass is not always enough — the
-    # deterministic band-bucket cap trims buckets to their smallest
-    # doc_ids, so on cap-overflowing corpora a second pass can surface
-    # pairs among docs the first pass never compared. Each pass frees the
-    # LSH pipeline's internal caches (the _caches hook) once its survivor
-    # set is checkpointed; the pass cap bounds the cost on adversarial
-    # corpora (overflow is audited, not silently retried forever).
-    n_near = n_exact
-    n_near_passes = 0
-    for _ in range(_MAX_NEAR_DEDUP_PASSES):
-        caches: list[DataFrame] = []
-        pairs = dedup.minhash_lsh_pairs(
-            survivors.select("doc_id", "lang", "text"), _caches=caches
-        )
-        # checkpoint losers WHILE the LSH caches are warm: counting after
-        # the unpersist would re-run the whole pipeline uncached
-        losers = (
-            pairs.select(F.col("doc_id_2").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_losers = losers.count()
-        n_near_passes += 1
-        if n_losers == 0:
-            for c in caches:
-                c.unpersist()
-            break
-        survivors, n_near = _stage(survivors.join(losers, "doc_id", "left_anti"))
-        for c in caches:
-            c.unpersist()
+    # 4. near dedup to a fixpoint
+    survivors, n_near_passes = _near_dedup_fixpoint(survivors)
+    n_near = survivors.count()
 
     # 5. deterministic split (train/valid). The bucket hash is md5-derived
     # (same cross-engine base hash as the LSH signatures) rather than
@@ -347,25 +348,7 @@ def curation_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     s3 = _ckpt(s2.join(keeper, "doc_id", "left_semi"))
-    survivors = s3
-    for _ in range(_MAX_NEAR_DEDUP_PASSES):
-        caches: list[DataFrame] = []
-        pairs = dedup.minhash_lsh_pairs(
-            survivors.select("doc_id", "lang", "text"), _caches=caches
-        )
-        losers = (
-            pairs.select(F.col("doc_id_2").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_losers = losers.count()
-        if n_losers == 0:
-            for c in caches:
-                c.unpersist()
-            break
-        survivors = _ckpt(survivors.join(losers, "doc_id", "left_anti"))
-        for c in caches:
-            c.unpersist()
+    survivors, _ = _near_dedup_fixpoint(s3)
 
     def _flag(ids: DataFrame, name: str):
         return ids.select("doc_id").withColumn(name, F.lit(True))

@@ -29,6 +29,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import cached, materialized, released
 from ..registry import query
 from ..sources import tpch
 from .text import SQL_NORM, SQL_TOKENS, normalize_content, tokens_col
@@ -206,7 +207,6 @@ def ngram_jaccard_candidates(
     docs: DataFrame,
     df_cut: int = _JACCARD_DF_CUT,
     shingles: DataFrame | None = None,
-    _caches: list | None = None,
 ) -> DataFrame:
     """(doc_id_1, doc_id_2, shared) candidate pairs with EXACT shared-shingle
     counts, generated from the df-cut self-join (see :data:`_JACCARD_DF_CUT`).
@@ -227,15 +227,11 @@ def ngram_jaccard_candidates(
     shingle frame (e.g. :func:`ngram_jaccard_pairs`, which also needs
     per-doc sizes) share it instead of re-exploding the corpus.
 
-    Cache contract (same as :func:`minhash_lsh_pairs`): when ``shingles``
-    is None this function caches the shingle frame itself; that cache lives
-    for the session unless the caller passes ``_caches=[]`` and unpersists
-    the collected frames after materializing the result."""
+    When ``shingles`` is None the shingle frame is cached here, released
+    by the caller's ``materialize.released`` scope."""
     sh = shingles
     if sh is None:
-        sh = _shingle_rows(docs).cache()
-        if _caches is not None:
-            _caches.append(sh)
+        sh = cached(_shingle_rows(docs))
     common = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -275,29 +271,6 @@ def ngram_jaccard_candidates(
     )
 
 
-def _materialized(df: DataFrame, caches: list, order: list[str] | None = None) -> DataFrame:
-    """Registry-call cache discipline (ADVICE r6 / VERDICT r6 ask #5): run
-    the pipeline NOW — eagerly localCheckpoint the small result frame —
-    then free every internal cache, so no cached frame outlives the query
-    call. The checkpoint holds only the result rows (near-dup pair sets,
-    tiny by LSH/cap construction) and its blocks are released by Spark's
-    ContextCleaner once the returned frame is dropped. Total work is
-    unchanged: the harness was about to materialize the frame anyway.
-
-    ``order`` re-applies the presentation sort AFTER the checkpoint: the
-    checkpointed frame should be the pipeline's UNSORTED output, because
-    eagerly executing a global orderBy pays a range-sampling job over the
-    pipeline plus the sort itself — cost that an aggregate-only consumer
-    (bench's count()) never pays on the lazy path, where Catalyst elides
-    the sort. Sorting the checkpointed rows is trivial at result size."""
-    out = df.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    if order:
-        out = out.orderBy(*order)
-    return out
-
-
 @query("dedup_ngram_jaccard", oracle=_JACCARD_SQL, defer=True)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by word-3-gram Jaccard ≥ 0.8.
@@ -309,12 +282,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`ngram_jaccard_candidates`). The testdata plants ~6 true near-dup
     pairs (Jaccard ≥ 0.95; next candidate is at 0.05), so 0.8 separates
     cleanly. The registry call materializes eagerly and releases the
-    internal shingle cache before returning (see :func:`_materialized`)."""
-    caches: list = []
-    return _materialized(
-        ngram_jaccard_pairs(_docs(spark, sf_dir), _caches=caches),
-        caches,
-        order=["doc_id_1", "doc_id_2"],
+    internal shingle cache before returning (see ``materialize.materialized``)."""
+    return materialized(
+        lambda: ngram_jaccard_pairs(_docs(spark, sf_dir)), order=["doc_id_1", "doc_id_2"]
     )
 
 
@@ -322,18 +292,14 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = _NEARDUP_THRESHOLD,
     df_cut: int = _JACCARD_DF_CUT,
-    _caches: list | None = None,
 ) -> DataFrame:
     """The full Jaccard near-dup pipeline over an arbitrary documents frame
     (columns: doc_id, lang, text). The exploded shingle frame is
     materialized ONCE (cached) and shared between candidate generation and
     the per-doc size aggregate — the corpus explodes a single time
-    (VERDICT r04 #2). ``_caches`` collects the cached frame for callers
-    that run the pipeline repeatedly — same contract as
-    :func:`minhash_lsh_pairs`."""
-    sh = _shingle_rows(docs).cache()
-    if _caches is not None:
-        _caches.append(sh)
+    (VERDICT r04 #2). The cache is released by the caller's
+    ``materialize.released`` scope."""
+    sh = cached(_shingle_rows(docs))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     pairs = ngram_jaccard_candidates(docs, df_cut=df_cut, shingles=sh)
     s1 = sizes.select(F.col("doc_id").alias("doc_id_1"), F.col("n").alias("n1"))
@@ -520,7 +486,6 @@ def _banded_pairs(
     confirm: Column | None = None,
     score: Sequence[Column] = (),
     verify: Callable[[DataFrame], DataFrame] | None = None,
-    _caches: list | None = None,
 ) -> DataFrame:
     """The banded-candidate skeleton: cap ``bands`` (see :func:`_cap_buckets`),
     self-join on ``(band, bucket, a.doc_id < b.doc_id)`` — AND ``confirm``
@@ -551,10 +516,7 @@ def _banded_pairs(
         F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2"), *score
     ).distinct()
     if verify is not None:
-        pairs = pairs.cache()
-        if _caches is not None:
-            _caches.append(pairs)
-        pairs = verify(pairs)
+        pairs = verify(cached(pairs))
     return pairs if members is None else _expand_member_pairs(pairs, members, intra)
 
 
@@ -769,12 +731,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     expand back to all member pairs. Oracle-checked end to end: every hash
     in the pipeline is md5-derived, so DuckDB replays signatures, banding,
     the bucket cap, and verification bit-for-bit. The registry call
-    materializes eagerly and releases the three internal caches before
-    returning (see :func:`_materialized`)."""
-    caches: list = []
-    return _materialized(
-        minhash_lsh_pairs(_docs(spark, sf_dir), _caches=caches, _sorted=False),
-        caches,
+    materializes eagerly and releases the internal caches before
+    returning (see ``materialize.materialized``)."""
+    return materialized(
+        lambda: minhash_lsh_pairs(_docs(spark, sf_dir), _sorted=False),
         order=["doc_id_1", "doc_id_2"],
     )
 
@@ -877,7 +837,6 @@ def _candidate_shared_counts(
 def _candidate_shared_arrays(
     reps: DataFrame,
     candidates: DataFrame,
-    _caches: list | None = None,
     sh: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id_1, doc_id_2, shared, n1, n2): EXACT distinct-shingle overlap
@@ -932,8 +891,6 @@ def _candidate_shared_arrays(
         # let those branches race and duplicate the signature pipeline)
         .localCheckpoint(eager=True)
     )
-    if _caches is not None:
-        _caches.append(arr)
     a1 = arr.select(
         F.col("doc_id").alias("doc_id_1"),
         F.col("_sh").alias("_sh1"),
@@ -957,7 +914,7 @@ def _candidate_shared_arrays(
     )
 
 
-def _rep_minhash_frames(reps: DataFrame, _caches: list | None) -> tuple[DataFrame, DataFrame]:
+def _rep_minhash_frames(reps: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(sh, sigs) for the MinHash candidate path both :func:`minhash_lsh_pairs`
     and :func:`minhash_estimator_error` run: ONE tokenize+shingle+hash
     checkpoint (:func:`_rep_shingle_sigs`) that the band table, the
@@ -970,37 +927,29 @@ def _rep_minhash_frames(reps: DataFrame, _caches: list | None) -> tuple[DataFram
     cache sequentially before the concurrent downstream branches read it."""
     sh = _rep_shingle_sigs(reps)
     sigs = sh.drop("_sh").localCheckpoint(eager=True)
-    if _caches is not None:
-        _caches.extend([sh, sigs])
     return sh, sigs
 
 
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = _NEARDUP_THRESHOLD,
-    _caches: list | None = None,
     _sorted: bool = True,
 ) -> DataFrame:
     """The full MinHash/LSH near-dup pipeline over an arbitrary documents
     frame (columns: doc_id, lang, text). See :func:`dedup_minhash_lsh`.
 
-    The pipeline caches its intermediates (members, candidate pairs,
-    candidate shingles), which live for the session by default; a caller
-    that materializes the result and moves on (e.g. the curation pipeline's
-    repeated passes) should pass ``_caches=[]`` and unpersist the collected
-    frames afterwards, or executor storage accumulates per call."""
-    mem = token_dedup_members(docs).cache()
-    if _caches is not None:
-        _caches.append(mem)
+    The cached intermediates (members, candidate pairs) are released by the
+    caller's ``materialize.released`` scope."""
+    mem = cached(token_dedup_members(docs))
     reps = mem.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id", "lang", "text")
-    sh, sigs = _rep_minhash_frames(reps, _caches)
+    sh, sigs = _rep_minhash_frames(reps)
 
     def jaccard(candidates: DataFrame) -> DataFrame:
         # exact Jaccard over per-doc shingle ARRAYS (see
         # _candidate_shared_arrays): no shingle-keyed shuffle, no
         # hot-shingle guard needed; output pinned bit-identical to the
         # exploded self-join in tests/test_hot_shingle_guard.py
-        shared = _candidate_shared_arrays(reps, candidates, _caches=_caches, sh=sh)
+        shared = _candidate_shared_arrays(reps, candidates, sh=sh)
         jac = F.col("shared").cast("double") / (F.col("n1") + F.col("n2") - F.col("shared"))
         return shared.select("doc_id_1", "doc_id_2", jac.alias("jaccard")).filter(
             F.col("jaccard") >= threshold
@@ -1011,7 +960,6 @@ def minhash_lsh_pairs(
         mem.select("doc_id", "rep_id"),
         intra=F.lit(1.0).alias("jaccard"),
         verify=jaccard,
-        _caches=_caches,
     )
     return out.orderBy("doc_id_1", "doc_id_2") if _sorted else out
 
@@ -1034,14 +982,14 @@ def minhash_lsh_pairs(
 # minhash_lsh_pairs).
 
 
-def minhash_estimator_error(docs: DataFrame, _caches: list | None = None) -> DataFrame:
+def minhash_estimator_error(docs: DataFrame) -> DataFrame:
     """One row (n_pairs, max_err_ppm, sum_err_ppm, mean_abs_err): the
     minhash Jaccard estimator's absolute error over the LSH candidate
     population of ``docs`` — the candidate path of :func:`minhash_lsh_pairs`
     with an estimate leg in place of its verify leg."""
     mem = token_dedup_members(docs)
     reps = mem.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id", "lang", "text")
-    sh, sigs = _rep_minhash_frames(reps, _caches)
+    sh, sigs = _rep_minhash_frames(reps)
 
     def estimate(candidates: DataFrame) -> DataFrame:
         sa, sb = sigs.alias("sa"), sigs.alias("sb")
@@ -1056,7 +1004,7 @@ def minhash_estimator_error(docs: DataFrame, _caches: list | None = None) -> Dat
         )
         # exact shared counts + sizes, same leg as the pipeline's verify;
         # every candidate pair gets exactly one row, shared may be 0
-        shared = _candidate_shared_arrays(reps, candidates, _caches=_caches, sh=sh)
+        shared = _candidate_shared_arrays(reps, candidates, sh=sh)
         paired = est.join(shared, ["doc_id_1", "doc_id_2"]).select(
             "matches",
             F.coalesce(F.col("shared"), F.lit(0)).alias("shared"),
@@ -1078,7 +1026,7 @@ def minhash_estimator_error(docs: DataFrame, _caches: list | None = None) -> Dat
             ).alias("mean_abs_err"),
         )
 
-    return _banded_pairs(minhash_band_table(sigs), verify=estimate, _caches=_caches)
+    return _banded_pairs(minhash_band_table(sigs), verify=estimate)
 
 
 _SQL_SIG_MATCHES = " + ".join(
@@ -1136,10 +1084,7 @@ def dedup_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash estimator-quality audit over the LSH candidate population —
     exact ppm error between signature-agreement Jaccard and exact shingle
     Jaccard, one summary row."""
-    caches: list = []
-    return _materialized(
-        minhash_estimator_error(_docs(spark, sf_dir), _caches=caches), caches
-    )
+    return materialized(lambda: minhash_estimator_error(_docs(spark, sf_dir)))
 
 
 # --- SimHash ---------------------------------------------------------------
@@ -1267,28 +1212,23 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     member pairs (intra-group Hamming is exactly 0). Oracle-checked end to
     end — DuckDB replays signatures, banding, cap, and confirm. The
     registry call materializes eagerly and releases the internal caches
-    before returning (see :func:`_materialized`)."""
-    caches: list = []
-    return _materialized(
-        simhash_pairs(_docs(spark, sf_dir), _caches=caches, _sorted=False),
-        caches,
+    before returning (see ``materialize.materialized``)."""
+    return materialized(
+        lambda: simhash_pairs(_docs(spark, sf_dir), _sorted=False),
         order=["doc_id_1", "doc_id_2"],
     )
 
 
-def simhash_pairs(docs: DataFrame, _caches: list | None = None, _sorted: bool = True) -> DataFrame:
+def simhash_pairs(docs: DataFrame, _sorted: bool = True) -> DataFrame:
     """The full SimHash near-dup pipeline over an arbitrary documents frame
-    (columns: doc_id, lang, text). See :func:`dedup_simhash`. ``_caches``
-    collects the internal cached frames — same contract as
-    :func:`minhash_lsh_pairs`."""
-    mem = token_dedup_members(docs).cache()
+    (columns: doc_id, lang, text). See :func:`dedup_simhash`. The members
+    cache is released by the caller's ``materialize.released`` scope."""
+    mem = cached(token_dedup_members(docs))
     reps = mem.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id", "lang", "text")
     # EAGER checkpoint: the 48-bit vote projection (the pipeline's CPU
     # peak) runs once in its own job and materializes the mem cache first;
     # a lazy .cache() lets concurrent consumer stages each recompute it
     sigs = simhash_signatures(reps, spread=False, prefiltered=True).localCheckpoint(eager=True)
-    if _caches is not None:
-        _caches.extend([mem, sigs])
     out = _hamming_pairs(
         sigs,
         mem.select("doc_id", "rep_id"),
@@ -1393,11 +1333,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id), and whether it is the component's canonical survivor — the
     decision surface a dedup pass actually consumes. Oracle: DuckDB
     recomputes the same pairs and closes them with a recursive CTE."""
-    caches: list = []
-    pairs = minhash_lsh_pairs(_docs(spark, sf_dir), _caches=caches)
-    out = connected_components(pairs)
-    for c in caches:
-        c.unpersist()
+    with released():
+        out = connected_components(minhash_lsh_pairs(_docs(spark, sf_dir)))
     return out
 
 
@@ -1419,13 +1356,11 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounds; every aggregate is component-keyed.
 
 
-def component_cohesion(pairs: DataFrame, _caches: list | None = None) -> DataFrame:
+def component_cohesion(pairs: DataFrame) -> DataFrame:
     """(component_id, n_nodes, n_edges, n_triangles, clustering) per
     near-dup component of the undirected edge list ``pairs``
     (doc_id_1 < doc_id_2)."""
-    edges = pairs.select("doc_id_1", "doc_id_2").distinct().cache()
-    if _caches is not None:
-        _caches.append(edges)
+    edges = cached(pairs.select("doc_id_1", "doc_id_2").distinct())
     comp = connected_components(edges).select("doc_id", "component_id")
     nodes = comp.groupBy("component_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
     e_lab = edges.join(
@@ -1538,10 +1473,9 @@ def dedup_component_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohesion audit of the near-dup components: per component, edge
     density, triangle count and clustering coefficient — the
     transitive-closure-overreach detector (chain vs clique)."""
-    caches: list = []
-    pairs = minhash_lsh_pairs(_docs(spark, sf_dir), _caches=caches, _sorted=False)
-    return _materialized(
-        component_cohesion(pairs, _caches=caches), caches, order=["component_id"]
+    return materialized(
+        lambda: component_cohesion(minhash_lsh_pairs(_docs(spark, sf_dir), _sorted=False)),
+        order=["component_id"],
     )
 
 
@@ -1604,11 +1538,11 @@ def cross_source_matrix(pairs: DataFrame, docs: DataFrame) -> DataFrame:
 def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup contamination matrix over the documents corpus: MinHash/LSH
     pairs rolled up by (source_a, source_b)."""
-    caches: list = []
     docs = _docs(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, _caches=caches, _sorted=False)
-    out = cross_source_matrix(pairs, docs)
-    return _materialized(out, caches, order=["source_a", "source_b"])
+    return materialized(
+        lambda: cross_source_matrix(minhash_lsh_pairs(docs, _sorted=False), docs),
+        order=["source_a", "source_b"],
+    )
 
 
 # --- Leakage-free train/val/test split -------------------------------------
@@ -1698,11 +1632,11 @@ def split_leakage_free(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free corpus split: near-dup components (MinHash/LSH pairs,
     transitively closed) move into train/val/test as units, so no test doc
     has a near-duplicate in train."""
-    caches: list = []
     docs = _docs(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, _caches=caches, _sorted=False)
-    out = leakage_free_split(docs, pairs)
-    return _materialized(out, caches, order=["doc_id"])
+    return materialized(
+        lambda: leakage_free_split(docs, minhash_lsh_pairs(docs, _sorted=False)),
+        order=["doc_id"],
+    )
 
 
 # --- dedup savings report (r13) -----------------------------------------------
@@ -1715,12 +1649,11 @@ def split_leakage_free(spark: SparkSession, sf_dir: str) -> DataFrame:
 # report itself is two KB joins against the narrow (doc_id, len) projection.
 
 
-def dedup_savings_report(docs: DataFrame, _caches: list | None = None) -> DataFrame:
+def dedup_savings_report(docs: DataFrame) -> DataFrame:
     """One row (n_docs, n_in_components, n_dropped, chars_total,
     chars_dropped, pct_chars_dropped) for the MinHash/LSH near-dedup
     pass over ``docs``."""
-    own = _caches if _caches is not None else []
-    pairs = minhash_lsh_pairs(docs, _caches=own, _sorted=False)
+    pairs = minhash_lsh_pairs(docs, _sorted=False)
     comp = connected_components(pairs).select("doc_id", "is_survivor")
     lens = docs.select("doc_id", F.length("text").cast("bigint").alias("chars"))
     labeled = lens.join(comp, "doc_id", "left")
@@ -1783,8 +1716,7 @@ FROM labeled
 def dedup_savings_report_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation headline number: documents and character mass removed
     by near-dedup (min-id survivor rule), one summary row."""
-    caches: list = []
-    return _materialized(dedup_savings_report(_docs(spark, sf_dir), _caches=caches), caches)
+    return materialized(lambda: dedup_savings_report(_docs(spark, sf_dir)))
 
 
 # --- split-leakage audit (r13) ----------------------------------------------
@@ -1799,17 +1731,11 @@ def dedup_savings_report_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # list.
 
 
-def split_leakage_audit(docs: DataFrame, _caches: list | None = None) -> DataFrame:
+def split_leakage_audit(docs: DataFrame) -> DataFrame:
     """One row (n_pairs, naive_cross_pairs, component_cross_pairs): how
     many near-dup pairs straddle splits under a per-doc hash split vs the
     component-aware split (always 0, pytest- and oracle-pinned)."""
-    own_caches = _caches if _caches is not None else []
-    pairs = (
-        minhash_lsh_pairs(docs, _caches=own_caches, _sorted=False)
-        .select("doc_id_1", "doc_id_2")
-        .cache()
-    )
-    own_caches.append(pairs)
+    pairs = cached(minhash_lsh_pairs(docs, _sorted=False).select("doc_id_1", "doc_id_2"))
     comp_split = leakage_free_split(docs, pairs).select("doc_id", F.col("split").alias("gsplit"))
     u = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13), 16, 10
@@ -1888,8 +1814,7 @@ JOIN gsplit gb ON gb.doc_id = p.doc_id_2
 def split_leakage_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-hygiene measurement: near-dup pairs torn across splits by a
     naive per-doc hash split vs the component-aware split (always 0)."""
-    caches: list = []
-    return _materialized(split_leakage_audit(_docs(spark, sf_dir), _caches=caches), caches)
+    return materialized(lambda: split_leakage_audit(_docs(spark, sf_dir)))
 
 
 # --- Incremental MinHash index: dedup a NEW batch against a stored corpus --
@@ -1915,44 +1840,39 @@ def build_minhash_index(docs: DataFrame, path: str) -> None:
     bucket list), ``<path>/members`` (doc_id → rep_id, so exact duplicates
     of indexed docs stay attributable). All writes are append-mode:
     :func:`append_minhash_index` is the same call on a later batch."""
-    # cache across the three component writes (released in the finally;
+    # cache across the three component writes (released with the scope;
     # MEMORY_AND_DISK default, so a large batch spills instead of failing):
     # members feeds two writes, and sigs holds the CPU-heavy 64-min-hash
     # projections the bands write would otherwise recompute — uncached,
     # each write re-runs the collapse+signature plan from the source scan
     # (which for the streaming sink would also re-list live index paths
     # mid-append, ADVICE r6)
-    mem = token_dedup_members(docs).cache()
-    try:
+    with released():
+        mem = cached(token_dedup_members(docs))
         reps = mem.filter(F.col("doc_id") == F.col("rep_id")).select(
             "doc_id", "lang", "text"
         )
-        sigs = minhash_signatures(reps, spread=False).cache()
-        try:
-            sigs.write.mode("append").parquet(f"{path}/signatures")
-            # stored buckets carry the same deterministic cap as the batch
-            # pipeline, applied per append (capping across appends would
-            # need to read the stored bucket back); compact_minhash_index
-            # re-applies the cap across the union of all appends and
-            # returns the lsh_bucket_overflow audit of what it trimmed —
-            # run it periodically on a long-lived index (the streaming
-            # sink's compact_every_batches does this automatically)
-            _cap_buckets(minhash_band_table(sigs), _LSH_BUCKET_CAP).write.mode(
-                "append"
-            ).partitionBy("band").parquet(f"{path}/bands")
-            mem.select("doc_id", "rep_id").write.mode("append").parquet(
-                f"{path}/members"
-            )
-            # append-after-delete is lossless (tombstones.py module note)
-            from . import tombstones
+        sigs = cached(minhash_signatures(reps, spread=False))
+        sigs.write.mode("append").parquet(f"{path}/signatures")
+        # stored buckets carry the same deterministic cap as the batch
+        # pipeline, applied per append (capping across appends would
+        # need to read the stored bucket back); compact_minhash_index
+        # re-applies the cap across the union of all appends and
+        # returns the lsh_bucket_overflow audit of what it trimmed —
+        # run it periodically on a long-lived index (the streaming
+        # sink's compact_every_batches does this automatically)
+        _cap_buckets(minhash_band_table(sigs), _LSH_BUCKET_CAP).write.mode(
+            "append"
+        ).partitionBy("band").parquet(f"{path}/bands")
+        mem.select("doc_id", "rep_id").write.mode("append").parquet(
+            f"{path}/members"
+        )
+        # append-after-delete is lossless (tombstones.py module note)
+        from . import tombstones
 
-            tombstones.unmask_ids(
-                docs.sparkSession, path, mem.select("doc_id"), "doc_id"
-            )
-        finally:
-            sigs.unpersist()
-    finally:
-        mem.unpersist()
+        tombstones.unmask_ids(
+            docs.sparkSession, path, mem.select("doc_id"), "doc_id"
+        )
 
 
 def append_minhash_index(docs: DataFrame, path: str) -> None:
@@ -1980,55 +1900,50 @@ def repair_minhash_append(docs: DataFrame, path: str) -> None:
     from ..warehouse.hdfs import exists as _hx
 
     spark = docs.sparkSession
-    mem = token_dedup_members(docs).cache()
-    try:
+    with released():
+        mem = cached(token_dedup_members(docs))
         reps = mem.filter(F.col("doc_id") == F.col("rep_id")).select(
             "doc_id", "lang", "text"
         )
-        sigs = minhash_signatures(reps, spread=False).cache()
-        try:
-            # each missing set is eagerly checkpointed: its plan reads the
-            # stored path the write below appends to
-            if _hx(spark, f"{path}/signatures"):
-                stored = spark.read.parquet(f"{path}/signatures").select("doc_id")
-                miss_s = sigs.join(stored, "doc_id", "left_anti").localCheckpoint(
-                    eager=True
-                )
-            else:
-                miss_s = sigs
-            if not miss_s.isEmpty():
-                miss_s.write.mode("append").parquet(f"{path}/signatures")
-            if _hx(spark, f"{path}/bands"):
-                stored = (
-                    spark.read.parquet(f"{path}/bands").select("doc_id").distinct()
-                )
-                miss_b = sigs.join(stored, "doc_id", "left_anti").localCheckpoint(
-                    eager=True
-                )
-            else:
-                miss_b = sigs
-            if not miss_b.isEmpty():
-                _cap_buckets(minhash_band_table(miss_b), _LSH_BUCKET_CAP).write.mode(
-                    "append"
-                ).partitionBy("band").parquet(f"{path}/bands")
-            pairs = mem.select("doc_id", "rep_id")
-            if _hx(spark, f"{path}/members"):
-                stored = spark.read.parquet(f"{path}/members").select("doc_id")
-                miss_m = pairs.join(stored, "doc_id", "left_anti").localCheckpoint(
-                    eager=True
-                )
-            else:
-                miss_m = pairs
-            if not miss_m.isEmpty():
-                miss_m.write.mode("append").parquet(f"{path}/members")
-            # same append-after-delete contract as the plain append path
-            from . import tombstones
+        sigs = cached(minhash_signatures(reps, spread=False))
+        # each missing set is eagerly checkpointed: its plan reads the
+        # stored path the write below appends to
+        if _hx(spark, f"{path}/signatures"):
+            stored = spark.read.parquet(f"{path}/signatures").select("doc_id")
+            miss_s = sigs.join(stored, "doc_id", "left_anti").localCheckpoint(
+                eager=True
+            )
+        else:
+            miss_s = sigs
+        if not miss_s.isEmpty():
+            miss_s.write.mode("append").parquet(f"{path}/signatures")
+        if _hx(spark, f"{path}/bands"):
+            stored = (
+                spark.read.parquet(f"{path}/bands").select("doc_id").distinct()
+            )
+            miss_b = sigs.join(stored, "doc_id", "left_anti").localCheckpoint(
+                eager=True
+            )
+        else:
+            miss_b = sigs
+        if not miss_b.isEmpty():
+            _cap_buckets(minhash_band_table(miss_b), _LSH_BUCKET_CAP).write.mode(
+                "append"
+            ).partitionBy("band").parquet(f"{path}/bands")
+        pairs = mem.select("doc_id", "rep_id")
+        if _hx(spark, f"{path}/members"):
+            stored = spark.read.parquet(f"{path}/members").select("doc_id")
+            miss_m = pairs.join(stored, "doc_id", "left_anti").localCheckpoint(
+                eager=True
+            )
+        else:
+            miss_m = pairs
+        if not miss_m.isEmpty():
+            miss_m.write.mode("append").parquet(f"{path}/members")
+        # same append-after-delete contract as the plain append path
+        from . import tombstones
 
-            tombstones.unmask_ids(spark, path, mem.select("doc_id"), "doc_id")
-        finally:
-            sigs.unpersist()
-    finally:
-        mem.unpersist()
+        tombstones.unmask_ids(spark, path, mem.select("doc_id"), "doc_id")
 
 
 def query_minhash_index(
@@ -2036,7 +1951,6 @@ def query_minhash_index(
     path: str,
     new_docs: DataFrame,
     threshold: float = _NEARDUP_THRESHOLD,
-    _caches: list | None = None,
 ) -> DataFrame:
     """(new_doc_id, indexed_doc_id, est_jaccard) for every doc in the new
     batch whose signature-estimated Jaccard against an INDEXED doc is ≥
@@ -2050,17 +1964,14 @@ def query_minhash_index(
     no stored text, no corpus re-scan. The final DISTINCT also makes the
     answer insensitive to duplicate index rows from a replayed append.
 
-    The new batch's signature frame is cached for the duration of the
-    query; callers that loop (the streaming sink) pass ``_caches=[]`` and
-    unpersist afterwards — same contract as :func:`minhash_lsh_pairs`."""
+    The new batch's signature frame is cached, released by the caller's
+    ``materialize.released`` scope."""
     new_mem = token_dedup_members(new_docs)
     new_members = new_mem.select("doc_id", "rep_id")
     new_reps = new_mem.filter(F.col("doc_id") == F.col("rep_id")).select(
         "doc_id", "lang", "text"
     )
-    new_sigs = minhash_signatures(new_reps, spread=False).cache()
-    if _caches is not None:
-        _caches.append(new_sigs)
+    new_sigs = cached(minhash_signatures(new_reps, spread=False))
     new_bands = minhash_band_table(new_sigs)
 
     idx_bands = spark.read.parquet(f"{path}/bands").select("doc_id", "band", "bucket")
@@ -2893,13 +2804,11 @@ def dedup_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     RICHEST copy (most distinct tokens, ties min-id) survives each
     component — the curation decision min-id deduplication gets wrong
     whenever a truncated mirror carries the smaller id."""
-    caches: list = []
-    pairs = minhash_lsh_pairs(_docs(spark, sf_dir), _caches=caches)
-    out = quality_survivors(_docs(spark, sf_dir), pairs)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    def build() -> DataFrame:
+        pairs = minhash_lsh_pairs(_docs(spark, sf_dir))
+        return quality_survivors(_docs(spark, sf_dir), pairs)
+
+    return materialized(build)
 
 
 # --- cross-language exact duplicates (r12) -----------------------------------
@@ -3165,12 +3074,11 @@ def dedup_methods_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit that says whether the two signature families identify the
     same duplicate structure. Oracle replays both pipelines, both
     recursive closures, and the exact pair combinatorics."""
-    caches: list = []
-    pa = minhash_lsh_pairs(_docs(spark, sf_dir), _caches=caches)
-    pb = simhash_pairs(_docs(spark, sf_dir), _caches=caches)
-    la = connected_components(pa)
-    lb = connected_components(pb)
-    out = clustering_ari(la, lb, _docs(spark, sf_dir)).localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    def build() -> DataFrame:
+        pa = minhash_lsh_pairs(_docs(spark, sf_dir))
+        pb = simhash_pairs(_docs(spark, sf_dir))
+        return clustering_ari(
+            connected_components(pa), connected_components(pb), _docs(spark, sf_dir)
+        )
+
+    return materialized(build)

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import cached, released
 from ..registry import query
 from ..sources import tpch
 from .similarity import _sq_dist, assign_list_col
@@ -70,40 +71,39 @@ def kmeans_fixed(
     bit-for-bit; ``fold="scale"`` (default) uses plain AVG."""
     if fold not in ("parity", "scale"):
         raise ValueError(f"fold must be 'parity' or 'scale', got {fold!r}")
-    vecs = vecs.persist()
-    centroids = fixed_seeds(vecs, k)
-    if not centroids:
-        vecs.unpersist()
-        return []
-    for _ in range(iters):
-        assigned = vecs.withColumn(
-            "c_id", assign_list_col(F.col("v"), centroids)
-        ).select("vec_id", "c_id", F.posexplode("v").alias("pos", "val"))
-        if fold == "parity":
-            means = assigned.groupBy("c_id", "pos").agg(
-                (
-                    F.aggregate(
-                        F.transform(
-                            F.sort_array(F.collect_list(F.struct("vec_id", "val"))),
-                            lambda s: s["val"],
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                    / F.count(F.lit(1)).cast("double")
-                ).alias("m")
-            )
-        else:
-            means = assigned.groupBy("c_id", "pos").agg(F.avg("val").alias("m"))
-        rows = (
-            means.groupBy("c_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pairs"))
-            .select("c_id", F.transform("pairs", lambda s: s["m"]).alias("c"))
-            .collect()
-        )  # bounded: <= k rows of dim doubles (KB model state)
-        new = {r["c_id"]: [float(x) for x in r["c"]] for r in rows}
-        centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
-    vecs.unpersist()
+    with released():
+        vecs = cached(vecs)
+        centroids = fixed_seeds(vecs, k)
+        if not centroids:
+            return []
+        for _ in range(iters):
+            assigned = vecs.withColumn(
+                "c_id", assign_list_col(F.col("v"), centroids)
+            ).select("vec_id", "c_id", F.posexplode("v").alias("pos", "val"))
+            if fold == "parity":
+                means = assigned.groupBy("c_id", "pos").agg(
+                    (
+                        F.aggregate(
+                            F.transform(
+                                F.sort_array(F.collect_list(F.struct("vec_id", "val"))),
+                                lambda s: s["val"],
+                            ),
+                            F.lit(0.0),
+                            lambda acc, x: acc + x,
+                        )
+                        / F.count(F.lit(1)).cast("double")
+                    ).alias("m")
+                )
+            else:
+                means = assigned.groupBy("c_id", "pos").agg(F.avg("val").alias("m"))
+            rows = (
+                means.groupBy("c_id")
+                .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pairs"))
+                .select("c_id", F.transform("pairs", lambda s: s["m"]).alias("c"))
+                .collect()
+            )  # bounded: <= k rows of dim doubles (KB model state)
+            new = {r["c_id"]: [float(x) for x in r["c"]] for r in rows}
+            centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
     return centroids
 
 

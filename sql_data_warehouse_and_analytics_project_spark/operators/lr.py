@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import cached, released
 from ..registry import query
 from ..sources import tpch
 from .dedup import _md5_long, _sql_md5_long
@@ -124,36 +125,36 @@ def train_lr(
     (default) uses plain partial-aggregating sums."""
     if fold not in ("parity", "scale"):
         raise ValueError(f"fold must be 'parity' or 'scale', got {fold!r}")
-    feats = feats.persist()
-    n_docs = feats.count()
-    w = [0.0] * n_buckets
-    for _ in range(iters):
-        p = _fast_sigmoid(_margin(w))
-        contribs = (
-            feats.select("doc_id", "y", "arr", p.alias("p"))
-            .select("doc_id", "p", "y", F.explode("arr").alias("e"))
-            .select(
-                "doc_id",
-                F.col("e.bucket").alias("bucket"),
-                ((F.col("p") - F.col("y")) * F.col("e.x")).alias("c"),
+    with released():
+        feats = cached(feats)
+        n_docs = feats.count()
+        w = [0.0] * n_buckets
+        for _ in range(iters):
+            p = _fast_sigmoid(_margin(w))
+            contribs = (
+                feats.select("doc_id", "y", "arr", p.alias("p"))
+                .select("doc_id", "p", "y", F.explode("arr").alias("e"))
+                .select(
+                    "doc_id",
+                    F.col("e.bucket").alias("bucket"),
+                    ((F.col("p") - F.col("y")) * F.col("e.x")).alias("c"),
+                )
             )
-        )
-        if fold == "parity":
-            grad = contribs.groupBy("bucket").agg(
-                F.aggregate(
-                    F.transform(
-                        F.sort_array(F.collect_list(F.struct("doc_id", "c"))),
-                        lambda s: s["c"],
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("g")
-            )
-        else:
-            grad = contribs.groupBy("bucket").agg(F.sum("c").alias("g"))
-        for row in grad.collect():  # bounded: <= n_buckets rows (KB model)
-            w[row["bucket"]] -= lr * (row["g"] / float(n_docs))
-    feats.unpersist()
+            if fold == "parity":
+                grad = contribs.groupBy("bucket").agg(
+                    F.aggregate(
+                        F.transform(
+                            F.sort_array(F.collect_list(F.struct("doc_id", "c"))),
+                            lambda s: s["c"],
+                        ),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
+                    ).alias("g")
+                )
+            else:
+                grad = contribs.groupBy("bucket").agg(F.sum("c").alias("g"))
+            for row in grad.collect():  # bounded: <= n_buckets rows (KB model)
+                w[row["bucket"]] -= lr * (row["g"] / float(n_docs))
     return w
 
 

@@ -840,7 +840,6 @@ def _hamming_band_pairs(
     n_bands: int,
     band_bits: int,
     hamming_max: int,
-    _caches: list | None = None,
     _sorted: bool = True,
 ) -> DataFrame:
     """Near-duplicate (media_id_1, media_id_2, hamming) pairs from a
@@ -867,8 +866,6 @@ def _hamming_band_pairs(
     # dedupes across consumers within a job anyway.
     sigs = sigs.localCheckpoint(eager=True)
     rep_min = sigs.groupBy(sig_col).agg(F.min("media_id").alias("rep_id"))
-    if _caches is not None:
-        _caches.append(sigs)
     members = sigs.join(rep_min, sig_col).select(
         F.col("media_id").alias("doc_id"), F.col("rep_id")
     )
@@ -883,7 +880,6 @@ def _hamming_band_pairs(
 
 def phash_pairs(
     sigs: DataFrame,
-    _caches: list | None = None,
     _sorted: bool = True,
 ) -> DataFrame:
     """Near-duplicate image pairs from (media_id, phash) signatures —
@@ -895,7 +891,6 @@ def phash_pairs(
         _PHASH_N_BANDS,
         _PHASH_BAND_BITS,
         _PHASH_HAMMING_MAX,
-        _caches=_caches,
         _sorted=_sorted,
     )
 
@@ -996,7 +991,7 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_oracle_parity.py instead."""
     # lazy return: the one eager job inside (the signature checkpoint)
     # runs the Python decode exactly once; the rest of the skeleton keeps
-    # its concurrent-stage overlap (an end-to-end _materialized wrapper
+    # its concurrent-stage overlap (an end-to-end materialized() wrapper
     # measured 0.5 s slower at sf0.1 by serializing it)
     return phash_pairs(phash_signatures(spark, sf_dir))
 
@@ -1077,7 +1072,6 @@ def afp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def afp_pairs(
     sigs: DataFrame,
-    _caches: list | None = None,
     _sorted: bool = True,
 ) -> DataFrame:
     """Near-duplicate audio pairs — the shared Hamming-band skeleton at the
@@ -1088,7 +1082,6 @@ def afp_pairs(
         _AFP_N_BANDS,
         _AFP_BAND_BITS,
         _AFP_HAMMING_MAX,
-        _caches=_caches,
         _sorted=_sorted,
     )
 
@@ -1226,7 +1219,6 @@ def video_frame_signatures(media: DataFrame, n_frames: int = _VFP_FRAMES) -> Dat
 def video_phash_pairs(
     sigs: DataFrame,
     match_min: int = _VFP_MATCH_MIN,
-    _caches: list | None = None,
 ) -> DataFrame:
     """(media_id_1, media_id_2, n_frames_matched, avg_hamming) video
     near-dup pairs: frame signatures ride the image Hamming-band skeleton
@@ -1242,7 +1234,6 @@ def video_phash_pairs(
         _PHASH_N_BANDS,
         _PHASH_BAND_BITS,
         _PHASH_HAMMING_MAX,
-        _caches=_caches,
         _sorted=False,  # rolled up by video below; the pair sort would be dropped anyway
     )
     aligned = fp.filter(

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import cached, released
 from ..registry import query
 from ..sources import tpch
 
@@ -66,40 +67,37 @@ def pagerank(
     would add the standard dangling-mass term."""
     if fold not in ("parity", "scale"):
         raise ValueError(f"fold must be 'parity' or 'scale', got {fold!r}")
-    outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
-    # normalized transition weight — computed once, reused every round
-    trans = (
-        edges.join(outw, "src")
-        .select("src", "dst", (F.col("w") / F.col("outw")).alias("p"))
-        .persist()
-    )
-    nodes = trans.select(F.col("src").alias("node")).distinct().persist()
-    n = nodes.count()
-    base = (1.0 - damp) / float(n)
-    ranks = nodes.select("node", F.lit(1.0 / float(n)).alias("r"))
-    for _ in range(iters):
-        contribs = trans.join(
-            ranks, trans["src"] == ranks["node"]
-        ).select("dst", "src", (F.col("r") * F.col("p")).alias("c"))
-        if fold == "parity":
-            s = F.aggregate(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("src", "c"))),
-                    lambda e: e["c"],
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        else:
-            s = F.sum("c")
-        ranks = (
-            contribs.groupBy("dst")
-            .agg((F.lit(base) + F.lit(damp) * s).alias("r"))
-            .select(F.col("dst").alias("node"), "r")
-            .localCheckpoint(eager=True)  # bound the plan depth at O(1) per round
+    with released():
+        outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
+        # normalized transition weight — computed once, reused every round
+        trans = cached(
+            edges.join(outw, "src").select("src", "dst", (F.col("w") / F.col("outw")).alias("p"))
         )
-    trans.unpersist()
-    nodes.unpersist()
+        nodes = cached(trans.select(F.col("src").alias("node")).distinct())
+        n = nodes.count()
+        base = (1.0 - damp) / float(n)
+        ranks = nodes.select("node", F.lit(1.0 / float(n)).alias("r"))
+        for _ in range(iters):
+            contribs = trans.join(
+                ranks, trans["src"] == ranks["node"]
+            ).select("dst", "src", (F.col("r") * F.col("p")).alias("c"))
+            if fold == "parity":
+                s = F.aggregate(
+                    F.transform(
+                        F.sort_array(F.collect_list(F.struct("src", "c"))),
+                        lambda e: e["c"],
+                    ),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                )
+            else:
+                s = F.sum("c")
+            ranks = (
+                contribs.groupBy("dst")
+                .agg((F.lit(base) + F.lit(damp) * s).alias("r"))
+                .select(F.col("dst").alias("node"), "r")
+                .localCheckpoint(eager=True)  # bound the plan depth at O(1) per round
+            )
     return ranks.select("node", F.round("r", 6).alias("rank")).orderBy("node")
 
 

@@ -458,6 +458,7 @@ def sink_stream_neardedup(
     unpublished until the retry republishes its batch directory (which
     the overwrite makes idempotent)."""
 
+    from ..materialize import released
     from ..operators import dedup
 
     if threshold is None:
@@ -511,9 +512,8 @@ def sink_stream_neardedup(
     def _dedup_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         batch = batch.select("doc_id", "lang", "text")
-        caches: list = []
-        try:
-            pairs = dedup.minhash_lsh_pairs(batch, threshold=threshold, _caches=caches)
+        with released():
+            pairs = dedup.minhash_lsh_pairs(batch, threshold=threshold)
             dups = pairs.select(F.col("doc_id_2").alias("doc_id")).distinct()
             survivors = batch.join(dups, "doc_id", "left_anti")
             indexed_ids = None
@@ -526,9 +526,7 @@ def sink_stream_neardedup(
                 # by the id-collect, the confirm join, and the anti-join —
                 # uncheckpointed, each would re-run the index probe pipeline
                 hits = (
-                    dedup.query_minhash_index(
-                        spark, index_path, survivors, threshold=probe, _caches=caches
-                    )
+                    dedup.query_minhash_index(spark, index_path, survivors, threshold=probe)
                     .filter(F.col("new_doc_id") != F.col("indexed_doc_id"))
                     .localCheckpoint(eager=True)
                 )
@@ -609,9 +607,6 @@ def sink_stream_neardedup(
                     overflow.withColumn(
                         "batch_id", F.lit(batch_id).cast("bigint")
                     ).write.mode("append").parquet(f"{index_path}/audit/bucket_overflow")
-        finally:
-            for c in caches:
-                c.unpersist()
 
     return (
         docs_stream.writeStream.foreachBatch(_dedup_batch)

@@ -9,6 +9,7 @@ from itertools import combinations
 
 import pytest
 
+from sql_data_warehouse_and_analytics_project_spark.materialize import released
 from sql_data_warehouse_and_analytics_project_spark.operators import dedup
 
 _SCHEMA = "doc_id long, lang string, text string"
@@ -16,12 +17,10 @@ _SCHEMA = "doc_id long, lang string, text string"
 
 def test_dedup_pipelines_handle_empty_corpus(spark):
     empty = spark.createDataFrame([], _SCHEMA)
-    caches = []
-    assert dedup.minhash_lsh_pairs(empty, _caches=caches).count() == 0
-    assert dedup.simhash_pairs(empty, _caches=caches).count() == 0
-    assert dedup.ngram_jaccard_candidates(empty, _caches=caches).count() == 0
-    for c in caches:
-        c.unpersist()
+    with released():
+        assert dedup.minhash_lsh_pairs(empty).count() == 0
+        assert dedup.simhash_pairs(empty).count() == 0
+        assert dedup.ngram_jaccard_candidates(empty).count() == 0
 
 
 def test_dedup_pipelines_handle_uniform_corpus(spark):
@@ -31,17 +30,15 @@ def test_dedup_pipelines_handle_uniform_corpus(spark):
     uniform = spark.createDataFrame(
         [(i, "en", "alpha beta gamma delta epsilon zeta") for i in range(10)], _SCHEMA
     )
-    caches = []
-    rows = dedup.minhash_lsh_pairs(uniform, _caches=caches).collect()
-    assert len(rows) == 45
-    assert all(r["jaccard"] == 1.0 for r in rows)
-    assert all(r["doc_id_1"] < r["doc_id_2"] for r in rows)
+    with released():
+        rows = dedup.minhash_lsh_pairs(uniform).collect()
+        assert len(rows) == 45
+        assert all(r["jaccard"] == 1.0 for r in rows)
+        assert all(r["doc_id_1"] < r["doc_id_2"] for r in rows)
 
-    sim = dedup.simhash_pairs(uniform, _caches=caches).collect()
-    assert len(sim) == 45
-    assert all(r["hamming"] == 0 for r in sim)
-    for c in caches:
-        c.unpersist()
+        sim = dedup.simhash_pairs(uniform).collect()
+        assert len(sim) == 45
+        assert all(r["hamming"] == 0 for r in sim)
 
 
 def test_ivf_training_handles_empty_embeddings(spark, tmp_path):

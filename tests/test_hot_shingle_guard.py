@@ -88,7 +88,7 @@ def test_minhash_lsh_pairs_unchanged_on_boilerplate_corpus(spark):
     docs = _docs(spark, rows)
     got = {
         (r["doc_id_1"], r["doc_id_2"])
-        for r in dedup.minhash_lsh_pairs(docs, _caches=[]).collect()
+        for r in dedup.minhash_lsh_pairs(docs).collect()
     }
     sets = {i: _shingle_set(t) for i, _, t in rows}
     sigs = {
@@ -147,13 +147,10 @@ def test_candidate_shared_arrays_matches_guarded_counts(spark):
         (r["doc_id_1"], r["doc_id_2"]): r["shared"]
         for r in dedup._candidate_shared_counts(sh, cand).collect()
     }
-    caches: list = []
     new = {
         (r["doc_id_1"], r["doc_id_2"]): (r["shared"], r["n1"], r["n2"])
-        for r in dedup._candidate_shared_arrays(docs, cand, _caches=caches).collect()
+        for r in dedup._candidate_shared_arrays(docs, cand).collect()
     }
-    for c in caches:
-        c.unpersist()
     sizes = {r["doc_id"]: r["n"] for r in sh.groupBy("doc_id").count().withColumnRenamed("count", "n").collect()}
     assert set(new) == set(old)
     for k, (shared, n1, n2) in new.items():

@@ -12,6 +12,7 @@ import pytest
 
 
 from sql_data_warehouse_and_analytics_project_spark import analytics
+from sql_data_warehouse_and_analytics_project_spark.materialize import released
 from sql_data_warehouse_and_analytics_project_spark.plans import audit
 from sql_data_warehouse_and_analytics_project_spark.registry import all_queries
 
@@ -275,9 +276,8 @@ def test_jaccard_pipeline_no_window_single_corpus_explode(spark):
     generation and the per-doc sizes aggregate (VERDICT r05 #2)."""
     from sql_data_warehouse_and_analytics_project_spark.operators import dedup
 
-    caches = []
-    jp = dedup.ngram_jaccard_pairs(dedup._docs(spark, SF_DIR), _caches=caches)
-    try:
+    with released():
+        jp = dedup.ngram_jaccard_pairs(dedup._docs(spark, SF_DIR))
         jp.count()
         counts = audit.physical_node_counts(jp)
         assert counts.get("WindowExec", 0) == 0, counts
@@ -285,9 +285,6 @@ def test_jaccard_pipeline_no_window_single_corpus_explode(spark):
         # cache materialization
         assert counts.get("GenerateExec", 0) == 0, counts
         assert counts.get("InMemoryTableScanExec", 0) >= 2, counts
-    finally:
-        for c in caches:
-            c.unpersist()
 
 
 def test_planted_identical_docs_hot_key_bounded(spark):
@@ -334,10 +331,8 @@ def test_planted_identical_docs_hot_key_bounded(spark):
 
     # downstream: the LSH pipeline sees ONE signature row for the hot key
     # and expands back to all C(1000,2) member pairs bit-identically
-    caches = []
-    n_pairs = dedup.minhash_lsh_pairs(docs, _caches=caches).count()
-    for c in caches:
-        c.unpersist()
+    with released():
+        n_pairs = dedup.minhash_lsh_pairs(docs).count()
     assert n_pairs == 1000 * 999 // 2
 
 

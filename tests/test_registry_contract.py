@@ -101,3 +101,32 @@ def test_rows_only_set_is_exactly_the_documented_nine():
         f"rows-only registry drift: extra={sorted(rows_only - ROWS_ONLY_BY_DESIGN)}, "
         f"missing={sorted(ROWS_ONLY_BY_DESIGN - rows_only)}"
     )
+
+
+def test_cache_lifetimes_go_through_materialize():
+    """One cache-lifetime primitive: ``.cache()``, ``.persist(`` and
+    ``.unpersist(`` appear only in ``materialize.py`` (and the jsonl
+    source's own batch lifecycle), and no list of caches is threaded
+    through the package as a parameter. Comment lines are exempt from the
+    call check."""
+    import pathlib
+    import re
+
+    import sql_data_warehouse_and_analytics_project_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    allowed = {"materialize.py", "sources/jsonl.py"}
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        text = path.read_text()
+        if re.search(r"_cache[s]", text):
+            offenders.append(f"{rel}: cache-list parameter")
+        if rel in allowed:
+            continue
+        for n, line in enumerate(text.splitlines(), 1):
+            if line.lstrip().startswith("#"):
+                continue
+            if any(t in line for t in (".cache()", ".persist(", ".unpersist(")):
+                offenders.append(f"{rel}:{n}: {line.strip()}")
+    assert not offenders, offenders

@@ -19,6 +19,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_and_analytics_project_spark.materialize import released
 from sql_data_warehouse_and_analytics_project_spark.operators import dedup
 
 # segment layout of the synthetic corpus (fractions of n):
@@ -67,12 +68,10 @@ def _corpus(spark, n: int):
 def _timed_pairs(spark, docs):
     """Materialize the full LSH pipeline, returning (seconds, pair_count)."""
     spark.catalog.clearCache()
-    caches: list = []
-    t0 = time.perf_counter()
-    n_pairs = dedup.minhash_lsh_pairs(docs, _caches=caches).count()
-    elapsed = time.perf_counter() - t0
-    for c in caches:
-        c.unpersist()
+    with released():
+        t0 = time.perf_counter()
+        n_pairs = dedup.minhash_lsh_pairs(docs).count()
+        elapsed = time.perf_counter() - t0
     return elapsed, n_pairs
 
 
@@ -98,14 +97,12 @@ def test_minhash_lsh_survives_planted_scale(spark):
     planted = docs_full.sparkSession.createDataFrame(
         [_PLANTED], "doc_id_1 bigint, doc_id_2 bigint"
     )
-    caches: list = []
-    found = (
-        dedup.minhash_lsh_pairs(docs_full, _caches=caches)
-        .join(planted, ["doc_id_1", "doc_id_2"], "left_semi")
-        .count()
-    )
-    for c in caches:
-        c.unpersist()
+    with released():
+        found = (
+            dedup.minhash_lsh_pairs(docs_full)
+            .join(planted, ["doc_id_1", "doc_id_2"], "left_semi")
+            .count()
+        )
     assert found == 1
 
     # exact-dup segment: all C(group, 2) member pairs present at J = 1.0

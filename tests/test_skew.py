@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_and_analytics_project_spark.materialize import released
 from sql_data_warehouse_and_analytics_project_spark.operators import skew
 from sql_data_warehouse_and_analytics_project_spark.plans import audit
 from sql_data_warehouse_and_analytics_project_spark.sources import tpch
@@ -72,14 +73,12 @@ def test_df_cut_bounds_candidate_pairs(spark):
     )
 
     docs = _stopword_corpus(spark)
-    caches = []
-    # uncut: the stopword shingle alone fans out to 4950 candidate pairs
-    uncut = ngram_jaccard_candidates(docs, df_cut=10**9, _caches=caches).count()
-    assert uncut == 100 * 99 // 2
-    # with the df cut the hot shingle is excluded from the join entirely
-    assert ngram_jaccard_candidates(docs, _caches=caches).count() == 0
-    for c in caches:
-        c.unpersist()
+    with released():
+        # uncut: the stopword shingle alone fans out to 4950 candidate pairs
+        uncut = ngram_jaccard_candidates(docs, df_cut=10**9).count()
+        assert uncut == 100 * 99 // 2
+        # with the df cut the hot shingle is excluded from the join entirely
+        assert ngram_jaccard_candidates(docs).count() == 0
 
 
 def test_df_cut_keeps_exact_shared_counts(spark):
@@ -99,13 +98,8 @@ def test_df_cut_keeps_exact_shared_counts(spark):
             "doc_id bigint, lang string, text string",
         )
     )
-    caches = []
-    out = {
-        (r["doc_id_1"], r["doc_id_2"]): r
-        for r in ngram_jaccard_pairs(docs, _caches=caches).collect()
-    }
-    for c in caches:
-        c.unpersist()
+    with released():
+        out = {(r["doc_id_1"], r["doc_id_2"]): r for r in ngram_jaccard_pairs(docs).collect()}
     assert set(out) == {(1001, 1002)}
     r = out[(1001, 1002)]
     # 10 shingles each, 9 shared (8 rare + the df-cut 'aaa bbb ccc')
@@ -141,12 +135,10 @@ def test_exact_dup_collapse_bounds_lsh_candidates(spark):
     assert reps.count() == 2
     assert minhash_signatures(reps).count() == 2
 
-    caches = []
-    out = minhash_lsh_pairs(docs, _caches=caches)
-    assert out.count() == n * (n - 1) // 2
-    assert out.filter(F.col("jaccard") < 1.0).count() == 0
-    for c in caches:
-        c.unpersist()
+    with released():
+        out = minhash_lsh_pairs(docs)
+        assert out.count() == n * (n - 1) // 2
+        assert out.filter(F.col("jaccard") < 1.0).count() == 0
 
 
 def test_lsh_bucket_cap_is_deterministic_and_audited(spark):

@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_and_analytics_project_spark.materialize import released
 from sql_data_warehouse_and_analytics_project_spark.sources import tpch
 from sql_data_warehouse_and_analytics_project_spark.streaming import jobs
 
@@ -399,13 +400,11 @@ def test_stream_neardedup_across_batches(spark, tmp_path):
     from sql_data_warehouse_and_analytics_project_spark.operators import dedup
 
     docs = tpch.load(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
-    truth_caches: list = []
-    truth = {
-        (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
-        for r in dedup.minhash_lsh_pairs(docs, _caches=truth_caches).collect()
-    }
-    for tc in truth_caches:
-        tc.unpersist()
+    with released():
+        truth = {
+            (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
+            for r in dedup.minhash_lsh_pairs(docs).collect()
+        }
     strong = {p for p, j in truth.items() if j >= 0.95}
     in_strong = {d for p in strong for d in p}
     assert strong, "testdata lost its planted near-dups"

@@ -8,6 +8,7 @@ import pytest
 
 from conftest import SF_DIR
 
+from sql_data_warehouse_and_analytics_project_spark.materialize import released
 from sql_data_warehouse_and_analytics_project_spark.registry import all_queries
 
 
@@ -352,13 +353,9 @@ def test_curation_pipeline_end_to_end(spark):
 
     # no surviving near-dup pairs: re-running LSH over the curated corpus
     # must find nothing at the same threshold
-    caches = []
-    residual = dedup.minhash_lsh_pairs(
-        curated.select("doc_id", "lang", "text"), _caches=caches
-    )
-    assert residual.count() == 0
-    for c in caches:
-        c.unpersist()
+    with released():
+        residual = dedup.minhash_lsh_pairs(curated.select("doc_id", "lang", "text"))
+        assert residual.count() == 0
 
 
 def test_curation_prefix_matches_duckdb(spark, duck):
@@ -692,13 +689,11 @@ def test_incremental_minhash_index_cross_batch(spark, tmp_path):
     c = docs.filter(F.col("doc_id") % 3 == 2)
 
     # full-corpus ground truth (exact-Jaccard-verified member pairs)
-    truth_caches: list = []
-    full = {
-        (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
-        for r in dedup.minhash_lsh_pairs(docs, _caches=truth_caches).collect()
-    }
-    for tc in truth_caches:
-        tc.unpersist()
+    with released():
+        full = {
+            (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
+            for r in dedup.minhash_lsh_pairs(docs).collect()
+        }
 
     incr = str(tmp_path / "incr")
     dedup.build_minhash_index(a, incr)
@@ -1070,15 +1065,14 @@ def test_connected_components_closes_transitive_chains(spark):
     }
 
     # real corpus: agree with union-find over the emitted pairs
-    caches: list = []
-    pairs = dedup.minhash_lsh_pairs(
-        tpch.load(spark, SF_DIR, "documents").select("doc_id", "lang", "text"),
-        _caches=caches,
-    )
-    edge_rows = [(r["doc_id_1"], r["doc_id_2"]) for r in pairs.collect()]
-    comp = {r["doc_id"]: r["component_id"] for r in dedup.connected_components(pairs).collect()}
-    for c in caches:
-        c.unpersist()
+    with released():
+        pairs = dedup.minhash_lsh_pairs(
+            tpch.load(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
+        )
+        edge_rows = [(r["doc_id_1"], r["doc_id_2"]) for r in pairs.collect()]
+        comp = {
+            r["doc_id"]: r["component_id"] for r in dedup.connected_components(pairs).collect()
+        }
     parent: dict = {}
 
     def find(x):
@@ -1761,11 +1755,9 @@ def test_composition_pipeline_end_to_end(spark):
     n2 = s2.count()
     assert 0 < n2 <= n1
 
-    caches: list = []
-    pairs = dedup.minhash_lsh_pairs(s2, _caches=caches, _sorted=False)
-    split = dedup.leakage_free_split(s2, pairs).localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
+    with released():
+        pairs = dedup.minhash_lsh_pairs(s2, _sorted=False)
+        split = dedup.leakage_free_split(s2, pairs).localCheckpoint(eager=True)
     assert split.count() == n2
     # leakage check: no near-dup pair straddles train and a held-out split
     sp = {r["doc_id"]: r["split"] for r in split.collect()}
