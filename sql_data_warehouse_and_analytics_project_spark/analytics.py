@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .sources import tpch
+from .sources.local import local_frame
 from .tsql import (
     datediff_month,
     datediff_year,
@@ -85,7 +86,7 @@ def q01_database_exploration(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in tpch.TABLES:
         for f in _t(spark, sf_dir, t).schema.fields:
             rows.append((t, f.name, f.dataType.simpleString()))
-    return spark.createDataFrame(rows, "table_name string, column_name string, data_type string")
+    return local_frame(spark, rows, "table_name string, column_name string, data_type string")
 
 
 # ---------------------------------------------------------------------------

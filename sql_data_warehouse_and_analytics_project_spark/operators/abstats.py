@@ -33,8 +33,8 @@ fixed-point purchase total that table grows ~linearly with the unit
 count (r16 shipped it under a "KB at any corpus size" claim that held
 only for low-cardinality metrics — VERDICT r16 what's-wrong #1), so
 its cumulative folds use ``_value_cumsums``: a two-pass
-range-partitioned exact cumulative sum (the gold.py:43 surrogate-key
-discipline) with NO single-partition window anywhere in the plan.
+range-partitioned exact cumulative sum (``sources.local.range_offsets``)
+with NO single-partition window anywhere in the plan.
 The BH sweep runs over SEGMENTS (25 nations), broadcast-joined
 against dim tables. Nothing downstream of the first groupBy sees
 corpus rows.
@@ -45,13 +45,12 @@ methods).
 
 from __future__ import annotations
 
-from decimal import Decimal
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import local_frame, range_offsets
 
 _FP = 1_000_000
 _ALPHA_PPM = 50_000  # 0.05 in ppm — BH target FDR
@@ -96,15 +95,12 @@ def _value_cumsums(counts: DataFrame, cols: list[str]):
 
     The per-distinct-value count table grows ~linearly with the unit count
     for continuous metrics, so a global ``Window.orderBy("v")`` would sort
-    and fold the whole table in ONE task. Instead, the gold.py:43
-    surrogate-key discipline: repartitionByRange(v) → per-range-partition
-    window cumsum → per-partition subtotals collected to the driver
-    (≤ shuffle-partitions rows, one bigint each) → prefix offsets broadcast
-    back and added. Integer addition is associative, so every cumulative
-    value — and the grand totals returned as exact Python ints — is
-    bit-identical to the single-partition window it replaces. The ranged
-    table is localCheckpoint-ed (the kcore discipline) so the upstream
-    collapse runs once, not once per pass.
+    and fold the whole table in ONE task. Instead, ``range_offsets``:
+    repartitionByRange(v) → per-range-partition window cumsum → driver
+    prefix offsets (decimal(38,0)) broadcast back and added. Integer
+    addition is associative, so every cumulative value — and the grand
+    totals returned as exact Python ints — is bit-identical to the
+    single-partition window it replaces.
 
     Returns ``(stepped, totals)``: ``stepped`` is ``counts`` plus one
     ``cum_<col>`` column per input col; ``totals`` maps each col to its
@@ -114,37 +110,17 @@ def _value_cumsums(counts: DataFrame, cols: list[str]):
     # range exchange's boundary-sampling pass and the ranged checkpoint
     # each executed the full upstream collapse otherwise — one corpus
     # pass wasted per fold (profiled: two identical 6-CPU-s map stages
-    # under olap_abc_parts). The ranged frame keeps its own checkpoint:
-    # boundary sampling is per-execution, so the subtotal pass and the
-    # stepped window MUST read one materialized partition assignment or
-    # the broadcast offsets would not line up.
+    # under olap_abc_parts).
     counts = counts.localCheckpoint(eager=True)
-    ranged = (
-        counts.repartitionByRange(F.col("v"))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    sub = sorted(
-        (r["_pid"], tuple(int(r[f"_s_{c}"]) for c in cols))
-        for r in ranged.groupBy("_pid")
-        .agg(*[F.sum(c).alias(f"_s_{c}") for c in cols])
-        .collect()
-    )
-    offsets, running = [], [0] * len(cols)
-    for pid, subs in sub:
-        offsets.append((pid, *(Decimal(x) for x in running)))
-        running = [a + b for a, b in zip(running, subs)]
-    totals = dict(zip(cols, running))
-    schema = ", ".join(["_pid int"] + [f"_off_{c} decimal(38,0)" for c in cols])
-    off_df = counts.sparkSession.createDataFrame(
-        offsets or [(0, *[Decimal(0)] * len(cols))], schema
+    ranged, totals = range_offsets(
+        counts, [F.col("v")], {c: F.sum(c) for c in cols}, "decimal(38,0)"
     )
     w_local = (
         Window.partitionBy("_pid")
         .orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    stepped = ranged.join(F.broadcast(off_df), "_pid").select(
+    stepped = ranged.select(
         *counts.columns,
         *[
             (F.sum(c).over(w_local) + F.col(f"_off_{c}")).alias(f"cum_{c}")
@@ -727,9 +703,7 @@ def quantile_treatment_effects(units: DataFrame) -> DataFrame:
         F.lit(tot["c1"]).cast("bigint").alias("n1"),
         F.lit(tot["c0"]).cast("bigint").alias("n0"),
     )
-    pcts = units.sparkSession.createDataFrame(
-        [(p,) for p in _QTE_PCTS_PPM], "pct_ppm bigint"
-    )
+    pcts = local_frame(units.sparkSession, [(p,) for p in _QTE_PCTS_PPM], "pct_ppm bigint")
     # k = ceil(p·n) in exact integers; the quantile is the smallest v
     # whose cumulative count reaches k — a per-percentile MIN over the
     # count table (broadcast the 5-row percentile spine)

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -467,9 +468,7 @@ def hist_quantiles(
         .withColumn("cum_before", F.col("cum") - F.col("cnt"))
         .crossJoin(F.broadcast(binned.agg(F.sum("cnt").cast("bigint").alias("n"))))
     )
-    qdf = cum.sparkSession.createDataFrame(
-        [(float(q),) for q in qs], "q double"
-    )
+    qdf = local_frame(cum.sparkSession, [(float(q),) for q in qs], "q double")
     target = F.col("q") * F.col("n").cast("double")
     covering = (
         cum.join(F.broadcast(qdf))
@@ -572,7 +571,7 @@ def hist_quantiles_by(
             "n", F.sum("cnt").over(Window.partitionBy("grp"))
         )
     )
-    qdf = cum.sparkSession.createDataFrame([(float(q),) for q in qs], "q double")
+    qdf = local_frame(cum.sparkSession, [(float(q),) for q in qs], "q double")
     target = F.col("q") * F.col("n").cast("double")
     covering = cum.join(F.broadcast(qdf)).filter(
         (F.col("cum_before").cast("double") < target)

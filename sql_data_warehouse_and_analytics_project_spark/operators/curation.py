@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..materialize import released
 from ..sources import tpch
+from ..sources.local import local_frame
 from . import dedup
 from .text import (
     is_eval_doc,
@@ -302,7 +303,7 @@ def curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         (8, "near_dedup_passes", rep.n_near_dedup_passes),
         (9, "survivor_hash", int(surv_hash)),
     ]
-    return spark.createDataFrame(rows, "stage_no bigint, stage string, value bigint").orderBy(
+    return local_frame(spark, rows, "stage_no bigint, stage string, value bigint").orderBy(
         "stage_no"
     )
 

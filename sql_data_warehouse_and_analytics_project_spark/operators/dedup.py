@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..materialize import cached, materialized, released
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import local_frame
 from .text import SQL_NORM, SQL_TOKENS, normalize_content, tokens_col
 
 
@@ -2921,9 +2922,7 @@ def dedup_cross_lang_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     just emptiness agreement; test_cross_lang_dup_pairs_planted pins the
     semantics on richer planted corpora."""
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    spark_probes = docs.sparkSession.createDataFrame(
-        _XLANG_PROBES, "doc_id bigint, lang string, text string"
-    )
+    spark_probes = local_frame(spark, _XLANG_PROBES, "doc_id bigint, lang string, text string")
     return cross_lang_dup_pairs(docs.unionByName(spark_probes))
 
 

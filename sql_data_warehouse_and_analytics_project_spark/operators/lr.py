@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from ..materialize import cached, released
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import local_frame
 from .dedup import _md5_long, _sql_md5_long
 from .text import SQL_TOKENS, tokens_col
 
@@ -506,9 +507,7 @@ def isotonic_apply(
     scale = 10 ** key_dp
     spark = scored.sparkSession
     ft = F.broadcast(
-        spark.createDataFrame(
-            [(k, round(v, 6)) for k, v in fit], "k bigint, calibrated double"
-        )
+        local_frame(spark, [(k, round(v, 6)) for k, v in fit], "k bigint, calibrated double")
     )
     return scored.withColumn(
         "k", F.floor(F.col("score") * scale).cast("bigint")
@@ -532,7 +531,8 @@ def eval_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cal = applied.select("doc_id", "y", F.col("calibrated").alias("score"))
     ece_iso = calibration_ece(cal).collect()[0]
     n_blocks = len(set(v for _, v in fit))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(ece_raw["n_docs"]),

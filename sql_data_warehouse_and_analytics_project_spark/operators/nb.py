@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import local_frame
 from .text import SQL_TOKENS, tokens_col
 
 _NB_VOCAB = 256
@@ -225,9 +226,8 @@ def nb_language_classifier(
     # literal strategy: collect the KB model frames, bake weights as literals
     classes = sorted(classes_df.collect(), key=lambda r: r["lang"])
     if not classes:
-        return docs.sparkSession.createDataFrame(
-            [], "doc_id bigint, lang string, pred_lang string, hit int, nb_score double"
-        )
+        ddl = "doc_id bigint, lang string, pred_lang string, hit int, nb_score double"
+        return local_frame(docs.sparkSession, [], ddl)
     n_docs = float(sum(r["nd"] for r in classes))
     cnts: dict[str, list] = {r["lang"]: [] for r in classes}
     for r in cnts_df.collect():

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import range_offsets
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -86,8 +87,7 @@ def _dist_ntile(df: DataFrame, sort_cols: list, k: int, out: str) -> DataFrame:
     """NTILE(k) over ``sort_cols`` with NO single-partition window (r17,
     VERDICT r16 ask #3: the per-customer NTILE tables grow with the
     corpus). Two-pass exact rank — repartitionByRange(sort_cols) →
-    per-partition row_number → driver-collected per-partition counts →
-    broadcast prefix offsets (the gold.py:43 surrogate-key discipline) —
+    per-partition row_number + ``range_offsets``' broadcast prefix counts —
     then the SQL-standard tile formula from the exact global rank rn and
     total n (q = n div k, r = n mod k; the first r tiles hold q+1 rows):
 
@@ -96,23 +96,11 @@ def _dist_ntile(df: DataFrame, sort_cols: list, k: int, out: str) -> DataFrame:
 
     which reproduces Spark's and DuckDB's NTILE bit-for-bit (both follow
     the larger-buckets-first standard)."""
-    ranged = (
-        df.repartitionByRange(*sort_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = sorted(
-        (r["_pid"], r["count"]) for r in ranged.groupBy("_pid").count().collect()
-    )
-    offsets, running = [], 0
-    for pid, c in counts:
-        offsets.append((pid, running))
-        running += c
-    n = running
-    off_df = df.sparkSession.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
+    ranged, totals = range_offsets(df, sort_cols, {"n": F.count(F.lit(1))})
+    n = totals["n"]
     w_local = Window.partitionBy("_pid").orderBy(*sort_cols)
-    joined = ranged.join(F.broadcast(off_df), "_pid").withColumn(
-        "_rn", (F.row_number().over(w_local) + F.col("_off")).cast("bigint")
+    joined = ranged.withColumn(
+        "_rn", (F.row_number().over(w_local) + F.col("_off_n")).cast("bigint")
     )
     q, r = n // k, n % k
     if q == 0:  # fewer rows than tiles: every row is its own tile
@@ -123,7 +111,7 @@ def _dist_ntile(df: DataFrame, sort_cols: list, k: int, out: str) -> DataFrame:
             F.col("_rn") <= F.lit(r * (q + 1)),
             F.expr(f"(_rn + {q}) div {q + 1}"),
         ).otherwise(F.expr(f"{r} + (_rn - {r * (q + 1)} + {q - 1}) div {q}"))
-    return joined.withColumn(out, tile.cast("int")).drop("_pid", "_off", "_rn")
+    return joined.withColumn(out, tile.cast("int")).drop("_pid", "_off_n", "_rn")
 
 
 def olap_ntile_customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:

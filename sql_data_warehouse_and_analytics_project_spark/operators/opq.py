@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import local_frame
 from .pca import DIM, gram_matrix, dim_stats, pca_project, _eigen_decomp
 from .pq import _PQ_DSUB, _PQ_K, _PQ_M, _quantized, pq_adc_topk, pq_encode, train_pq_codebooks
 from .similarity import quantize
@@ -248,9 +249,7 @@ def opq_perm_recall_audit(
         for m in range(m_subs):
             for code in range(kcw):
                 lut_rows.append((int(r["vec_id"]), m, code, int(lut[m][code])))
-    lut_df = spark.createDataFrame(
-        lut_rows, "qid bigint, m int, code int, adist bigint"
-    )
+    lut_df = local_frame(spark, lut_rows, "qid bigint, m int, code int, adist bigint")
 
     encoded = pq_encode(emb_p, codebooks, dsub)
     wq = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("vec_id"))

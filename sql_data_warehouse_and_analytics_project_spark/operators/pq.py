@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import write_local
 from .similarity import quantize
 
 _PQ_M = 8  # subspaces
@@ -251,23 +252,20 @@ def build_pq_index(emb: DataFrame, path: str, m_subs: int = _PQ_M, k: int = _PQ_
     table is what a 100 TB scan touches: ~1/32 of the raw bytes."""
     codebooks = train_pq_codebooks(emb, m_subs=m_subs, k=k)
     spark = emb.sparkSession
+    _write_codebook(spark, codebooks, path)
     if not codebooks:
-        emb.sparkSession.createDataFrame(
-            [], "vec_id int, label int, codes array<int>"
-        ).write.mode("overwrite").parquet(f"{path}/codes")
-        spark.createDataFrame([], "m int, code int, cw array<bigint>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/codebook")
+        write_local(spark, [], "vec_id int, label int, codes array<int>", f"{path}/codes")
         return
     pq_encode(emb, codebooks).write.mode("overwrite").parquet(f"{path}/codes")
+
+
+def _write_codebook(spark: SparkSession, codebooks: list, path: str) -> None:
     rows = [
         (m, c, [int(v) for v in codebooks[m][c]])
         for m in range(len(codebooks))
         for c in range(len(codebooks[m]))
     ]
-    spark.createDataFrame(rows, "m int, code int, cw array<bigint>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/codebook")
+    write_local(spark, rows, "m int, code int, cw array<bigint>", f"{path}/codebook")
 
 
 def load_pq_codebooks(spark: SparkSession, path: str) -> list[list[list[int]]]:
@@ -329,39 +327,23 @@ def build_ivfpq_index(
     on the SAME input frame; they are independent (codes quantize the
     vector itself, not the residual — residual PQ would couple them and
     break the engine-exact integer replay)."""
-    from .similarity import _assigned_frame, train_ivf_centroids
+    from .similarity import _assigned_frame, train_ivf_centroids, write_centroids
 
     centroids = train_ivf_centroids(emb, n_lists=n_lists, iters=iters)
     codebooks = train_pq_codebooks(emb, m_subs=m_subs, k=k)
     spark = emb.sparkSession
     if not centroids or not codebooks:
-        spark.createDataFrame(
-            [], "vec_id int, label int, codes array<int>, list_id int"
-        ).write.mode("overwrite").parquet(f"{path}/codes")
-        spark.createDataFrame([], "list_id int, centroid array<double>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
-        spark.createDataFrame([], "m int, code int, cw array<bigint>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/codebook")
-        spark.createDataFrame([], "list_id int, n_trained bigint").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/stats")
+        centroids = codebooks = []
+    write_centroids(spark, centroids, path)
+    _write_codebook(spark, codebooks, path)
+    if not centroids:
+        codes_ddl = "vec_id int, label int, codes array<int>, list_id int"
+        write_local(spark, [], codes_ddl, f"{path}/codes")
+        write_local(spark, [], "list_id int, n_trained bigint", f"{path}/stats")
         return
     assigned = _assigned_frame(emb, centroids)
     codes = pq_encode(assigned, codebooks, extra=("list_id",))
     codes.write.mode("overwrite").partitionBy("list_id").parquet(f"{path}/codes")
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "list_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    rows = [
-        (m, c, [int(v) for v in codebooks[m][c]])
-        for m in range(len(codebooks))
-        for c in range(len(codebooks[m]))
-    ]
-    spark.createDataFrame(rows, "m int, code int, cw array<bigint>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/codebook")
     spark.read.parquet(f"{path}/codes").groupBy("list_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_trained")
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")

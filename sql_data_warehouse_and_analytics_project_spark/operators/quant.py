@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import write_local
 from .similarity import _SCALE, quantize
 
 _LEVELS = 255  # int8 code range 0..255
@@ -235,7 +236,7 @@ def build_ivfsq_index(
     reductions multiply (pq.py's IVF-PQ is the 32x sibling; SQ8 trades
     bytes for zero codebook-training cost and near-lossless recall). Raw
     vectors stay in the source table for exact re-rank by id."""
-    from .similarity import _assigned_frame, train_ivf_centroids
+    from .similarity import _assigned_frame, train_ivf_centroids, write_centroids
 
     spark = emb.sparkSession
     centroids = train_ivf_centroids(emb, n_lists=n_lists, iters=iters)
@@ -243,18 +244,14 @@ def build_ivfsq_index(
         (r["pos"], int(r["mn"]), int(r["mx"])) for r in _dim_bounds(emb).collect()
     )
     if not centroids or not bounds:
-        spark.createDataFrame(
-            [], "vec_id bigint, label int, scode array<bigint>, list_id int"
-        ).write.mode("overwrite").parquet(f"{path}/codes")
-        spark.createDataFrame([], "list_id int, centroid array<double>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
-        spark.createDataFrame([], "pos int, mn bigint, rng bigint").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/calib")
-        spark.createDataFrame([], "list_id int, n_trained bigint").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/stats")
+        centroids = bounds = []
+    write_centroids(spark, centroids, path)
+    calib = [(p, m, x - m) for p, m, x in bounds]
+    write_local(spark, calib, "pos int, mn bigint, rng bigint", f"{path}/calib")
+    if not centroids:
+        codes_ddl = "vec_id bigint, label int, scode array<bigint>, list_id int"
+        write_local(spark, [], codes_ddl, f"{path}/codes")
+        write_local(spark, [], "list_id int, n_trained bigint", f"{path}/stats")
         return
     mn = [b[1] for b in bounds]
     rng = [b[2] - b[1] for b in bounds]
@@ -262,12 +259,6 @@ def build_ivfsq_index(
     sq_encode(assigned, mn, rng, extra=("list_id",)).write.mode(
         "overwrite"
     ).partitionBy("list_id").parquet(f"{path}/codes")
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "list_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [(p, m, x - m) for p, m, x in bounds], "pos int, mn bigint, rng bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/calib")
     spark.read.parquet(f"{path}/codes").groupBy("list_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_trained")
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import write_local
 from .text import SQL_TOKENS, tokens_col
 
 _CHUNK_TOKENS = 32  # window size
@@ -570,6 +571,13 @@ def build_inverted_index(
     ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
+def _write_stats(spark: SparkSession, path: str, n_docs: int, sum_dl: int, nb: int) -> None:
+    """The one-row ``stats`` sidecar, avgdl re-derived from (n_docs, sum_dl)."""
+    avgdl = float(sum_dl) / float(n_docs) if n_docs else 0.0
+    ddl = "n_docs bigint, sum_dl bigint, avgdl double, n_buckets int"
+    write_local(spark, [(n_docs, sum_dl, avgdl, nb)], ddl, f"{path}/stats")
+
+
 def append_inverted_index(docs_new: DataFrame, path: str) -> None:
     """Incrementally fold NEW documents into an existing persisted index —
     the maintenance leg that makes the index real at 100 TB, where a full
@@ -642,10 +650,7 @@ def append_inverted_index(docs_new: DataFrame, path: str) -> None:
 
     n_docs = int(st["n_docs"]) + int(new["n_docs"])
     sum_dl = int(st["sum_dl"]) + int(new["sum_dl"])
-    spark.createDataFrame(
-        [(n_docs, sum_dl, float(sum_dl) / float(n_docs), nb)],
-        "n_docs bigint, sum_dl bigint, avgdl double, n_buckets int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    _write_stats(spark, path, n_docs, sum_dl, nb)
     # append-after-delete is lossless: a re-ingested (previously deleted
     # and purged) doc must not stay shadowed by a leftover tombstone
     from . import tombstones
@@ -727,11 +732,7 @@ def repair_append_inverted_index(
         n_docs = doc_registry.select("doc_id").distinct().count()
     else:
         n_docs = int(post_tot["n_docs"])
-    avgdl = float(sum_dl) / float(n_docs) if n_docs else 0.0
-    spark.createDataFrame(
-        [(n_docs, sum_dl, avgdl, nb)],
-        "n_docs bigint, sum_dl bigint, avgdl double, n_buckets int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    _write_stats(spark, path, n_docs, sum_dl, nb)
 
 
 def compact_inverted_index(spark: SparkSession, path: str) -> None:
@@ -814,10 +815,7 @@ def purge_inverted_index(spark: SparkSession, path: str) -> int:
         F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
     ).first()
     n_docs, sum_dl = int(agg["n_docs"]), int(agg["sum_dl"])
-    spark.createDataFrame(
-        [(n_docs, sum_dl, float(sum_dl) / float(n_docs) if n_docs else 0.0, nb)],
-        "n_docs bigint, sum_dl bigint, avgdl double, n_buckets int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    _write_stats(spark, path, n_docs, sum_dl, nb)
     hdfs.delete(spark, f"{path}/{tombstones._SIDE}")
     return removed
 

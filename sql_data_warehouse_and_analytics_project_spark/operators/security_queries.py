@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import local_frame
 
 # Demo access mapping, analog of Security.UserCountryMapping
 # (ref: ddl_security.sql:52-58) at TPC-H's region grain.
@@ -54,7 +55,7 @@ def security_rls_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = tpch.load(spark, sf_dir, "customer")
     nation = tpch.load(spark, sf_dir, "nation")
     region = tpch.load(spark, sf_dir, "region")
-    mapping = spark.createDataFrame(USER_REGION_MAPPING, "user_name string, region_name string")
+    mapping = local_frame(spark, USER_REGION_MAPPING, "user_name string, region_name string")
 
     allowed_regions = mapping.filter(F.col("user_name") == "amr_analyst").select(
         F.col("region_name").alias("r_name")

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import local_frame, write_local
 from .text import SQL_NORM, normalize_content
 
 _SCALE = 10_000_000.0  # 1e7 fixed-point quantization
@@ -231,7 +232,8 @@ def assign_via_join(
     vector payload doesn't cross a redundant second shuffle join."""
     spark = vecs.sparkSession
     cent = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, [float(v) for v in c]) for i, c in enumerate(centroids)],
             "list_id int, centroid array<double>",
         )
@@ -365,6 +367,12 @@ def _assigned_frame(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     return emb.withColumn("list_id", assign_list_col(vcol, centroids))
 
 
+def write_centroids(spark: SparkSession, centroids: list, path: str) -> None:
+    """The ``<path>/centroids`` sidecar every IVF-family index keeps."""
+    ddl = "list_id int, centroid array<double>"
+    write_local(spark, list(enumerate(centroids)), ddl, f"{path}/centroids")
+
+
 def build_ivf_index(
     emb: DataFrame, path: str, n_lists: int | None = None, iters: int = 2
 ) -> list[list[float]]:
@@ -376,6 +384,7 @@ def build_ivf_index(
     lists (:func:`auto_n_lists`)."""
     centroids = train_ivf_centroids(emb, n_lists=n_lists, iters=iters)
     spark = emb.sparkSession
+    write_centroids(spark, centroids, path)
     if not centroids:
         # empty training input: write a schema-stable empty index so
         # ivf_search still answers (with no neighbors) instead of crashing —
@@ -386,18 +395,10 @@ def build_ivf_index(
         emb.withColumn("list_id", F.lit(None).cast("int")).limit(0).write.mode(
             "overwrite"
         ).parquet(f"{path}/vectors")
-        spark.createDataFrame([], "list_id int, centroid array<double>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
-        spark.createDataFrame([], "list_id int, n_trained bigint").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/stats")
+        write_local(spark, [], "list_id int, n_trained bigint", f"{path}/stats")
         return []
     assigned = _assigned_frame(emb, centroids)
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(f"{path}/vectors")
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "list_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     spark.read.parquet(f"{path}/vectors").groupBy("list_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_trained")
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
@@ -1048,9 +1049,7 @@ def semantic_dedup_pairs_kmeans(
     rather than DuckDB-oracled."""
     centroids = train_ivf_centroids(emb, n_lists=n_lists, iters=iters)
     if not centroids:
-        return emb.sparkSession.createDataFrame(
-            [], "vec_id_1 bigint, vec_id_2 bigint, cosine double"
-        )
+        return local_frame(emb.sparkSession, [], "vec_id_1 bigint, vec_id_2 bigint, cosine double")
     # quantize the trained float centroids onto the same fixed-point grid as
     # the vectors so distances are exact int64
     cent_lit = F.array(

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tpch
+from ..sources.local import local_frame
 
 # temp columns the as-of / interval helpers splice in; input frames must
 # not already carry them (silent wrong-column capture otherwise) and
@@ -252,7 +253,7 @@ ORDER BY band
 def temporal_range_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lineitem price banding through the broadcast range join."""
     li = tpch.load(spark, sf_dir, "lineitem").select("l_extendedprice")
-    bands = spark.createDataFrame(PRICE_BANDS, "band string, lo double, hi double")
+    bands = local_frame(spark, PRICE_BANDS, "band string, lo double, hi double")
     return (
         range_band_join(li, bands, F.col("l_extendedprice"))
         .groupBy("band")

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
+
 _SIDE = "tombstones"
 
 
@@ -46,9 +48,7 @@ def _side_path(path: str) -> str:
 def _ids_frame(spark: SparkSession, ids, id_col: str) -> DataFrame:
     if isinstance(ids, DataFrame):
         return ids.select(F.col(id_col).cast("bigint").alias(id_col)).distinct()
-    return spark.createDataFrame(
-        [(int(i),) for i in ids], f"{id_col} bigint"
-    ).distinct()
+    return local_frame(spark, [(int(i),) for i in ids], f"{id_col} bigint").distinct()
 
 
 def delete_ids(spark: SparkSession, path: str, ids, id_col: str) -> None:

@@ -35,8 +35,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.local import local_frame, write_local
+
 # Logical schema of the events stream (micros precision — the nanos in the
-# driver's parquet are downcast at the batch boundary, sources/tpch.py:36-43).
+# driver's parquet are downcast at the batch boundary, ``sources.tpch.load``).
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -487,7 +489,7 @@ def sink_stream_neardedup(
         if len(ids) <= 10_000:
             accepted = accepted.filter(F.col("doc_id").isin(ids))
         else:
-            idx_ids = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
+            idx_ids = local_frame(spark, [(i,) for i in ids], "doc_id bigint")
             accepted = accepted.join(idx_ids, "doc_id", "left_semi")
         new_texts = survivors.select(
             F.col("doc_id").alias("new_doc_id"), F.col("text").alias("_new_text")
@@ -1335,9 +1337,8 @@ def msprt_apply_batch(
     msprt_counts(batch).coalesce(1).write.mode("overwrite").parquet(
         f"{state_path}/msprt/batch_id={batch_id}"
     )
-    spark.createDataFrame(
-        [(str(lineage_id), int(batch_id))], "lineage_id string, batch_id bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(meta_dir)
+    meta = [(str(lineage_id), int(batch_id))]
+    write_local(spark, meta, "lineage_id string, batch_id bigint", meta_dir)
 
 
 def sink_stream_msprt_counts(events_stream: DataFrame, state_path: str, checkpoint: str):
@@ -1600,7 +1601,8 @@ def asof_attribution_apply_batch(
                     "batches (marker row written)",
                     stacklevel=2,
                 )
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [
                         (
                             int(batch_id),
@@ -1616,12 +1618,9 @@ def asof_attribution_apply_batch(
                 )
             return
     else:
-        clicks_st = spark.createDataFrame(
-            [], "user_id bigint, ts timestamp, c_fp bigint, src_id bigint"
-        )
-        pending_st = spark.createDataFrame(
-            [], "event_id bigint, user_id bigint, ts timestamp"
-        )
+        clicks_ddl = "user_id bigint, ts timestamp, c_fp bigint, src_id bigint"
+        clicks_st = local_frame(spark, [], clicks_ddl)
+        pending_st = local_frame(spark, [], "event_id bigint, user_id bigint, ts timestamp")
         wm_old = -(1 << 62)
 
     mx = batch.agg(F.max(F.unix_micros("ts")).alias("m")).collect()[0]["m"]
@@ -1664,10 +1663,9 @@ def asof_attribution_apply_batch(
     def _write_state(vdir: str) -> None:
         clicks_new.write.parquet(_os.path.join(vdir, "clicks"))
         pend_new.write.parquet(_os.path.join(vdir, "pending"))
-        spark.createDataFrame(
-            [(int(wm_new), int(batch_id), str(lineage_id))],
-            "wm_micros bigint, batch_id bigint, lineage_id string",
-        ).coalesce(1).write.parquet(_os.path.join(vdir, "meta"))
+        meta = [(int(wm_new), int(batch_id), str(lineage_id))]
+        ddl = "wm_micros bigint, batch_id bigint, lineage_id string"
+        write_local(spark, meta, ddl, _os.path.join(vdir, "meta"))
 
     _commit.publish(state_dir, _write_state, keep_versions=1)
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..sources.local import local_frame
 from .audit import RunContext
 
 GOLD_VIEWS = {
@@ -189,11 +190,10 @@ def catalog_exploration(ctx: RunContext) -> tuple[DataFrame, DataFrame]:
             tables.append((db, table))
             for f in ctx.catalog.read(name).schema.fields:
                 columns.append((db, table, f.name, f.dataType.simpleString()))
+    col_ddl = "table_schema string, table_name string, column_name string, data_type string"
     return (
-        spark.createDataFrame(tables, "table_schema string, table_name string"),
-        spark.createDataFrame(
-            columns, "table_schema string, table_name string, column_name string, data_type string"
-        ),
+        local_frame(spark, tables, "table_schema string, table_name string"),
+        local_frame(spark, columns, col_ddl),
     )
 
 

@@ -18,6 +18,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..sources.local import local_frame
 from .catalog import Catalog
 
 ETL_LOG = "audit.etl_log"
@@ -109,24 +110,24 @@ class RunContext:
         (ref: ddl_audit.sql:90-103 seeds watermarks + ERP etl_config)."""
         c = self.catalog
         if not c.exists(ETL_LOG):
-            c.overwrite(ETL_LOG, c.spark.createDataFrame([], _LOG_SCHEMA))
+            c.overwrite(ETL_LOG, local_frame(c.spark, [], _LOG_SCHEMA))
         if not c.exists(DQ_ISSUES):
-            c.overwrite(DQ_ISSUES, c.spark.createDataFrame([], _DQ_SCHEMA))
+            c.overwrite(DQ_ISSUES, local_frame(c.spark, [], _DQ_SCHEMA))
         if not c.exists(ACCESS_LOG):
-            c.overwrite(ACCESS_LOG, c.spark.createDataFrame([], _ACCESS_SCHEMA))
+            c.overwrite(ACCESS_LOG, local_frame(c.spark, [], _ACCESS_SCHEMA))
         if not c.exists(WATERMARKS):
             seed = [
                 ("silver.crm_cust_info", WATERMARK_EPOCH, "cst_create_date"),
                 ("silver.crm_sales_details", WATERMARK_EPOCH, "sls_order_dt"),
             ]
-            c.overwrite(WATERMARKS, c.spark.createDataFrame(seed, _WM_SCHEMA))
+            c.overwrite(WATERMARKS, local_frame(c.spark, seed, _WM_SCHEMA))
         if not c.exists(ETL_CONFIG):
             seed_cfg = [
                 (1, "bronze.erp_loc_a101", "silver.erp_loc_a101", "FULL", 1, 10),
                 (2, "bronze.erp_cust_az12", "silver.erp_cust_az12", "FULL", 1, 10),
                 (3, "bronze.erp_px_cat_g1v2", "silver.erp_px_cat_g1v2", "FULL", 1, 10),
             ]
-            c.overwrite(ETL_CONFIG, c.spark.createDataFrame(seed_cfg, _CONFIG_SCHEMA))
+            c.overwrite(ETL_CONFIG, local_frame(c.spark, seed_cfg, _CONFIG_SCHEMA))
 
     def new_batch(self) -> int:
         """Reserve a batch id = max(batch_id)+1 (SCOPE_IDENTITY analog,
@@ -166,13 +167,13 @@ class RunContext:
         """Write buffered log/DQ/access rows in batched appends (once per run)."""
         spark = self.catalog.spark
         if self._log_rows:
-            self.catalog.append(ETL_LOG, spark.createDataFrame(self._log_rows, _LOG_SCHEMA))
+            self.catalog.append(ETL_LOG, local_frame(spark, self._log_rows, _LOG_SCHEMA))
             self._log_rows = []
         if self._dq_rows:
-            self.catalog.append(DQ_ISSUES, spark.createDataFrame(self._dq_rows, _DQ_SCHEMA))
+            self.catalog.append(DQ_ISSUES, local_frame(spark, self._dq_rows, _DQ_SCHEMA))
             self._dq_rows = []
         if self._access_rows:
-            self.catalog.append(ACCESS_LOG, spark.createDataFrame(self._access_rows, _ACCESS_SCHEMA))
+            self.catalog.append(ACCESS_LOG, local_frame(spark, self._access_rows, _ACCESS_SCHEMA))
             self._access_rows = []
 
     def dq_compare(self, table: str, check: str, expected, actual, desc: str, layer: str) -> bool:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.local import range_offsets
 from .audit import RunContext
 
 DIM_CUSTOMERS_COLS = [
@@ -44,34 +45,19 @@ def surrogate_key(df: DataFrame, order_col: str, mode: str = "parity") -> DataFr
     """Add ``_sk`` = deterministic 1-based dense row numbering by ``order_col``.
 
     parity: ROW_NUMBER over a global window (ref: proc_load_gold.sql:54,109).
-    scale:  repartitionByRange(order_col) → per-partition row_number →
-            cumulative partition offsets joined back (broadcast, tiny).
+    scale:  ``range_offsets`` on order_col → per-partition row_number +
+            the broadcast count of earlier partitions.
     Both orderings break ties identically only when order_col is unique —
     which the silver PKs guarantee (ref: ddl_silver.sql:32).
     """
     if mode == "parity":
         return df.withColumn("_sk", F.row_number().over(Window.orderBy(order_col)))
-    ranged = df.repartitionByRange(F.col(order_col)).withColumn("_pid", F.spark_partition_id())
-    local = ranged.withColumn(
-        "_local", F.row_number().over(Window.partitionBy("_pid").orderBy(order_col))
-    )
-    # Per-partition offsets computed zipWithIndex-style: one job collects the
-    # per-partition counts (≤ #partitions rows), the running sum happens on
-    # the driver, and the offsets rejoin by broadcast. Keeping the cumsum off
-    # the cluster leaves NO single-partition Exchange anywhere in the plan
-    # (a global window over the counts — r01 — did, tiny but flag-worthy).
-    counts = sorted(
-        (r["_pid"], r["count"]) for r in ranged.groupBy("_pid").count().collect()
-    )
-    offsets, running = [], 0
-    for pid, n in counts:
-        offsets.append((pid, running))
-        running += n
-    off_df = df.sparkSession.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
-    return (
-        local.join(F.broadcast(off_df), "_pid")
-        .withColumn("_sk", (F.col("_local") + F.col("_off")).cast("int"))
-        .drop("_pid", "_local", "_off")
+    # No single-partition Exchange anywhere in the plan (a global window
+    # over the per-partition counts — r01 — had one, tiny but flag-worthy).
+    ranged, _ = range_offsets(df, [F.col(order_col)], {"n": F.count(F.lit(1))})
+    local = F.row_number().over(Window.partitionBy("_pid").orderBy(order_col))
+    return ranged.withColumn("_sk", (local + F.col("_off_n")).cast("int")).drop(
+        "_pid", "_off_n"
     )
 
 

@@ -66,9 +66,10 @@ def refresh_rollup(
     rows. The union frame is materialized into the next VERSION dir before
     the pointer flips, so the read-own-input hazard of overwriting a
     parquet path being read does not arise."""
-    stored = spark.read.parquet(commit.resolve(path))
+    part = _partial(delta, keys, measure)
+    stored = spark.read.schema(part.schema).parquet(commit.resolve(path))
     merged = (
-        stored.unionByName(_partial(delta, keys, measure))
+        stored.unionByName(part)
         .groupBy(*keys)
         .agg(
             F.sum("m_sum").alias("m_sum"),
@@ -80,14 +81,18 @@ def refresh_rollup(
     _swap_in(merged, path)
 
 
-def read_rollup(spark: SparkSession, path: str, keys: list[str]) -> DataFrame:
+def read_rollup(
+    spark: SparkSession, path: str, source: DataFrame, keys: list[str], measure: str
+) -> DataFrame:
     """The query-facing view: mergeable components plus the derived avg,
-    cast to the driver-hashable double surface."""
+    cast to the driver-hashable double surface. The state is read with the
+    schema of ``source``'s component frame, not an inferred one."""
     # avg divides the two DOUBLE surfaces (not decimal/bigint) because
     # decimal-division result scale differs between engines
     total = F.col("m_sum").cast("double")
     return (
-        spark.read.parquet(commit.resolve(path))
+        spark.read.schema(_partial(source, keys, measure).schema)
+        .parquet(commit.resolve(path))
         .select(
             *keys,
             total.alias("total"),
@@ -136,4 +141,5 @@ def warehouse_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_rollup(li.filter(part == 0), keys, measure, path)
         refresh_rollup(spark, path, li.filter(part == 1), keys, measure)
         refresh_rollup(spark, path, li.filter(part == 2), keys, measure)
-        return read_rollup(spark, path, keys).localCheckpoint(eager=True).orderBy(*keys)
+        out = read_rollup(spark, path, li, keys, measure).localCheckpoint(eager=True)
+        return out.orderBy(*keys)

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .audit import RunContext
 
 # SQL Server's default() mask renders numerics as 0 (ref: ddl_security.sql:107)
@@ -158,7 +159,8 @@ def classified_columns(ctx: RunContext, table: str) -> dict[str, dict[str, str]]
 
 
 def user_country_mapping(ctx: RunContext, rows=None) -> DataFrame:
-    return ctx.catalog.spark.createDataFrame(rows or DEFAULT_USER_COUNTRY, "UserName string, Country string")
+    rows = rows or DEFAULT_USER_COUNTRY
+    return local_frame(ctx.catalog.spark, rows, "UserName string, Country string")
 
 
 def rls_fact_sales(ctx: RunContext, user: str, mapping: DataFrame | None = None) -> DataFrame:

@@ -150,7 +150,7 @@ def test_rollup_refresh_crash_keeps_old_state(spark, tmp_path, monkeypatch):
     part = F.col("l_orderkey") % 2
 
     incremental.build_rollup(li.filter(part == 0), keys, measure, path)
-    before = [tuple(r) for r in incremental.read_rollup(spark, path, keys).collect()]
+    before = [tuple(r) for r in incremental.read_rollup(spark, path, li, keys, measure).collect()]
 
     def no_flip(target, version):
         raise Boom("killed at the commit point")
@@ -160,14 +160,16 @@ def test_rollup_refresh_crash_keeps_old_state(spark, tmp_path, monkeypatch):
         incremental.refresh_rollup(spark, path, li.filter(part == 1), keys, measure)
     monkeypatch.undo()
 
-    after_crash = [tuple(r) for r in incremental.read_rollup(spark, path, keys).collect()]
+    after_crash = [
+        tuple(r) for r in incremental.read_rollup(spark, path, li, keys, measure).collect()
+    ]
     assert after_crash == before  # reader unaffected by the dead refresh
 
     incremental.refresh_rollup(spark, path, li.filter(part == 1), keys, measure)
     p_full = str(tmp_path / "full")
     incremental.build_rollup(li, keys, measure, p_full)
-    got = [tuple(r) for r in incremental.read_rollup(spark, path, keys).collect()]
-    want = [tuple(r) for r in incremental.read_rollup(spark, p_full, keys).collect()]
+    got = [tuple(r) for r in incremental.read_rollup(spark, path, li, keys, measure).collect()]
+    want = [tuple(r) for r in incremental.read_rollup(spark, p_full, li, keys, measure).collect()]
     assert got == want
     assert sorted(os.listdir(path)) == [
         commit.POINTER,

@@ -130,3 +130,23 @@ def test_cache_lifetimes_go_through_materialize():
             if any(t in line for t in (".cache()", ".persist(", ".unpersist(")):
                 offenders.append(f"{rel}:{n}: {line.strip()}")
     assert not offenders, offenders
+
+
+def test_driver_rows_go_through_local_frame():
+    """One way for driver-side rows to enter a plan: ``createDataFrame(``
+    appears only in ``sources/local.py``, whose ``local_frame`` builds a
+    JVM ``LocalRelation`` instead of a Python-RDD scan. Comment lines are
+    exempt."""
+    import pathlib
+
+    import sql_data_warehouse_and_analytics_project_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root).as_posix()}:{n}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        if path.relative_to(root).as_posix() != "sources/local.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "createDataFrame(" in line and not line.lstrip().startswith("#")
+    ]
+    assert not offenders, offenders

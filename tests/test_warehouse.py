@@ -599,8 +599,8 @@ def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
 
     incremental.build_rollup(li, keys, measure, p_full)
 
-    got = [tuple(r) for r in incremental.read_rollup(spark, p_inc, keys).collect()]
-    want = [tuple(r) for r in incremental.read_rollup(spark, p_full, keys).collect()]
+    got = [tuple(r) for r in incremental.read_rollup(spark, p_inc, li, keys, measure).collect()]
+    want = [tuple(r) for r in incremental.read_rollup(spark, p_full, li, keys, measure).collect()]
     assert got == want and len(got) > 0
 
     # a delta with a brand-new key shows up after refresh
@@ -611,7 +611,7 @@ def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
     incremental.refresh_rollup(spark, p_inc, extra, keys, measure)
     z = [
         r
-        for r in incremental.read_rollup(spark, p_inc, keys).collect()
+        for r in incremental.read_rollup(spark, p_inc, li, keys, measure).collect()
         if r["l_returnflag"] == "Z"
     ]
     assert len(z) == 1 and z[0]["n_rows"] == 2 and z[0]["total"] == 12.0
