@@ -1,7 +1,8 @@
-"""Query-lifetime caches: pipelines cache with :func:`cached`, and the
-query that runs them owns the release through one :func:`released` scope.
-The scope lives in a ContextVar, so the streaming sink's ``foreachBatch``
-thread gets its own."""
+"""Query-lifetime caches and lineage cuts: pipelines cache with
+:func:`cached`, and the query that runs them owns the release through one
+:func:`released` scope; every lineage cut goes through :func:`checkpoint`,
+which names its job. The scope lives in a ContextVar, so the streaming
+sink's ``foreachBatch`` thread gets its own."""
 
 from __future__ import annotations
 
@@ -39,10 +40,53 @@ def cached(df: DataFrame) -> DataFrame:
     return df
 
 
-def materialized(build: Callable[[], DataFrame], order: list[str] | None = None) -> DataFrame:
+def checkpoint(df: DataFrame, name: str) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` with its job described as
+    ``name``, a fixed ``"<pipeline>:<step>"`` string, so every lineage cut
+    is attributable to a pipeline step. The thread's previous job
+    description is restored afterwards and its job group is left alone.
+
+    Why an eager checkpoint and not ``.cache()``: a cache orders nothing —
+    the consumer stages of one job launch concurrently and each computes a
+    still-unmaterialized cache on its own, re-running the upstream (Python
+    decode, tokenize and hash passes included) once per branch. The eager
+    job runs the upstream exactly once, materializing any upstream cache
+    first, and every consumer reads the blocks. A cut is also the only
+    safe way to consume a frame whose plan reads a path the next
+    statement writes: Spark invalidates and recomputes a cached plan when
+    its source path is written, a checkpoint keeps the pre-write rows."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def missing_rows(df: DataFrame, path: str, key: str) -> DataFrame | None:
+    """The rows of ``df`` whose ``key`` the parquet table at ``path`` does
+    not hold yet, for a caller that appends them there: ``df`` itself while
+    the table does not exist, otherwise the anti-join against the stored
+    keys, cut by :func:`checkpoint` because its plan reads the path the
+    append writes. ``None`` when no row is missing."""
+    from .warehouse.hdfs import exists
+
+    spark = df.sparkSession
+    if exists(spark, path):
+        stored = spark.read.parquet(path).select(key).distinct()
+        table = path.rstrip("/").rsplit("/", 1)[-1]
+        df = checkpoint(df.join(stored, key, "left_anti"), f"missing_rows:{table}")
+    return None if df.isEmpty() else df
+
+
+def materialized(
+    build: Callable[[], DataFrame], name: str, order: list[str] | None = None
+) -> DataFrame:
     """Registry-call cache discipline: run the pipeline ``build`` returns
-    NOW — eagerly localCheckpoint the small result frame — then free every
-    cache it registered, so no cached frame outlives the query call. The
+    NOW — an eager :func:`checkpoint` of the small result frame, its job
+    named after the registry key ``name`` — then free every cache it
+    registered, so no cached frame outlives the query call. The
     checkpoint holds only the result rows (near-dup pair sets, tiny by
     LSH/cap construction) and its blocks are released by Spark's
     ContextCleaner once the returned frame is dropped. Total work is
@@ -55,5 +99,5 @@ def materialized(build: Callable[[], DataFrame], order: list[str] | None = None)
     (bench's count()) never pays on the lazy path, where Catalyst elides
     the sort. Sorting the checkpointed rows is trivial at result size."""
     with released():
-        out = build().localCheckpoint(eager=True)
+        out = checkpoint(build(), f"{name}:result")
     return out.orderBy(*order) if order else out

@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint
 from ..registry import query
 from ..sources import tpch
 from ..sources.local import local_frame, range_offsets
@@ -111,7 +112,7 @@ def _value_cumsums(counts: DataFrame, cols: list[str]):
     # each executed the full upstream collapse otherwise — one corpus
     # pass wasted per fold (profiled: two identical 6-CPU-s map stages
     # under olap_abc_parts).
-    counts = counts.localCheckpoint(eager=True)
+    counts = checkpoint(counts, "value_cumsums:counts")
     ranged, totals = range_offsets(
         counts, [F.col("v")], {c: F.sum(c) for c in cols}, "decimal(38,0)"
     )

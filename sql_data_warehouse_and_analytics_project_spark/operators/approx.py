@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint
 from ..registry import query
 from ..sources import tpch
 from ..sources.local import local_frame
@@ -997,7 +998,7 @@ def active_users_sketch(events: DataFrame) -> DataFrame:
     # launch concurrently and would each re-run the md5-hash + register
     # aggregation over the full events scan; the eager checkpoint bounds
     # that to one pass (registers are KB-scale: days × 2^p rows max)
-    regs = _day_regs(ev).localCheckpoint(eager=True)
+    regs = checkpoint(_day_regs(ev), "active_users_sketch:day_registers")
     wau = _window_estimate(regs, 7, "wau_hll")
     mau = _window_estimate(regs, 28, "mau_hll")
     return (

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import SparkSession
 
+from ..materialize import checkpoint
 from ..registry import query
 from ..sources import tpch
 from .text import normalize_content
@@ -179,11 +180,11 @@ def train_bpe(
     vocabulary costs ~n_merges/batch driver round-trips instead of 32K
     (parity with one-at-a-time training is asserted bit-for-bit by
     tests/test_bpe.py against the pure-Python reference)."""
-    words = (
+    words = checkpoint(
         word_counts(docs, text_col)
         .select("word", "count", _init_symbols(F.col("word")).alias("symbols"))
-        .repartition(4)
-        .localCheckpoint()
+        .repartition(4),
+        "bpe:words",
     )
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:
@@ -203,7 +204,7 @@ def train_bpe(
         for left, right in batch:  # disjoint ⇒ order-free; keep rank order anyway
             sym = _merge_pair(sym, left, right)
         merges.extend(batch)
-        words = words.withColumn("symbols", sym).localCheckpoint()
+        words = checkpoint(words.withColumn("symbols", sym), "bpe:merge_round")
     return merges, words
 
 
@@ -300,10 +301,9 @@ def train_bpe_fixed(docs: DataFrame, n_merges: int = _FIXED_MERGES) -> DataFrame
     if the corpus exhausts mergeable pairs early, which the unrolled SQL
     could not represent). Returns the final (word, count, pieces)
     segmentation, pieces space-joined, ordered by word."""
-    words = (
-        word_counts(docs)
-        .select("word", "count", _init_symbols(F.col("word")).alias("symbols"))
-        .localCheckpoint()
+    words = checkpoint(
+        word_counts(docs).select("word", "count", _init_symbols(F.col("word")).alias("symbols")),
+        "bpe_fixed:words",
     )
     for r in range(n_merges):
         top = (
@@ -320,9 +320,12 @@ def train_bpe_fixed(docs: DataFrame, n_merges: int = _FIXED_MERGES) -> DataFrame
             raise ValueError(
                 f"corpus exhausted mergeable pairs at round {r} < {n_merges}"
             )
-        words = words.withColumn(
-            "symbols", _merge_pair(F.col("symbols"), top[0]["l"], top[0]["r"])
-        ).localCheckpoint()
+        words = checkpoint(
+            words.withColumn(
+                "symbols", _merge_pair(F.col("symbols"), top[0]["l"], top[0]["r"])
+            ),
+            "bpe_fixed:merge_round",
+        )
     return words.select(
         "word",
         "count",

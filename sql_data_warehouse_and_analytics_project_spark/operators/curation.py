@@ -26,7 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import released
+from ..materialize import checkpoint, released
 from ..sources import tpch
 from ..sources.local import local_frame
 from . import dedup
@@ -59,15 +59,14 @@ def _near_dedup_fixpoint(survivors: DataFrame) -> tuple[DataFrame, int]:
             pairs = dedup.minhash_lsh_pairs(survivors.select("doc_id", "lang", "text"))
             # checkpoint losers WHILE the LSH caches are warm: counting after
             # the release would re-run the whole pipeline uncached
-            losers = (
-                pairs.select(F.col("doc_id_2").alias("doc_id"))
-                .distinct()
-                .localCheckpoint(eager=True)
+            losers = checkpoint(
+                pairs.select(F.col("doc_id_2").alias("doc_id")).distinct(),
+                "curation:near_dup_losers",
             )
             if losers.count() == 0:
                 break
-            survivors = survivors.join(losers, "doc_id", "left_anti").localCheckpoint(
-                eager=True
+            survivors = checkpoint(
+                survivors.join(losers, "doc_id", "left_anti"), "curation:near_dup_survivors"
             )
     return survivors, n_passes
 
@@ -119,13 +118,15 @@ def curate_documents(
     # the driver heap just RENDERING its AQE plan string). A production run
     # checkpoints stage outputs to the lake for the same two reasons;
     # localCheckpoint is the in-session equivalent.
-    def _stage(new: DataFrame) -> tuple[DataFrame, int]:
-        new = new.localCheckpoint(eager=True)
+    def _stage(new: DataFrame, name: str) -> tuple[DataFrame, int]:
+        new = checkpoint(new, name)
         return new, new.count()
 
     # 1. quality gate
     keep_ids = text_quality_gopher(spark, sf_dir).filter(F.col("keep")).select("doc_id")
-    survivors, n_quality = _stage(docs.join(keep_ids, "doc_id", "left_semi"))
+    survivors, n_quality = _stage(
+        docs.join(keep_ids, "doc_id", "left_semi"), "curation:quality"
+    )
 
     # 2. decontamination: drop flagged docs AND the eval slice itself
     # (the slice predicate is text.is_eval_doc — the SAME definition the
@@ -134,7 +135,8 @@ def curate_documents(
     survivors, n_decontam = _stage(
         survivors.filter(~is_eval_doc(F.col("doc_id"))).join(
             contaminated, "doc_id", "left_anti"
-        )
+        ),
+        "curation:decontaminated",
     )
 
     # 3. exact dedup: keep the lowest doc_id per normalized content hash
@@ -146,7 +148,9 @@ def curate_documents(
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    survivors, n_exact = _stage(survivors.join(keeper, "doc_id", "left_semi"))
+    survivors, n_exact = _stage(
+        survivors.join(keeper, "doc_id", "left_semi"), "curation:exact_dedup"
+    )
 
     # 4. near dedup to a fixpoint
     survivors, n_near_passes = _near_dedup_fixpoint(survivors)
@@ -331,16 +335,15 @@ def curation_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tpch.load(spark, sf_dir, "documents")
     docs = dedup._spread_rows(docs)
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True)
-
     kept = text_quality_gopher(spark, sf_dir).filter(F.col("keep")).select("doc_id")
-    s1 = _ckpt(docs.join(kept, "doc_id", "left_semi").select("doc_id", "lang", "text"))
+    s1 = checkpoint(
+        docs.join(kept, "doc_id", "left_semi").select("doc_id", "lang", "text"),
+        "curation:quality",
+    )
     contaminated = text_decontaminate(spark, sf_dir).select("doc_id")
-    s2 = _ckpt(
-        s1.filter(~is_eval_doc(F.col("doc_id"))).join(
-            contaminated, "doc_id", "left_anti"
-        )
+    s2 = checkpoint(
+        s1.filter(~is_eval_doc(F.col("doc_id"))).join(contaminated, "doc_id", "left_anti"),
+        "curation:decontaminated",
     )
     keeper = (
         s2.select(F.sha2(normalize_content(F.col("text")), 256).alias("h"), "doc_id")
@@ -348,7 +351,7 @@ def curation_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    s3 = _ckpt(s2.join(keeper, "doc_id", "left_semi"))
+    s3 = checkpoint(s2.join(keeper, "doc_id", "left_semi"), "curation:exact_dedup")
     survivors, _ = _near_dedup_fixpoint(s3)
 
     def _flag(ids: DataFrame, name: str):

@@ -29,7 +29,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import cached, materialized, released
+from ..materialize import cached, checkpoint, materialized, missing_rows, released
 from ..registry import query
 from ..sources import tpch
 from ..sources.local import local_frame
@@ -285,7 +285,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleanly. The registry call materializes eagerly and releases the
     internal shingle cache before returning (see ``materialize.materialized``)."""
     return materialized(
-        lambda: ngram_jaccard_pairs(_docs(spark, sf_dir)), order=["doc_id_1", "doc_id_2"]
+        lambda: ngram_jaccard_pairs(_docs(spark, sf_dir)),
+        "dedup_ngram_jaccard",
+        order=["doc_id_1", "doc_id_2"],
     )
 
 
@@ -383,14 +385,13 @@ def token_dedup_members(docs: DataFrame) -> DataFrame:
     # no filter at all: the mapping's doc_ids are exactly the >=3-token
     # docs, so the inner join drops short docs for free and the text scan
     # never tokenizes.
-    narrow = (
+    narrow = checkpoint(
         docs.select(
             "doc_id",
             F.when(F.size(toks) >= 3, F.md5(F.concat_ws(" ", toks))).alias("tkey"),
-        )
-        .localCheckpoint(eager=True)
-        .filter(F.col("tkey").isNotNull())
-    )
+        ),
+        "token_dedup:keys",
+    ).filter(F.col("tkey").isNotNull())
     reps = narrow.groupBy("tkey").agg(F.min("doc_id").alias("rep_id"))
     mapping = narrow.join(reps, "tkey").select("doc_id", "rep_id")
     return docs.select("doc_id", "lang", "text").join(mapping, "doc_id")
@@ -577,7 +578,7 @@ def _rep_shingle_sigs(reps: DataFrame) -> DataFrame:
     whole-stage codegen does not share subexpressions across the
     Filter/Project boundary (verified on the executed plan). The hash chain
     is exactly :func:`minhash_signatures`'s (md5-derived, oracle-replayed)."""
-    return (
+    return checkpoint(
         reps.select("doc_id", tokens_col(F.col("text")).alias("_t"))
         .select("doc_id", shingles_from(F.col("_t")).alias("_sh"))
         .select(
@@ -587,8 +588,8 @@ def _rep_shingle_sigs(reps: DataFrame) -> DataFrame:
                 "_base"
             ),
         )
-        .select("doc_id", "_sh", *_minhash_sig_cols())
-        .localCheckpoint(eager=True)
+        .select("doc_id", "_sh", *_minhash_sig_cols()),
+        "minhash:rep_shingles",
     )
 
 
@@ -735,7 +736,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes eagerly and releases the internal caches before
     returning (see ``materialize.materialized``)."""
     return materialized(
-        lambda: minhash_lsh_pairs(_docs(spark, sf_dir), _sorted=False),
+        lambda: minhash_lsh_pairs(_docs(spark, sf_dir)),
+        "dedup_minhash_lsh",
         order=["doc_id_1", "doc_id_2"],
     )
 
@@ -791,7 +793,7 @@ def _candidate_shared_counts(
     unguarded+ckpt 4.21 s, THIS form 4.88 s, r14 window-df 6.11 s —
     the protection now costs ~0.65 s instead of ~1.9 s, output
     bit-identical across all three."""
-    sh_c = sh_c.localCheckpoint(eager=True)
+    sh_c = checkpoint(sh_c, "shingle_overlap:candidate_shingles")
     hot = F.broadcast(
         sh_c.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -882,15 +884,10 @@ def _candidate_shared_arrays(
             .filter(F.size("_t") >= 3)
             .select("doc_id", shingles_from(F.col("_t")).alias("_sh"))
         )
-    arr = (
-        src.select("doc_id", "_sh", F.size("_sh").cast("bigint").alias("_n"))
-        # two consumers (the pair join's both sides) whose stages launch
-        # concurrently — an EAGER checkpoint runs the candidate-doc shingle
-        # projection exactly once AND sequentially materializes the
-        # upstream mem/candidates caches before the final join job reads
-        # them from several branches at once (a lazy .cache() here would
-        # let those branches race and duplicate the signature pipeline)
-        .localCheckpoint(eager=True)
+    # read by both sides of the pair join
+    arr = checkpoint(
+        src.select("doc_id", "_sh", F.size("_sh").cast("bigint").alias("_n")),
+        "minhash:candidate_shingles",
     )
     a1 = arr.select(
         F.col("doc_id").alias("doc_id_1"),
@@ -924,18 +921,13 @@ def _rep_minhash_frames(reps: DataFrame) -> tuple[DataFrame, DataFrame]:
     several times, and a localCheckpoint does NOT column-prune — without the
     copy every downstream scan deserializes the full shingle arrays it never
     uses (profiled: the band-side stages tripled their executor CPU reading
-    the wide blocks). The eager checkpoints also materialize any upstream
-    cache sequentially before the concurrent downstream branches read it."""
+    the wide blocks)."""
     sh = _rep_shingle_sigs(reps)
-    sigs = sh.drop("_sh").localCheckpoint(eager=True)
+    sigs = checkpoint(sh.drop("_sh"), "minhash:rep_signatures")
     return sh, sigs
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = _NEARDUP_THRESHOLD,
-    _sorted: bool = True,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = _NEARDUP_THRESHOLD) -> DataFrame:
     """The full MinHash/LSH near-dup pipeline over an arbitrary documents
     frame (columns: doc_id, lang, text). See :func:`dedup_minhash_lsh`.
 
@@ -956,13 +948,12 @@ def minhash_lsh_pairs(
             F.col("jaccard") >= threshold
         )
 
-    out = _banded_pairs(
+    return _banded_pairs(
         minhash_band_table(sigs),
         mem.select("doc_id", "rep_id"),
         intra=F.lit(1.0).alias("jaccard"),
         verify=jaccard,
     )
-    return out.orderBy("doc_id_1", "doc_id_2") if _sorted else out
 
 
 # --- MinHash estimator-quality audit (r13) ----------------------------------
@@ -1085,7 +1076,9 @@ def dedup_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash estimator-quality audit over the LSH candidate population —
     exact ppm error between signature-agreement Jaccard and exact shingle
     Jaccard, one summary row."""
-    return materialized(lambda: minhash_estimator_error(_docs(spark, sf_dir)))
+    return materialized(
+        lambda: minhash_estimator_error(_docs(spark, sf_dir)), "dedup_minhash_error"
+    )
 
 
 # --- SimHash ---------------------------------------------------------------
@@ -1215,22 +1208,23 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry call materializes eagerly and releases the internal caches
     before returning (see ``materialize.materialized``)."""
     return materialized(
-        lambda: simhash_pairs(_docs(spark, sf_dir), _sorted=False),
+        lambda: simhash_pairs(_docs(spark, sf_dir)),
+        "dedup_simhash",
         order=["doc_id_1", "doc_id_2"],
     )
 
 
-def simhash_pairs(docs: DataFrame, _sorted: bool = True) -> DataFrame:
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """The full SimHash near-dup pipeline over an arbitrary documents frame
     (columns: doc_id, lang, text). See :func:`dedup_simhash`. The members
     cache is released by the caller's ``materialize.released`` scope."""
     mem = cached(token_dedup_members(docs))
     reps = mem.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id", "lang", "text")
-    # EAGER checkpoint: the 48-bit vote projection (the pipeline's CPU
-    # peak) runs once in its own job and materializes the mem cache first;
-    # a lazy .cache() lets concurrent consumer stages each recompute it
-    sigs = simhash_signatures(reps, spread=False, prefiltered=True).localCheckpoint(eager=True)
-    out = _hamming_pairs(
+    # the 48-bit vote projection is the pipeline's CPU peak: run it once
+    sigs = checkpoint(
+        simhash_signatures(reps, spread=False, prefiltered=True), "simhash:signatures"
+    )
+    return _hamming_pairs(
         sigs,
         mem.select("doc_id", "rep_id"),
         "simhash",
@@ -1238,7 +1232,6 @@ def simhash_pairs(docs: DataFrame, _sorted: bool = True) -> DataFrame:
         _SIMHASH_BAND_BITS,
         _SIMHASH_HAMMING_MAX,
     )
-    return out.orderBy("doc_id_1", "doc_id_2") if _sorted else out
 
 
 # --- Near-dup connected components ----------------------------------------
@@ -1287,17 +1280,17 @@ def connected_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
     pipeline's deterministic survivor rule). Driver-looped min-label
     propagation with a convergence count per round — the loop moves one
     scalar per round to the driver, never data."""
-    edges = (
+    edges = checkpoint(
         pairs.select(F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b"))
         .unionAll(pairs.select(F.col("doc_id_2").alias("a"), F.col("doc_id_1").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "components:edges",
     )
-    labels = (
+    labels = checkpoint(
         edges.select(F.col("a").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("lab"))
-        .localCheckpoint(eager=True)
+        .select("node", F.col("node").alias("lab")),
+        "components:labels",
     )
     for _ in range(max_rounds):
         nbr_min = (
@@ -1305,14 +1298,13 @@ def connected_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
             .groupBy("a")
             .agg(F.min("lab").alias("nbr_lab"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.a, "left")
-            .select(
+        new_labels = checkpoint(
+            labels.join(nbr_min, labels.node == nbr_min.a, "left").select(
                 "node",
                 F.least(F.col("lab"), F.coalesce("nbr_lab", F.col("lab"))).alias("lab"),
                 (F.coalesce("nbr_lab", F.col("lab")) < F.col("lab")).alias("_chg"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "components:round",
         )
         changed = new_labels.filter(F.col("_chg")).count()
         labels = new_labels.drop("_chg")
@@ -1475,7 +1467,8 @@ def dedup_component_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     density, triangle count and clustering coefficient — the
     transitive-closure-overreach detector (chain vs clique)."""
     return materialized(
-        lambda: component_cohesion(minhash_lsh_pairs(_docs(spark, sf_dir), _sorted=False)),
+        lambda: component_cohesion(minhash_lsh_pairs(_docs(spark, sf_dir))),
+        "dedup_component_cohesion",
         order=["component_id"],
     )
 
@@ -1541,7 +1534,8 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs rolled up by (source_a, source_b)."""
     docs = _docs(spark, sf_dir)
     return materialized(
-        lambda: cross_source_matrix(minhash_lsh_pairs(docs, _sorted=False), docs),
+        lambda: cross_source_matrix(minhash_lsh_pairs(docs), docs),
+        "dedup_cross_source_matrix",
         order=["source_a", "source_b"],
     )
 
@@ -1635,7 +1629,8 @@ def split_leakage_free(spark: SparkSession, sf_dir: str) -> DataFrame:
     has a near-duplicate in train."""
     docs = _docs(spark, sf_dir)
     return materialized(
-        lambda: leakage_free_split(docs, minhash_lsh_pairs(docs, _sorted=False)),
+        lambda: leakage_free_split(docs, minhash_lsh_pairs(docs)),
+        "split_leakage_free",
         order=["doc_id"],
     )
 
@@ -1654,7 +1649,7 @@ def dedup_savings_report(docs: DataFrame) -> DataFrame:
     """One row (n_docs, n_in_components, n_dropped, chars_total,
     chars_dropped, pct_chars_dropped) for the MinHash/LSH near-dedup
     pass over ``docs``."""
-    pairs = minhash_lsh_pairs(docs, _sorted=False)
+    pairs = minhash_lsh_pairs(docs)
     comp = connected_components(pairs).select("doc_id", "is_survivor")
     lens = docs.select("doc_id", F.length("text").cast("bigint").alias("chars"))
     labeled = lens.join(comp, "doc_id", "left")
@@ -1717,7 +1712,7 @@ FROM labeled
 def dedup_savings_report_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation headline number: documents and character mass removed
     by near-dedup (min-id survivor rule), one summary row."""
-    return materialized(lambda: dedup_savings_report(_docs(spark, sf_dir)))
+    return materialized(lambda: dedup_savings_report(_docs(spark, sf_dir)), "dedup_savings_report")
 
 
 # --- split-leakage audit (r13) ----------------------------------------------
@@ -1736,7 +1731,7 @@ def split_leakage_audit(docs: DataFrame) -> DataFrame:
     """One row (n_pairs, naive_cross_pairs, component_cross_pairs): how
     many near-dup pairs straddle splits under a per-doc hash split vs the
     component-aware split (always 0, pytest- and oracle-pinned)."""
-    pairs = cached(minhash_lsh_pairs(docs, _sorted=False).select("doc_id_1", "doc_id_2"))
+    pairs = cached(minhash_lsh_pairs(docs).select("doc_id_1", "doc_id_2"))
     comp_split = leakage_free_split(docs, pairs).select("doc_id", F.col("split").alias("gsplit"))
     u = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13), 16, 10
@@ -1815,7 +1810,7 @@ JOIN gsplit gb ON gb.doc_id = p.doc_id_2
 def split_leakage_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-hygiene measurement: near-dup pairs torn across splits by a
     naive per-doc hash split vs the component-aware split (always 0)."""
-    return materialized(lambda: split_leakage_audit(_docs(spark, sf_dir)))
+    return materialized(lambda: split_leakage_audit(_docs(spark, sf_dir)), "split_leakage_audit")
 
 
 # --- Incremental MinHash index: dedup a NEW batch against a stored corpus --
@@ -1898,8 +1893,6 @@ def repair_minhash_append(docs: DataFrame, path: str) -> None:
     (per-table existence checks). Cost: three narrow doc_id anti-joins
     against stored components on the rare retry path; the common path
     stays the plain append."""
-    from ..warehouse.hdfs import exists as _hx
-
     spark = docs.sparkSession
     with released():
         mem = cached(token_dedup_members(docs))
@@ -1907,39 +1900,16 @@ def repair_minhash_append(docs: DataFrame, path: str) -> None:
             "doc_id", "lang", "text"
         )
         sigs = cached(minhash_signatures(reps, spread=False))
-        # each missing set is eagerly checkpointed: its plan reads the
-        # stored path the write below appends to
-        if _hx(spark, f"{path}/signatures"):
-            stored = spark.read.parquet(f"{path}/signatures").select("doc_id")
-            miss_s = sigs.join(stored, "doc_id", "left_anti").localCheckpoint(
-                eager=True
-            )
-        else:
-            miss_s = sigs
-        if not miss_s.isEmpty():
+        miss_s = missing_rows(sigs, f"{path}/signatures", "doc_id")
+        if miss_s is not None:
             miss_s.write.mode("append").parquet(f"{path}/signatures")
-        if _hx(spark, f"{path}/bands"):
-            stored = (
-                spark.read.parquet(f"{path}/bands").select("doc_id").distinct()
-            )
-            miss_b = sigs.join(stored, "doc_id", "left_anti").localCheckpoint(
-                eager=True
-            )
-        else:
-            miss_b = sigs
-        if not miss_b.isEmpty():
+        miss_b = missing_rows(sigs, f"{path}/bands", "doc_id")
+        if miss_b is not None:
             _cap_buckets(minhash_band_table(miss_b), _LSH_BUCKET_CAP).write.mode(
                 "append"
             ).partitionBy("band").parquet(f"{path}/bands")
-        pairs = mem.select("doc_id", "rep_id")
-        if _hx(spark, f"{path}/members"):
-            stored = spark.read.parquet(f"{path}/members").select("doc_id")
-            miss_m = pairs.join(stored, "doc_id", "left_anti").localCheckpoint(
-                eager=True
-            )
-        else:
-            miss_m = pairs
-        if not miss_m.isEmpty():
+        miss_m = missing_rows(mem.select("doc_id", "rep_id"), f"{path}/members", "doc_id")
+        if miss_m is not None:
             miss_m.write.mode("append").parquet(f"{path}/members")
         # same append-after-delete contract as the plain append path
         from . import tombstones
@@ -2056,11 +2026,11 @@ def purge_minhash_index(spark: SparkSession, path: str) -> int:
         spark, path, "members", "doc_id", None, clear_sidecar=False
     )
     if removed:
-        surviving = (
+        surviving = checkpoint(
             spark.read.parquet(f"{path}/members")
             .select(F.col("rep_id").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            "minhash_purge:surviving_reps",
         )
         for table, part in (("signatures", None), ("bands", "band")):
             src = f"{path}/{table}"
@@ -2076,10 +2046,9 @@ def purge_minhash_index(spark: SparkSession, path: str) -> int:
             hdfs.swap_aside(spark, src, tmp)
     if hdfs.exists(spark, f"{path}/ingested"):
         side = f"{path}/ingested"
-        remaining = (
-            spark.read.parquet(side)
-            .join(F.broadcast(stones), "doc_id", "left_anti")
-            .localCheckpoint(eager=True)
+        remaining = checkpoint(
+            spark.read.parquet(side).join(F.broadcast(stones), "doc_id", "left_anti"),
+            "minhash_purge:ingested",
         )
         tmp = f"{side}.purging"
         remaining.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -2138,7 +2107,7 @@ def compact_minhash_index(
     )
     # overflow audit is tiny (only buckets past the cap) — checkpoint it
     # eagerly so it survives the directory swap below
-    overflow = lsh_bucket_overflow(bands, cap).localCheckpoint(eager=True)
+    overflow = checkpoint(lsh_bucket_overflow(bands, cap), "minhash_compact:overflow")
     _cap_buckets(bands, cap).repartition("band").write.mode("overwrite").partitionBy(
         "band"
     ).parquet(tmp)
@@ -2599,10 +2568,9 @@ def cdc_dup_stats(docs: DataFrame) -> DataFrame:
     # exact-key convention token_dedup_members already rests on — so the
     # checkpoint holds (doc_id, key) rows and chunk bytes never cross a
     # shuffle (guide §2.3: shuffle keys, not payloads).
-    chunks = (
-        cdc_chunks(docs)
-        .select("doc_id", F.unhex(F.md5(F.col("chunk_text"))).alias("ck"))
-        .localCheckpoint(eager=True)
+    chunks = checkpoint(
+        cdc_chunks(docs).select("doc_id", F.unhex(F.md5(F.col("chunk_text"))).alias("ck")),
+        "cdc:chunk_keys",
     )
     occ = chunks.groupBy("ck").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
@@ -2671,7 +2639,7 @@ def cdc_dedup_strip(docs: DataFrame) -> DataFrame:
     shape notes there apply unchanged)."""
     # materialize once: three consumers (firsts agg + both join sides)
     # would otherwise recompute the rolling-md5 projection three times
-    chunks = cdc_chunks(docs).localCheckpoint(eager=True)
+    chunks = checkpoint(cdc_chunks(docs), "cdc_strip:chunks")
     idx_checked = F.when(F.col("idx") < _SPAN_ORD_BASE, F.col("idx")).otherwise(
         F.raise_error(
             F.concat(
@@ -2809,7 +2777,7 @@ def dedup_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = minhash_lsh_pairs(_docs(spark, sf_dir))
         return quality_survivors(_docs(spark, sf_dir), pairs)
 
-    return materialized(build)
+    return materialized(build, "dedup_quality_survivor")
 
 
 # --- cross-language exact duplicates (r12) -----------------------------------
@@ -3080,4 +3048,4 @@ def dedup_methods_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
             connected_components(pa), connected_components(pb), _docs(spark, sf_dir)
         )
 
-    return materialized(build)
+    return materialized(build, "dedup_methods_ari")

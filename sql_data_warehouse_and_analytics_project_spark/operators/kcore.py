@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint
 from ..registry import query
 from ..sources import tpch
 
@@ -66,14 +67,14 @@ def kcore(edges: DataFrame, k: int = _K, max_rounds: int = _MAX_ROUNDS) -> DataF
     filtering the previous one) breaks that implication and must switch
     to a set-difference check; ``tests/test_kcore.py::
     test_fixpoint_count_equality_requires_monotone_peel`` pins this."""
-    cur = edges.select("a", "b").localCheckpoint(eager=True)
+    cur = checkpoint(edges.select("a", "b"), "kcore:edges")
     for _ in range(max_rounds):
         good = _degrees(cur).filter(F.col("deg") >= k).select("node")
-        nxt = (
+        nxt = checkpoint(
             cur.join(good.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(good.withColumnRenamed("node", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
+            .select("a", "b"),
+            "kcore:peel_round",
         )
         # one scalar to the driver per round (the components discipline);
         # an unchanged edge count means a fixpoint — every extra round

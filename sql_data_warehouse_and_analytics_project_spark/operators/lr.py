@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import cached, released
+from ..materialize import cached, checkpoint, released
 from ..registry import query
 from ..sources import tpch
 from ..sources.local import local_frame
@@ -522,7 +522,7 @@ def eval_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     by design (PAV is a sequential pool merge, the BPE class); pytest
     pins the PAV math against hand-solved cases and its defining
     properties."""
-    scored = _lr_scored(spark, sf_dir).localCheckpoint(eager=True)
+    scored = checkpoint(_lr_scored(spark, sf_dir), "calibration:scored")
     fit = isotonic_fit(scored)
     applied = isotonic_apply(scored, fit).withColumn(
         "score_raw", F.col("score")

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import checkpoint
 from ..registry import query
 from ..sources import tpch
 from .dedup import _LSH_BUCKET_CAP as _PHASH_CAP  # one tuning knob for every banding cap
@@ -840,7 +841,6 @@ def _hamming_band_pairs(
     n_bands: int,
     band_bits: int,
     hamming_max: int,
-    _sorted: bool = True,
 ) -> DataFrame:
     """Near-duplicate (media_id_1, media_id_2, hamming) pairs from a
     (media_id, <sig_col>) integer-signature frame — every perceptual-hash
@@ -850,38 +850,29 @@ def _hamming_band_pairs(
     Hamming skeleton (:func:`dedup._hamming_pairs`) over DISTINCT hashes
     only, renamed to media ids."""
     # the signature frame feeds several consumers (the rep_min collapse,
-    # the members rejoin, the bands) — uncached, every branch re-runs the
+    # the members rejoin, the bands) — uncut, every branch re-runs the
     # upstream Python-side decode+hash pass: the r18 phash before-plan
     # carried 12 separate MapInPandas nodes, i.e. 12 full codec round
-    # trips over the corpus for one query. A plain .cache()
-    # is NOT enough: the consumers' stages launch concurrently inside one
-    # job and each computes the still-unmaterialized cache independently
-    # (profiled r18: six 57 KiB-input Python stages despite the cache).
-    # EAGER localCheckpoint is the ordering point — the decode+hash pass
-    # runs exactly once in its own job, every consumer reads the blocks.
-    # rep_min stays LAZY — .cache() here measured ~1.7× SLOWER end to end
-    # (an InMemoryRelation has no size estimate, so the members/confirm
-    # joins lose their broadcast planning), and its recompute is one
-    # narrow agg over the checkpoint whose shuffle map side the scheduler
-    # dedupes across consumers within a job anyway.
-    sigs = sigs.localCheckpoint(eager=True)
+    # trips over the corpus for one query. rep_min stays LAZY — .cache()
+    # here measured ~1.7× SLOWER end to end (an InMemoryRelation has no
+    # size estimate, so the members/confirm joins lose their broadcast
+    # planning), and its recompute is one narrow agg over the checkpoint
+    # whose shuffle map side the scheduler dedupes across consumers within
+    # a job anyway.
+    sigs = checkpoint(sigs, f"{sig_col}:signatures")
     rep_min = sigs.groupBy(sig_col).agg(F.min("media_id").alias("rep_id"))
     members = sigs.join(rep_min, sig_col).select(
         F.col("media_id").alias("doc_id"), F.col("rep_id")
     )
     reps = rep_min.select(F.col("rep_id").alias("doc_id"), sig_col)
-    out = _hamming_pairs(reps, members, sig_col, n_bands, band_bits, hamming_max).select(
+    return _hamming_pairs(reps, members, sig_col, n_bands, band_bits, hamming_max).select(
         F.col("doc_id_1").alias("media_id_1"),
         F.col("doc_id_2").alias("media_id_2"),
         "hamming",
     )
-    return out.orderBy("media_id_1", "media_id_2") if _sorted else out
 
 
-def phash_pairs(
-    sigs: DataFrame,
-    _sorted: bool = True,
-) -> DataFrame:
+def phash_pairs(sigs: DataFrame) -> DataFrame:
     """Near-duplicate image pairs from (media_id, phash) signatures —
     the shared Hamming-band skeleton at the image constants (8 bands ×
     7 bits, confirm ≤ 7; pigeonhole-complete for the confirm threshold)."""
@@ -891,7 +882,6 @@ def phash_pairs(
         _PHASH_N_BANDS,
         _PHASH_BAND_BITS,
         _PHASH_HAMMING_MAX,
-        _sorted=_sorted,
     )
 
 
@@ -993,7 +983,7 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs the Python decode exactly once; the rest of the skeleton keeps
     # its concurrent-stage overlap (an end-to-end materialized() wrapper
     # measured 0.5 s slower at sf0.1 by serializing it)
-    return phash_pairs(phash_signatures(spark, sf_dir))
+    return phash_pairs(phash_signatures(spark, sf_dir)).orderBy("media_id_1", "media_id_2")
 
 
 # --- Audio near-dup: energy-envelope fingerprint ----------------------------
@@ -1070,10 +1060,7 @@ def afp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def afp_pairs(
-    sigs: DataFrame,
-    _sorted: bool = True,
-) -> DataFrame:
+def afp_pairs(sigs: DataFrame) -> DataFrame:
     """Near-duplicate audio pairs — the shared Hamming-band skeleton at the
     audio constants (8 bands × 6 bits, confirm ≤ 6)."""
     return _hamming_band_pairs(
@@ -1082,7 +1069,6 @@ def afp_pairs(
         _AFP_N_BANDS,
         _AFP_BAND_BITS,
         _AFP_HAMMING_MAX,
-        _sorted=_sorted,
     )
 
 
@@ -1161,7 +1147,7 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     → confirm) replayed in DuckDB."""
     # lazy return — the signature checkpoint inside bounds the WAV decode
     # to one pass; see dedup_image_phash
-    return afp_pairs(afp_signatures(spark, sf_dir))
+    return afp_pairs(afp_signatures(spark, sf_dir)).orderBy("media_id_1", "media_id_2")
 
 
 # --- Video near-dup: aligned sampled-frame dHash ----------------------------
@@ -1234,7 +1220,6 @@ def video_phash_pairs(
         _PHASH_N_BANDS,
         _PHASH_BAND_BITS,
         _PHASH_HAMMING_MAX,
-        _sorted=False,  # rolled up by video below; the pair sort would be dropped anyway
     )
     aligned = fp.filter(
         F.col("media_id_1") % _VFP_SLOT == F.col("media_id_2") % _VFP_SLOT

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import cached, released
+from ..materialize import cached, checkpoint, released
 from ..registry import query
 from ..sources import tpch
 
@@ -92,11 +92,12 @@ def pagerank(
                 )
             else:
                 s = F.sum("c")
-            ranks = (
+            # bound the plan depth at O(1) per round
+            ranks = checkpoint(
                 contribs.groupBy("dst")
                 .agg((F.lit(base) + F.lit(damp) * s).alias("r"))
-                .select(F.col("dst").alias("node"), "r")
-                .localCheckpoint(eager=True)  # bound the plan depth at O(1) per round
+                .select(F.col("dst").alias("node"), "r"),
+                "pagerank:round",
             )
     return ranks.select("node", F.round("r", 6).alias("rank")).orderBy("node")
 

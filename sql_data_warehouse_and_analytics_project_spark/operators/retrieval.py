@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint, missing_rows
 from ..registry import query
 from ..sources import tpch
 from ..sources.local import write_local
@@ -447,17 +448,16 @@ def bm25_postings_topk(
     # read it (dl == size of the full token array either way — lower()
     # preserves length). posts/dfreq recompute only narrow aggregates over
     # the checkpoint blocks.
-    pre = (
+    pre = checkpoint(
         docs.select(
             "doc_id",
             F.transform(tokens_col(F.col("text")), lambda x: F.lower(x)).alias("_t"),
-        )
-        .select(
+        ).select(
             "doc_id",
             F.size("_t").alias("dl"),
             F.filter(F.col("_t"), lambda x: x.isin(*lowered)).alias("_qt"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bm25:query_terms",
     )
     stats = pre.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -685,11 +685,8 @@ def repair_append_inverted_index(
     spark = docs_new.sparkSession
     st = spark.read.parquet(f"{path}/stats").first()
     nb = int(st["n_buckets"])
-    seen = spark.read.parquet(f"{path}/postings").select("doc_id").distinct()
-    # checkpoint: the missing set is consumed by a write that appends to
-    # the postings path its own plan reads
-    missing = docs_new.join(seen, "doc_id", "left_anti").localCheckpoint(eager=True)
-    if not missing.isEmpty():
+    missing = missing_rows(docs_new, f"{path}/postings", "doc_id")
+    if missing is not None:
         doc_postings(missing).withColumn(
             "bucket", _term_bucket_col(F.col("term"), nb)
         ).write.mode("append").partitionBy("bucket").parquet(f"{path}/postings")

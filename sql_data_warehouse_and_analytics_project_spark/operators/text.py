@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint
 from ..registry import query
 from ..sources import tpch
 
@@ -1177,10 +1178,8 @@ def perplexity_buckets(docs: DataFrame) -> DataFrame:
     is a 3-group aggregation."""
     # checkpoint: scored feeds BOTH the threshold agg and the rollup —
     # uncheckpointed, the whole bigram model build + score fold runs twice
-    scored = (
-        bigram_logprob(docs)
-        .select("doc_id", "avg_logprob")
-        .localCheckpoint(eager=True)
+    scored = checkpoint(
+        bigram_logprob(docs).select("doc_id", "avg_logprob"), "perplexity_buckets:scored"
     )
     th = scored.agg(
         F.round(F.percentile("avg_logprob", F.lit(1.0 / 3)), 6).alias("t1"),

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint
 from ..sources.local import local_frame
 
 _SIDE = "tombstones"
@@ -90,12 +91,13 @@ def unmask_ids(spark: SparkSession, path: str, ids: DataFrame, id_col: str) -> N
     side = _side_path(path)
     if not hdfs.exists(spark, side):
         return
-    remaining = (
+    # plan reads the path the swap replaces
+    remaining = checkpoint(
         spark.read.parquet(side)
         .select(id_col)
         .distinct()
-        .join(F.broadcast(ids.select(id_col).distinct()), id_col, "left_anti")
-        .localCheckpoint(eager=True)  # plan reads the path the swap replaces
+        .join(F.broadcast(ids.select(id_col).distinct()), id_col, "left_anti"),
+        "tombstones:unmasked",
     )
     tmp = f"{side}.rewriting"
     remaining.coalesce(1).write.mode("overwrite").parquet(tmp)

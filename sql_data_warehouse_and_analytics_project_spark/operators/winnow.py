@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint, missing_rows
 from ..registry import query
 from ..sources import tpch
 
@@ -370,8 +371,6 @@ def repair_winnow_append(docs: DataFrame, path: str, cap: int = _BUCKET_CAP) -> 
     doc_id is not already stored (one narrow anti-join on the rare retry
     path). With a single component table this is the whole repair story —
     there is no partially-written sibling to reconcile."""
-    from ..warehouse.hdfs import exists as _hx
-
     spark = docs.sparkSession
     fp = winnow_fingerprints(docs)
     from pyspark.sql import Window
@@ -382,12 +381,8 @@ def repair_winnow_append(docs: DataFrame, path: str, cap: int = _BUCKET_CAP) -> 
         .filter(F.col("_rn") <= cap)
         .drop("_rn")
     )
-    if _hx(spark, f"{path}/fingerprints"):
-        stored = (
-            spark.read.parquet(f"{path}/fingerprints").select("doc_id").distinct()
-        )
-        capped = capped.join(stored, "doc_id", "left_anti").localCheckpoint(eager=True)
-    if not capped.isEmpty():
+    capped = missing_rows(capped, f"{path}/fingerprints", "doc_id")
+    if capped is not None:
         _banded(capped).write.mode("append").partitionBy("band").parquet(
             f"{path}/fingerprints"
         )
@@ -471,10 +466,11 @@ def compact_winnow_index(
         ["doc_id", "h"]
     )
     counts = rows.groupBy("h").agg(F.count(F.lit(1)).cast("bigint").alias("n_members"))
-    audit = (
-        counts.filter(F.col("n_members") > cap)
-        .select("h", "n_members", (F.col("n_members") - cap).alias("trimmed"))
-        .localCheckpoint(eager=True)
+    audit = checkpoint(
+        counts.filter(F.col("n_members") > cap).select(
+            "h", "n_members", (F.col("n_members") - cap).alias("trimmed")
+        ),
+        "winnow_compact:overflow",
     )
     w = Window.partitionBy("h").orderBy("doc_id")
     capped = (

@@ -28,19 +28,7 @@ def get_spark(app_name: str = "sql_dwh_spark", shuffle_partitions: int | None = 
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r19 note: a 64k coalescePartitions.minPartitionSize floor was
-        # A/B'd (AQE coalescing is blind to downstream fan-out and
-        # serialized a capped-candidate expansion to ONE task inside
-        # dedup_simhash) — isolated wins (simhash 2.99->2.37 s, phash
-        # 2.42->2.08 s) but a NET whole-bench loss (29.23 vs 27.28 s;
-        # q05's many genuinely-small shuffles paid +1 s of tiny-task
-        # overhead). Rejected; kept at the Spark default. The env override
-        # below lets a cluster deployment re-tune it where the fan-out
-        # hazard dominates.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
+        # minPartitionSize keeps Spark's 1m default: r19 rejected a 64k floor (net bench loss)
         # local mode = driver-only JVM: driver memory is the only heap knob
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         # local mode = driver-only JVM; headless runs don't need the UI

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..materialize import checkpoint
+
 
 def local_frame(spark: SparkSession, rows: list, ddl: str | T.StructType) -> DataFrame:
     """``spark.createDataFrame(rows, ddl)`` as a ``LocalRelation``, ``[]``
@@ -41,13 +43,12 @@ def range_offsets(
     and, per aggregate in ``sums``, its exact total over all EARLIER range
     partitions as ``_off_<name>``; ``totals`` holds the grand totals. A window
     per ``_pid`` plus the offset reproduces a global ``Window.orderBy(by)``
-    with no single-partition exchange. ``ranged`` is localCheckpoint-ed
-    lazily (the subtotal collect fills it): range bounds are sampled per
-    execution, and the offsets only line up on one partition assignment."""
-    ranged = (
-        df.repartitionByRange(*by)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+    with no single-partition exchange. ``ranged`` is checkpointed before
+    the subtotal collect: range bounds are sampled per execution, and the
+    offsets only line up on one partition assignment."""
+    ranged = checkpoint(
+        df.repartitionByRange(*by).withColumn("_pid", F.spark_partition_id()),
+        "range_offsets:ranged",
     )
     names = list(sums)
     subs = sorted(

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import materialize  # module import: the sinks take a `checkpoint` location parameter
 from ..sources.local import local_frame, write_local
 
 # Logical schema of the events stream (micros precision — the nanos in the
@@ -371,17 +372,40 @@ def sink_stream_upsert(
     )
 
 
-def sink_to_parquet(job: DataFrame, path: str, checkpoint: str, output_mode: str = "append"):
-    """Production sink shape: append-mode parquet (exactly-once via the
-    checkpoint + file-sink manifest), the streaming analog of the silver
-    delta append (ref: proc_load_silver.sql:228-252)."""
-    return (
-        job.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .start()
-    )
+def _record_ingest(
+    batch: DataFrame, key: str, side_path: str, batch_id: int, pipeline: str
+) -> tuple[DataFrame, bool]:
+    """At-least-once ingest sidecar of the foreachBatch index sinks:
+    ``(batch, retried)``. The ``side_path`` table holds (``key``,
+    batch_id) rows. ``batch`` loses the ids an EARLIER batch recorded —
+    the current batch_id is excluded, so a retry of this batch keeps the
+    rows its dead attempt recorded but may not have indexed — is cut by a
+    checkpoint (its plan reads the sidecar, and the sink's index paths,
+    that the writes after it append to), and its ids are recorded once.
+    ``retried`` says this batch_id was already recorded: the sidecar is
+    written before the sink's own appends and doubles as the attempt
+    marker, so a retried batch routes onto its sink's convergent repair."""
+    from ..warehouse.hdfs import exists
+
+    spark = batch.sparkSession
+    retried = False
+    if exists(spark, side_path):
+        side = spark.read.parquet(side_path)
+        prior = side.filter(F.col("batch_id") != batch_id).select(key).distinct()
+        batch = batch.join(prior, key, "left_anti")
+        mine = side.filter(F.col("batch_id") == batch_id).select(key)
+        retried = bool(mine.take(1))
+    batch = materialize.checkpoint(batch, f"{pipeline}:new_ids")
+    to_record = batch
+    if retried:
+        # don't double-record rows the dead attempt wrote
+        to_record = materialize.checkpoint(
+            batch.join(mine.distinct(), key, "left_anti"), f"{pipeline}:unrecorded_ids"
+        )
+    to_record.select(key, F.lit(batch_id).cast("bigint").alias("batch_id")).write.mode(
+        "append"
+    ).parquet(side_path)
+    return batch, retried
 
 
 def sink_stream_neardedup(
@@ -460,7 +484,6 @@ def sink_stream_neardedup(
     unpublished until the retry republishes its batch directory (which
     the overwrite makes idempotent)."""
 
-    from ..materialize import released
     from ..operators import dedup
 
     if threshold is None:
@@ -514,7 +537,7 @@ def sink_stream_neardedup(
     def _dedup_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         batch = batch.select("doc_id", "lang", "text")
-        with released():
+        with materialize.released():
             pairs = dedup.minhash_lsh_pairs(batch, threshold=threshold)
             dups = pairs.select(F.col("doc_id_2").alias("doc_id")).distinct()
             survivors = batch.join(dups, "doc_id", "left_anti")
@@ -527,10 +550,10 @@ def sink_stream_neardedup(
                 # eager checkpoint: the tiny candidate-pair frame is consumed
                 # by the id-collect, the confirm join, and the anti-join —
                 # uncheckpointed, each would re-run the index probe pipeline
-                hits = (
+                hits = materialize.checkpoint(
                     dedup.query_minhash_index(spark, index_path, survivors, threshold=probe)
-                    .filter(F.col("new_doc_id") != F.col("indexed_doc_id"))
-                    .localCheckpoint(eager=True)
+                    .filter(F.col("new_doc_id") != F.col("indexed_doc_id")),
+                    "neardedup_sink:index_hits",
                 )
                 if exact_confirm and _exists(spark, out_path):
                     confirmed = _confirmed_hits(spark, hits, survivors)
@@ -538,46 +561,12 @@ def sink_stream_neardedup(
                     confirmed = hits.filter(F.col("est_jaccard") >= threshold)
                 seen = confirmed.select(F.col("new_doc_id").alias("doc_id")).distinct()
                 survivors = survivors.join(seen, "doc_id", "left_anti")
-                indexed_ids = spark.read.parquet(f"{index_path}/signatures").select(
-                    "doc_id"
-                )
-            retried = False
-            mine = None
-            if _exists(spark, f"{index_path}/ingested"):
-                # at-least-once source: a doc accepted by an EARLIER batch
-                # and redelivered now must not re-enter the output; a retry
-                # of THIS batch (same batch_id) republishes its own rows
-                side = spark.read.parquet(f"{index_path}/ingested")
-                prior = (
-                    side.filter(F.col("batch_id") != batch_id)
-                    .select("doc_id")
-                    .distinct()
-                )
-                survivors = survivors.join(prior, "doc_id", "left_anti")
-                mine = side.filter(F.col("batch_id") == batch_id).select("doc_id")
-                retried = bool(mine.take(1))
-            # localCheckpoint — NOT cache(): the survivor plan READS the
-            # index paths the next statements APPEND to, and Spark's cache
-            # manager invalidates-and-recomputes any cached plan whose
-            # source path is written — the recomputed anti-join would then
-            # see the batch's own just-appended signatures and drop every
-            # row. The checkpoint cuts lineage to materialized partitions,
-            # so every write below consumes the pre-append survivor set.
-            survivors = survivors.localCheckpoint(eager=True)
-            to_record = survivors
-            if retried:
-                # don't double-record rows the dead attempt wrote;
-                # checkpoint because the plan reads the sidecar path the
-                # write appends to
-                to_record = survivors.join(
-                    mine.distinct(), "doc_id", "left_anti"
-                ).localCheckpoint(eager=True)
-            # sidecar BEFORE index append: it doubles as the attempt
-            # marker — a batch whose batch_id is already recorded routes
-            # onto the per-component convergent repair below
-            to_record.select(
-                "doc_id", F.lit(batch_id).cast("bigint").alias("batch_id")
-            ).write.mode("append").parquet(f"{index_path}/ingested")
+            # a doc accepted by an EARLIER batch and redelivered now must
+            # not re-enter the output; a retry of THIS batch republishes
+            # its own rows
+            survivors, retried = _record_ingest(
+                survivors, "doc_id", f"{index_path}/ingested", batch_id, "neardedup_sink"
+            )
             if retried:
                 # r12 (same class as the ADVICE r11 inverted-index fix):
                 # the old retry keyed on the signatures table alone, so a
@@ -587,17 +576,14 @@ def sink_stream_neardedup(
                 # repair appends each component's own missing rows.
                 dedup.repair_minhash_append(survivors, index_path)
             else:
-                to_index = survivors
-                if indexed_ids is not None:
-                    # belt-and-braces for a doc indexed by an earlier batch
-                    # (already sidecar-excluded): never append a duplicate
-                    # signature. Checkpoint (ADVICE r6): the anti-join would
-                    # otherwise re-execute against the live signatures path
-                    # mid-append.
-                    to_index = survivors.join(
-                        indexed_ids, "doc_id", "left_anti"
-                    ).localCheckpoint(eager=True)
-                dedup.append_minhash_index(to_index, index_path)
+                # belt-and-braces for a doc indexed by an earlier batch
+                # (already sidecar-excluded): never append a duplicate
+                # signature
+                to_index = materialize.missing_rows(
+                    survivors, f"{index_path}/signatures", "doc_id"
+                )
+                if to_index is not None:
+                    dedup.append_minhash_index(to_index, index_path)
             survivors.write.mode("overwrite").parquet(
                 f"{out_path}/ingest_batch={batch_id}"
             )
@@ -660,52 +646,24 @@ def sink_stream_embeddings(
 
     def _ingest_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.select("vec_id", "label", "embedding")
-        side_path = f"{index_path}/ingested"
-        retried = False
-        mine = None
-        if _exists(spark, side_path):
-            side = spark.read.parquet(side_path)
-            # exclude the CURRENT batch_id: a retry must keep the rows
-            # its dead attempt recorded but may not have indexed
-            prior = (
-                side.filter(F.col("batch_id") != batch_id)
-                .select("vec_id")
-                .distinct()
-            )
-            batch = batch.join(prior, "vec_id", "left_anti")
-            mine = side.filter(F.col("batch_id") == batch_id).select("vec_id")
-            retried = bool(mine.take(1))
-        # cut lineage before the sidecar/vector appends: the anti-join
-        # reads the sidecar path the next statement appends to
-        batch = batch.localCheckpoint(eager=True)
+        batch, retried = _record_ingest(
+            batch.select("vec_id", "label", "embedding"),
+            "vec_id",
+            f"{index_path}/ingested",
+            batch_id,
+            "embeddings_sink",
+        )
         if batch.isEmpty():  # vec-wise redelivery from earlier batches only
             return
-        to_record = batch
-        if retried:
-            # don't double-record rows the dead attempt wrote; checkpoint
-            # because the plan reads the sidecar path the write appends to
-            to_record = batch.join(
-                mine.distinct(), "vec_id", "left_anti"
-            ).localCheckpoint(eager=True)
-        to_record.select(
-            "vec_id", F.lit(batch_id).cast("bigint").alias("batch_id")
-        ).write.mode("append").parquet(side_path)
         if not _exists(spark, f"{index_path}/centroids"):
             similarity.build_ivf_index(batch, index_path, n_lists=n_lists)
         else:
+            # convergent re-append: only the vectors the dead attempt
+            # never got into the stored table
             to_index = batch
             if retried:
-                # convergent re-append: only the vectors the dead attempt
-                # never got into the stored table (checkpoint — the plan
-                # reads the vectors path the append writes to)
-                stored = spark.read.parquet(f"{index_path}/vectors").select(
-                    "vec_id"
-                )
-                to_index = batch.join(
-                    stored, "vec_id", "left_anti"
-                ).localCheckpoint(eager=True)
-            if not to_index.isEmpty():
+                to_index = materialize.missing_rows(batch, f"{index_path}/vectors", "vec_id")
+            if to_index is not None:
                 similarity.append_ivf_index(to_index, index_path)
         if staleness_every_batches and (batch_id + 1) % staleness_every_batches == 0:
             similarity.ivf_index_staleness(spark, index_path).withColumn(
@@ -764,36 +722,12 @@ def sink_stream_inverted_index(
 
     def _ingest_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.select("doc_id", "lang", "text")
         side_path = f"{index_path}/ingested"
-        retried = False
-        mine = None
-        if _exists(spark, side_path):
-            side = spark.read.parquet(side_path)
-            # exclude the CURRENT batch_id: a retry of this batch must
-            # not anti-join away the rows its dead attempt recorded
-            prior = (
-                side.filter(F.col("batch_id") != batch_id)
-                .select("doc_id")
-                .distinct()
-            )
-            batch = batch.join(prior, "doc_id", "left_anti")
-            mine = side.filter(F.col("batch_id") == batch_id).select("doc_id")
-            retried = bool(mine.take(1))
-        # cut lineage before the sidecar append the anti-join reads from
-        batch = batch.localCheckpoint(eager=True)
+        batch, retried = _record_ingest(
+            batch.select("doc_id", "lang", "text"), "doc_id", side_path, batch_id, "inverted_sink"
+        )
         if batch.isEmpty():  # doc-wise redelivery from earlier batches only
             return
-        to_record = batch
-        if retried:
-            # don't double-record rows the dead attempt wrote; checkpoint
-            # because the plan reads the sidecar path the write appends to
-            to_record = batch.join(
-                mine.distinct(), "doc_id", "left_anti"
-            ).localCheckpoint(eager=True)
-        to_record.select(
-            "doc_id", F.lit(batch_id).cast("bigint").alias("batch_id")
-        ).write.mode("append").parquet(side_path)
         if not _exists(spark, f"{index_path}/stats"):
             retrieval.build_inverted_index(batch, index_path, n_buckets=n_buckets)
         elif retried:
@@ -860,7 +794,7 @@ def sink_stream_corpus_sketch(docs_stream: DataFrame, state_path: str, checkpoin
             )
         # cut lineage before publish: the merged frame reads the very
         # path the commit is about to supersede
-        regs = regs.localCheckpoint(eager=True)
+        regs = materialize.checkpoint(regs, "corpus_sketch_sink:registers")
         _commit.publish(
             state_path,
             lambda vdir: regs.coalesce(1).write.mode("overwrite").parquet(vdir),
@@ -1645,13 +1579,14 @@ def asof_attribution_apply_batch(
     attributed = _attribute_finalized(fin, all_clicks, horizon_minutes)
     # lineage cut before any write: every frame above reads the
     # committed version dir the publish below will supersede
-    attributed = attributed.localCheckpoint(eager=True)
-    pend_new = all_pending.filter(
-        F.unix_micros("ts") > F.lit(wm_new)
-    ).localCheckpoint(eager=True)
-    clicks_new = all_clicks.filter(
-        F.unix_micros("ts") > F.lit(wm_new - horizon_us)
-    ).localCheckpoint(eager=True)
+    attributed = materialize.checkpoint(attributed, "attribution_sink:attributed")
+    pend_new = materialize.checkpoint(
+        all_pending.filter(F.unix_micros("ts") > F.lit(wm_new)), "attribution_sink:pending"
+    )
+    clicks_new = materialize.checkpoint(
+        all_clicks.filter(F.unix_micros("ts") > F.lit(wm_new - horizon_us)),
+        "attribution_sink:clicks",
+    )
 
     # idempotent output first (a retry overwrites the same dir with
     # the same rows — it recomputes from the still-unflipped state),

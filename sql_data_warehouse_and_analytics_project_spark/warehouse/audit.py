@@ -16,7 +16,7 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 
 from ..sources.local import local_frame
 from .catalog import Catalog
@@ -211,8 +211,3 @@ class RunContext:
             .orderBy("priority", "config_id")
             .collect()
         )
-
-
-def expect_empty(df: DataFrame) -> int:
-    """Count helper for "Expectation: No Results" DQ scripts."""
-    return df.limit(1).count()

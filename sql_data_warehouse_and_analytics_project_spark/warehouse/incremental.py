@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import materialized
 from ..registry import query
 from . import commit
 
@@ -141,5 +142,8 @@ def warehouse_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_rollup(li.filter(part == 0), keys, measure, path)
         refresh_rollup(spark, path, li.filter(part == 1), keys, measure)
         refresh_rollup(spark, path, li.filter(part == 2), keys, measure)
-        out = read_rollup(spark, path, li, keys, measure).localCheckpoint(eager=True)
-        return out.orderBy(*keys)
+        return materialized(
+            lambda: read_rollup(spark, path, li, keys, measure),
+            "warehouse_incremental_rollup",
+            order=keys,
+        )

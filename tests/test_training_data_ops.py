@@ -1756,7 +1756,7 @@ def test_composition_pipeline_end_to_end(spark):
     assert 0 < n2 <= n1
 
     with released():
-        pairs = dedup.minhash_lsh_pairs(s2, _sorted=False)
+        pairs = dedup.minhash_lsh_pairs(s2)
         split = dedup.leakage_free_split(s2, pairs).localCheckpoint(eager=True)
     assert split.count() == n2
     # leakage check: no near-dup pair straddles train and a held-out split

@@ -44,10 +44,10 @@ def main() -> None:
     # (the checkpoints inside still fire while building — that is the
     # pipeline's real shape)
     lazy = {
-        "dedup_minhash_lsh": lambda: D.minhash_lsh_pairs(docs, _sorted=False),
-        "dedup_simhash": lambda: D.simhash_pairs(docs, _sorted=False),
+        "dedup_minhash_lsh": lambda: D.minhash_lsh_pairs(docs),
+        "dedup_simhash": lambda: D.simhash_pairs(docs),
         "dedup_cdc_chunks": lambda: D.cdc_dup_stats(docs),
-        "dedup_image_phash": lambda: MM.phash_pairs(MM.phash_signatures(spark, SF), _sorted=False),
+        "dedup_image_phash": lambda: MM.phash_pairs(MM.phash_signatures(spark, SF)),
     }
     for name, fn in lazy.items():
         with open(os.path.join(OUT, f"{name}_after.txt"), "w") as fh:

@@ -3,7 +3,7 @@
 Runs the query warm on the session get_spark() builds, then once timed with
 the Spark event log enabled, and prints each stage of the timed run: wall
 span, total executor run time, task count, shuffle read/write bytes, input
-bytes, and the stage callsite.
+bytes, the stage callsite, and the pipeline step a checkpoint job names.
 
 Usage: python tools/opt_profile.py <query_name> [more names...]
 SF dir from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
@@ -63,10 +63,11 @@ def main() -> None:
         spark.catalog.clearCache()
         rq.fn(spark, sf_dir).count()
         spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"PROFILE:{name}")
+        spark.sparkContext.setJobGroup(f"PROFILE:{name}", f"PROFILE:{name}")
         t0 = time.perf_counter()
         rq.fn(spark, sf_dir).count()
         wall = time.perf_counter() - t0
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         spark.sparkContext.setJobDescription(None)
         print(f"\n=== {name}: timed wall {wall:.3f}s ===", flush=True)
 
@@ -84,15 +85,18 @@ def main() -> None:
         )
         path = cands[0] if cands else None
     stages = {}  # (stageId, attempt) -> dict
-    jobs = {}  # jobId -> description
+    jobs = {}  # jobId -> (group, description)
     job_stages = {}
     with open(path) as fh:
         for line in fh:
             ev = json.loads(line)
             e = ev.get("Event")
             if e == "SparkListenerJobStart":
-                desc = (ev.get("Properties") or {}).get("spark.job.description", "")
-                jobs[ev["Job ID"]] = desc
+                props = ev.get("Properties") or {}
+                jobs[ev["Job ID"]] = (
+                    props.get("spark.jobGroup.id", ""),
+                    props.get("spark.job.description", ""),
+                )
                 for sid in ev.get("Stage IDs", []):
                     job_stages[sid] = ev["Job ID"]
             elif e == "SparkListenerStageCompleted":
@@ -130,24 +134,24 @@ def main() -> None:
                 im = tm.get("Input Metrics") or {}
                 s["inp"] += im.get("Bytes Read", 0)
 
-    # group stages by job description
-    per_desc = {}
+    # group stages by job group; a checkpoint job's description names its step
+    per_group = {}
     for (sid, att), s in sorted(stages.items()):
-        jid = job_stages.get(sid)
-        desc = jobs.get(jid, "")
-        per_desc.setdefault(desc, []).append((sid, s))
+        group, desc = jobs.get(job_stages.get(sid), ("", ""))
+        s["step"] = "" if desc == group else f"[{desc}] "
+        per_group.setdefault(group, []).append((sid, s))
 
-    for desc, ss in per_desc.items():
-        if not desc.startswith("PROFILE:"):
+    for group, ss in per_group.items():
+        if not group.startswith("PROFILE:"):
             continue
-        print(f"\n##### {desc}")
+        print(f"\n##### {group}")
         total_span = sum(s["complete"] - s["submit"] for _, s in ss)
         for sid, s in sorted(ss, key=lambda x: -(x[1]["complete"] - x[1]["submit"])):
             span = (s["complete"] - s["submit"]) / 1000.0
             print(
                 f"  stage {sid:>4} span={span:7.3f}s run={s['run_ms']/1000.0:8.3f}s "
                 f"tasks={s['tasks']:>3} in={s['inp']>>10}KiB sr={s['sr']>>10}KiB "
-                f"sw={s['sw']>>10}KiB  {s['name'][:110]}"
+                f"sw={s['sw']>>10}KiB  {s['step']}{s['name'][:110]}"
             )
         print(f"  total stage span {total_span/1000.0:.3f}s over {len(ss)} stages")
 
