@@ -21,6 +21,23 @@ source's ``maxFilesPerTrigger`` bounds per-microbatch memory. The custom
 stateful operator uses ``applyInPandasWithState`` (Arrow-batched, grouped
 state) — the Spark-idiomatic form for operators the built-in windows can't
 express.
+
+Sinks: every ``foreachBatch`` sink starts through :func:`_start`
+(checkpoint location + availableNow trigger). foreachBatch is
+at-least-once, and the sinks fall into three replay disciplines:
+
+- MAX merge: the HLL corpus sketch's register merge is idempotent, so a
+  redelivered batch is a no-op by algebra;
+- partials with the lineage guard: the six SUM-merge monitors (CMS,
+  histogram, eval counts, embedding stats, A/B units, mSPRT) land one
+  partial per batch through :func:`apply_partials` (via
+  :func:`_partial_sink`) and merge at read time (:func:`_merged`);
+- anti-join repair: the index sinks append only rows not yet stored
+  (single-table winnow/positional sinks directly, multi-table sinks
+  behind the ``_record_ingest`` sidecar).
+
+The as-of attribution sink keeps its own committed-state high-water
+mark (skip-and-mark on a fresh lineage).
 """
 
 from __future__ import annotations
@@ -296,6 +313,23 @@ def run_available_now(job: DataFrame, output_mode: str, query_name: str, checkpo
     return q
 
 
+def _start(stream: DataFrame, fn, checkpoint: str):
+    """Start ``fn(batch, batch_id)`` as a foreachBatch sink that drains
+    everything available at ``checkpoint``'s lineage and stops."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _due(batch_id: int, every: int | None) -> bool:
+    """Cadence of the ``*_every_batches`` maintenance steps: true on every
+    ``every``-th batch, never when ``every`` is 0 or None."""
+    return bool(every) and (batch_id + 1) % every == 0
+
+
 _UPSERT_BUCKETS = 64
 
 
@@ -364,12 +398,7 @@ def sink_stream_upsert(
         else:
             catalog.overwrite(table, latest, partition_by=["_key_bucket"])
 
-    return (
-        job.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(job, merge_batch, checkpoint)
 
 
 def _record_ingest(
@@ -587,7 +616,7 @@ def sink_stream_neardedup(
             survivors.write.mode("overwrite").parquet(
                 f"{out_path}/ingest_batch={batch_id}"
             )
-            if compact_every_batches and (batch_id + 1) % compact_every_batches == 0:
+            if _due(batch_id, compact_every_batches):
                 overflow = dedup.compact_minhash_index(spark, index_path)
                 # only write when the re-cap actually trimmed something —
                 # an empty parquet write would leave a schema-less directory
@@ -596,12 +625,7 @@ def sink_stream_neardedup(
                         "batch_id", F.lit(batch_id).cast("bigint")
                     ).write.mode("append").parquet(f"{index_path}/audit/bucket_overflow")
 
-    return (
-        docs_stream.writeStream.foreachBatch(_dedup_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(docs_stream, _dedup_batch, checkpoint)
 
 
 def sink_stream_embeddings(
@@ -665,21 +689,16 @@ def sink_stream_embeddings(
                 to_index = materialize.missing_rows(batch, f"{index_path}/vectors", "vec_id")
             if to_index is not None:
                 similarity.append_ivf_index(to_index, index_path)
-        if staleness_every_batches and (batch_id + 1) % staleness_every_batches == 0:
+        if _due(batch_id, staleness_every_batches):
             similarity.ivf_index_staleness(spark, index_path).withColumn(
                 "batch_id", F.lit(batch_id).cast("bigint")
             ).write.mode("append").parquet(f"{index_path}/audit/staleness")
-        if compact_every_batches and (batch_id + 1) % compact_every_batches == 0:
+        if _due(batch_id, compact_every_batches):
             # without a cadence a long ingest accumulates O(batches) files
             # per list directory and probe latency degrades linearly
             similarity.compact_ivf_index(spark, index_path)
 
-    return (
-        emb_stream.writeStream.foreachBatch(_ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(emb_stream, _ingest_batch, checkpoint)
 
 
 def sink_stream_inverted_index(
@@ -740,18 +759,22 @@ def sink_stream_inverted_index(
             )
         else:
             retrieval.append_inverted_index(batch, index_path)
-        if compact_every_batches and (batch_id + 1) % compact_every_batches == 0:
+        if _due(batch_id, compact_every_batches):
             retrieval.compact_inverted_index(spark, index_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(docs_stream, _ingest_batch, checkpoint)
 
 
 # ------------------------------------------------- streaming corpus sketch
+
+
+def _lowered_terms(batch: DataFrame) -> DataFrame:
+    """(term): the batch's ``text`` tokens, lowered, one row each."""
+    from ..operators.text import tokens_col
+
+    return batch.select(
+        F.explode(F.transform(tokens_col(F.col("text")), lambda x: F.lower(x))).alias("term")
+    )
 
 
 def sink_stream_corpus_sketch(docs_stream: DataFrame, state_path: str, checkpoint: str):
@@ -774,17 +797,11 @@ def sink_stream_corpus_sketch(docs_stream: DataFrame, state_path: str, checkpoin
     next publish. Per-batch cost is O(batch tokens) map work + a KB-sized
     merge — never a rescan of history."""
     from ..operators.approx import hll_registers
-    from ..operators.text import tokens_col
     from ..warehouse import commit as _commit
 
     def _merge_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        terms = batch.select(
-            F.explode(
-                F.transform(tokens_col(F.col("text")), lambda x: F.lower(x))
-            ).alias("term")
-        )
-        regs = hll_registers(terms, "term")
+        regs = hll_registers(_lowered_terms(batch), "term")
         if _commit.current_version(state_path) is not None:
             prior = spark.read.parquet(_commit.resolve(state_path))
             regs = (
@@ -800,12 +817,7 @@ def sink_stream_corpus_sketch(docs_stream: DataFrame, state_path: str, checkpoin
             lambda vdir: regs.coalesce(1).write.mode("overwrite").parquet(vdir),
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(docs_stream, _merge_batch, checkpoint)
 
 
 def stream_sketch_estimate(spark: SparkSession, state_path: str) -> DataFrame:
@@ -818,50 +830,118 @@ def stream_sketch_estimate(spark: SparkSession, state_path: str) -> DataFrame:
     return hll_estimate(spark.read.parquet(_commit.resolve(state_path)))
 
 
-# ------------------------------- streaming CMS / histogram sketch sinks
+# -------------------------------------------- SUM-merge partial sinks
 
 
-# The SUM-merge siblings of the HLL sink above (completing the streaming
-# sketch family: distincts, frequencies, quantiles). One algebraic
-# difference drives a different replay design: HLL's MAX merge is
-# IDEMPOTENT, so redelivering a batch into the merged state is a no-op by
-# algebra; CMS cells and histogram bins merge by SUM, which is commutative
-# and associative but NOT idempotent — re-merging a redelivered batch
-# would double-count it. The Spark-native fix is to make the WRITE
-# idempotent instead of the merge: each micro-batch's partial sketch lands
-# under its own ``batch_id=N`` partition (mode("overwrite") on exactly
-# that directory), so a redelivery — same batch_id by the checkpoint
-# contract — overwrites bit-identical content instead of adding to it.
-# The merge moves to read time: SUM over the partition column is one
-# partial aggregation over KB-sized cell tables (2^11 buckets x 4 rows /
-# 256 bins per batch), so serving cost stays trivial for any realistic
-# batch count, and state growth is O(batches) KB-sized files.
+def checkpoint_lineage_id(checkpoint: str) -> str:
+    """The durable identity of a checkpoint lineage: the streaming query
+    id Spark writes to ``<checkpoint>/metadata`` at query start (a fresh
+    checkpoint directory mints a new uuid even at the same path). Falls
+    back to the checkpoint path string when the file is absent — e.g. a
+    test driving an apply function directly, or a non-local checkpoint
+    filesystem, which the local-mode sinks never use."""
+    import json as _json
+    import os as _os
+
+    try:
+        with open(_os.path.join(checkpoint, "metadata")) as f:
+            return str(_json.load(f)["id"])
+    except Exception:
+        return checkpoint
+
+
+def apply_partials(
+    partials: dict[str, DataFrame], batch_id: int, state_path: str, lineage_id: str
+) -> None:
+    """One microbatch of a SUM-merge partial sink — module-level so the
+    redelivery/crash tests can drive it directly. Each ``partials`` frame
+    lands under ``<state_path>/<table>/batch_id=N``; readers SUM-merge
+    the partials at read time (:func:`_merged`).
+
+    Replay: SUM is commutative and associative but NOT idempotent (unlike
+    the HLL sink's MAX), so re-merging a redelivered batch into a running
+    total would double-count it. The WRITE is made idempotent instead: a
+    redelivery carries the same batch_id (the checkpoint contract) and
+    overwrites bit-identical content in its own partition.
+
+    Regrouping: that holds only for IDENTICAL batch boundaries. A fresh
+    checkpoint lineage re-reads the whole source but may group files
+    differently (e.g. everything in batch 0), which would overwrite only
+    ``batch_id=0`` and leave stale higher-id partials double-counting
+    (ADVICE r17 #2). Each table therefore records the lineage id and
+    batch_id that last wrote it in ``<state_path>/<table>_meta``; a batch
+    from a DIFFERENT lineage clears the table and its record first —
+    loud (warning) and convergent, because the new lineage re-reads
+    every input file from its own batch 0.
+
+    Crash windows: a crash after a partial write but before its record
+    leaves the record stale — the streaming checkpoint has not advanced
+    either, so the same (lineage, batch_id) is redelivered and both
+    writes are idempotent overwrites. A crash between the
+    lineage-mismatch clear and the first new-lineage write loses only
+    partials the new lineage regenerates from scratch."""
+    import os as _os
+    import shutil as _shutil
+    import warnings as _warnings
+
+    for table, frame in partials.items():
+        spark = frame.sparkSession
+        table_dir, meta_dir = f"{state_path}/{table}", f"{state_path}/{table}_meta"
+        committed_lineage = None
+        if _os.path.isdir(meta_dir) and any(
+            f.endswith(".parquet") for f in _os.listdir(meta_dir)
+        ):
+            committed_lineage = spark.read.parquet(meta_dir).collect()[0]["lineage_id"]
+        if committed_lineage is not None and committed_lineage != lineage_id:
+            _warnings.warn(
+                f"partial sink {table!r} at {state_path}: fresh checkpoint lineage "
+                f"{lineage_id!r} over state committed by {committed_lineage!r}; "
+                "clearing partial dirs and rebuilding from the new lineage's "
+                "re-read (per-batch overwrite is only idempotent for identical "
+                "batch boundaries)",
+                stacklevel=2,
+            )
+            _shutil.rmtree(table_dir, ignore_errors=True)
+            _shutil.rmtree(meta_dir, ignore_errors=True)
+        frame.coalesce(1).write.mode("overwrite").parquet(f"{table_dir}/batch_id={batch_id}")
+        meta = [(str(lineage_id), int(batch_id))]
+        write_local(spark, meta, "lineage_id string, batch_id bigint", meta_dir)
+
+
+def _partial_sink(stream: DataFrame, state_path: str, checkpoint: str, partials):
+    """Start a SUM-merge partial sink: ``partials(batch)`` maps each
+    microbatch to its ``{table: frame}``, landed by :func:`apply_partials`
+    under ``checkpoint``'s lineage."""
+
+    def _sink_batch(batch: DataFrame, batch_id: int) -> None:
+        lineage_id = checkpoint_lineage_id(checkpoint)
+        apply_partials(partials(batch), batch_id, state_path, lineage_id)
+
+    return _start(stream, _sink_batch, checkpoint)
+
+
+def _merged(
+    spark: SparkSession, state_path: str, table: str, keys: list[str], sums: list[str]
+) -> DataFrame:
+    """``table``'s partials SUM-merged over every batch: one row per
+    ``keys`` with each ``sums`` column as a bigint — one partial
+    aggregation over KB-sized per-batch tables, so serving stays cheap
+    for any realistic batch count."""
+    return (
+        spark.read.parquet(f"{state_path}/{table}")
+        .groupBy(*keys)
+        .agg(*[F.sum(c).cast("bigint").alias(c) for c in sums])
+    )
 
 
 def sink_stream_cms_sketch(docs_stream: DataFrame, state_path: str, checkpoint: str):
     """Streaming Count-Min sink: per micro-batch, the md5-CMS cell table
     (``operators.approx.cms_table``) of the batch's lowered tokens lands
-    under ``<state_path>/cells/batch_id=N`` — an idempotent per-batch
-    write (see the section note for why SUM-merge state must key replay
-    safety on batch_id rather than on the merge algebra)."""
+    under ``<state_path>/cells/batch_id=N`` (:func:`apply_partials`)."""
     from ..operators.approx import cms_table
-    from ..operators.text import tokens_col
 
-    def _sink_batch(batch: DataFrame, batch_id: int) -> None:
-        terms = batch.select(
-            F.explode(
-                F.transform(tokens_col(F.col("text")), lambda x: F.lower(x))
-            ).alias("term")
-        )
-        cms_table(terms).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/cells/batch_id={batch_id}"
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(_sink_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _partial_sink(
+        docs_stream, state_path, checkpoint, lambda b: {"cells": cms_table(_lowered_terms(b))}
     )
 
 
@@ -870,11 +950,7 @@ def stream_cms_cells(spark: SparkSession, state_path: str) -> DataFrame:
     SUM across batch partitions, bit-identical to the one-shot batch
     sketch over the union (pytest-pinned). Feed to
     ``operators.approx.cms_estimate`` for point queries."""
-    return (
-        spark.read.parquet(f"{state_path}/cells")
-        .groupBy("row", "bucket")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    return _merged(spark, state_path, "cells", ["row", "bucket"], ["cnt"])
 
 
 def sink_stream_hist_sketch(
@@ -882,22 +958,26 @@ def sink_stream_hist_sketch(
 ):
     """Streaming fixed-bin histogram sink: per micro-batch, the
     document-length bin table (``operators.approx.hist_bins`` over
-    length(text)) lands under ``<state_path>/bins/batch_id=N`` — same
-    idempotent-write replay discipline as the CMS sink."""
+    length(text)) lands under ``<state_path>/bins/batch_id=N``
+    (:func:`apply_partials`)."""
     from ..operators.approx import hist_bins
 
-    def _sink_batch(batch: DataFrame, batch_id: int) -> None:
-        vals = batch.select(F.length("text").alias("v"))
-        hist_bins(vals, "v").coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/bins/batch_id={batch_id}"
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(_sink_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _partial_sink(
+        docs_stream,
+        state_path,
+        checkpoint,
+        lambda b: {"bins": hist_bins(b.select(F.length("text").alias("v")), "v")},
     )
+
+
+def stream_hist_quantiles(spark: SparkSession, state_path: str) -> DataFrame:
+    """(q, estimate) linear-interpolated quantiles over everything
+    ingested so far: SUM-merge the per-batch bin tables, then the exact
+    closed-form interpolation — identical to the one-shot batch sketch
+    over the union (pytest-pinned)."""
+    from ..operators.approx import hist_quantiles
+
+    return hist_quantiles(_merged(spark, state_path, "bins", ["bin"], ["cnt"]))
 
 
 def sink_stream_winnow_index(
@@ -914,8 +994,9 @@ def sink_stream_winnow_index(
 
     Replay safety needs NO sidecar, the third distinct argument in this
     module's family: the HLL sink is safe because MAX-merge is
-    idempotent; the CMS/histogram sinks are safe because each batch
-    OVERWRITES its own batch_id partition; this sink is safe because the
+    idempotent; the SUM-merge partial sinks are safe because each batch
+    OVERWRITES its own batch_id partition under a lineage guard
+    (:func:`apply_partials`); this sink is safe because the
     index is a SINGLE component table and every batch routes through
     ``repair_winnow_append`` — an anti-join that appends only the
     batch's not-yet-stored doc_ids, so any redelivery (same batch or a
@@ -934,7 +1015,7 @@ def sink_stream_winnow_index(
     def _ingest_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         winnow.repair_winnow_append(batch, index_path)
-        if compact_every_batches and (batch_id + 1) % compact_every_batches == 0:
+        if _due(batch_id, compact_every_batches):
             audit = winnow.compact_winnow_index(spark, index_path)
             # coalesce(1): an empty audit (nothing over-cap) must still
             # land one schema-bearing file so the audit table stays
@@ -943,7 +1024,7 @@ def sink_stream_winnow_index(
             # redelivered compacting micro-batch (crash after compaction,
             # before checkpoint commit) replaces its own audit rather
             # than appending duplicates — the same idempotent-replay
-            # discipline as the CMS/histogram sinks (r13 ADVICE).
+            # discipline as the partial sinks (r13 ADVICE).
             # batch_id lives in the partition PATH (discovered as a column
             # at read time); carrying it as a data column too would make
             # partition discovery raise a duplicate-column error.
@@ -951,59 +1032,28 @@ def sink_stream_winnow_index(
                 f"{index_path}/audit/bucket_overflow/batch_id={batch_id}"
             )
 
-    return (
-        docs_stream.writeStream.foreachBatch(_ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_hist_quantiles(spark: SparkSession, state_path: str) -> DataFrame:
-    """(q, estimate) linear-interpolated quantiles over everything
-    ingested so far: SUM-merge the per-batch bin tables, then the exact
-    closed-form interpolation — identical to the one-shot batch sketch
-    over the union (pytest-pinned)."""
-    from ..operators.approx import hist_quantiles
-
-    merged = (
-        spark.read.parquet(f"{state_path}/bins")
-        .groupBy("bin")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
-    return hist_quantiles(merged)
+    return _start(docs_stream, _ingest_batch, checkpoint)
 
 
 # --- streaming classifier-eval monitor (r13) ---------------------------------
 #
 # Online metric monitoring: the (score_key, p, q) distinct-score count
-# table of operators.evalmetrics is a SUM-merge monoid exactly like the
-# CMS/histogram cell tables, so the same per-batch_id idempotent-write
-# discipline applies (see the CMS section note) — each micro-batch's
-# compact count table lands under its own batch_id partition, a
-# redelivery overwrites bit-identical content, and the merge moves to
-# read time where the exact tie-aware AUC / PR sweep runs over the
-# KB-sized merged table. A pipeline watches its quality-classifier AUC
-# drift live without ever re-scoring ingested documents.
+# table of operators.evalmetrics is a SUM-merge monoid, so each
+# micro-batch lands its compact count table as a partial and the exact
+# tie-aware AUC / PR sweep runs at read time over the KB-sized merged
+# table. A pipeline watches its quality-classifier AUC drift live
+# without ever re-scoring ingested documents.
 
 
 def sink_stream_eval_counts(docs_stream: DataFrame, state_path: str, checkpoint: str):
     """Streaming eval-metric sink: per micro-batch, the compact
     (score_key, p, q) table of the batch's en-detector scores vs labels
     (``operators.evalmetrics.score_label``) lands under
-    ``<state_path>/counts/batch_id=N`` — idempotent per-batch write."""
+    ``<state_path>/counts/batch_id=N`` (:func:`apply_partials`)."""
     from ..operators.evalmetrics import _score_counts, score_label
 
-    def _sink_batch(batch: DataFrame, batch_id: int) -> None:
-        _score_counts(score_label(batch)).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/counts/batch_id={batch_id}"
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(_sink_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _partial_sink(
+        docs_stream, state_path, checkpoint, lambda b: {"counts": _score_counts(score_label(b))}
     )
 
 
@@ -1011,14 +1061,7 @@ def stream_eval_counts(spark: SparkSession, state_path: str) -> DataFrame:
     """(score_key, p, q) merged over every ingested batch — SUM across
     batch partitions, bit-identical to the one-shot batch count table
     over the union (pytest-pinned)."""
-    return (
-        spark.read.parquet(f"{state_path}/counts")
-        .groupBy("score_key")
-        .agg(
-            F.sum("p").cast("bigint").alias("p"),
-            F.sum("q").cast("bigint").alias("q"),
-        )
-    )
+    return _merged(spark, state_path, "counts", ["score_key"], ["p", "q"])
 
 
 def stream_roc_auc(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1050,57 +1093,35 @@ def stream_lift_deciles(spark: SparkSession, state_path: str) -> DataFrame:
 # --- streaming embedding statistics (r13) -------------------------------------
 #
 # The PCA/correlation statistics of operators.pca are SUM-merge monoids
-# (Gram cells, per-dim sums, row count), so the CMS-family per-batch_id
-# idempotent-overwrite discipline applies verbatim: each micro-batch's
-# exact partial statistics land under their own batch_id partition, the
-# merge is a read-time SUM over KB-sized tables, and the learned PCA /
-# correlation model can be refreshed from stream state at any moment
-# without re-scanning a byte of ingested embeddings.
+# (Gram cells, per-dim sums, row count), so each micro-batch lands its
+# exact partial statistics and the learned PCA / correlation model can
+# be refreshed from stream state at any moment without re-scanning a
+# byte of ingested embeddings.
 
 
 def sink_stream_embed_stats(embs_stream: DataFrame, state_path: str, checkpoint: str):
     """Streaming embedding-statistics sink: per micro-batch, the exact
     Gram upper triangle and per-dimension sums/count of the batch land
-    under ``<state_path>/{gram,dims}/batch_id=N`` — idempotent per-batch
-    writes (CMS-sink replay discipline)."""
+    under ``<state_path>/{gram,dims}/batch_id=N`` (:func:`apply_partials`)."""
     from ..operators.pca import dim_stats, gram_matrix
 
-    def _sink_batch(batch: DataFrame, batch_id: int) -> None:
-        gram_matrix(batch).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/gram/batch_id={batch_id}"
-        )
-        dim_stats(batch).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/dims/batch_id={batch_id}"
-        )
-
-    return (
-        embs_stream.writeStream.foreachBatch(_sink_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _partial_sink(
+        embs_stream,
+        state_path,
+        checkpoint,
+        lambda b: {"gram": gram_matrix(b), "dims": dim_stats(b)},
     )
 
 
 def stream_gram_matrix(spark: SparkSession, state_path: str) -> DataFrame:
     """(i, j, s) merged over every ingested batch — bit-identical to the
     one-shot batch Gram over the union (pytest-pinned)."""
-    return (
-        spark.read.parquet(f"{state_path}/gram")
-        .groupBy("i", "j")
-        .agg(F.sum("s").cast("bigint").alias("s"))
-    )
+    return _merged(spark, state_path, "gram", ["i", "j"], ["s"])
 
 
 def stream_dim_stats(spark: SparkSession, state_path: str) -> DataFrame:
     """(i, s, n) merged per-dimension sums/count over every batch."""
-    return (
-        spark.read.parquet(f"{state_path}/dims")
-        .groupBy("i")
-        .agg(
-            F.sum("s").cast("bigint").alias("s"),
-            F.sum("n").cast("bigint").alias("n"),
-        )
-    )
+    return _merged(spark, state_path, "dims", ["i"], ["s", "n"])
 
 
 def stream_pca_model(spark: SparkSession, state_path: str, k: int = 16):
@@ -1123,49 +1144,38 @@ def stream_pca_model(spark: SparkSession, state_path: str, k: int = 16):
 # purchase totals, and a user's total is a SUM-merge monoid over its
 # per-batch partials — so the state is one (user_id, v_partial) row per
 # ACTIVE user per batch (bounded by the user population, never by event
-# volume), written under the CMS-family per-batch_id idempotent-
-# overwrite discipline. The read-time merge groups the KB-to-MB-sized
-# partials by user, re-derives the md5-parity arm, and hands the exact
-# (t, v) unit table to the SAME batch operators — stream == batch by
-# construction, pytest-pinned. Users with zero purchases are recorded
-# (v_partial = 0) because they are experiment units in the batch twin.
+# volume). The read-time merge groups the KB-to-MB-sized partials by
+# user, re-derives the md5-parity arm, and hands the exact (t, v) unit
+# table to the SAME batch operators — stream == batch by construction,
+# pytest-pinned. Users with zero purchases are recorded (v_partial = 0)
+# because they are experiment units in the batch twin.
 
 
 def sink_stream_ab_units(events_stream: DataFrame, state_path: str, checkpoint: str):
     """Streaming experiment-unit sink: per micro-batch, the per-user
     fixed-point purchase partial sums (every user SEEN in the batch,
     zero-purchase users included) land under
-    ``<state_path>/units/batch_id=N`` — idempotent per-batch write."""
+    ``<state_path>/units/batch_id=N`` (:func:`apply_partials`)."""
+    from ..operators.abstats import _FP
 
-    def _sink_batch(batch: DataFrame, batch_id: int) -> None:
-        from ..operators.abstats import _FP
-
-        batch.groupBy("user_id").agg(
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    # COALESCE mirrors abstats._per_user_metric (ADVICE r16
-                    # #4): a NULL-valued purchase contributes 0, keeping the
-                    # partial non-NULL so stream == batch holds on the
-                    # degenerate input too
-                    F.coalesce(
-                        F.floor(F.col("value") * F.lit(float(_FP))).cast("bigint"),
-                        F.lit(0).cast("bigint"),
-                    ),
-                ).otherwise(F.lit(0))
-            )
-            .cast("bigint")
-            .alias("v_partial")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_path}/units/batch_id={batch_id}"
+    def _units(batch: DataFrame) -> dict[str, DataFrame]:
+        purchase_fp = F.when(
+            F.col("event_type") == "purchase",
+            # COALESCE mirrors abstats._per_user_metric (ADVICE r16
+            # #4): a NULL-valued purchase contributes 0, keeping the
+            # partial non-NULL so stream == batch holds on the
+            # degenerate input too
+            F.coalesce(
+                F.floor(F.col("value") * F.lit(float(_FP))).cast("bigint"),
+                F.lit(0).cast("bigint"),
+            ),
+        ).otherwise(F.lit(0))
+        units = batch.groupBy("user_id").agg(
+            F.sum(purchase_fp).cast("bigint").alias("v_partial")
         )
+        return {"units": units}
 
-    return (
-        events_stream.writeStream.foreachBatch(_sink_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _partial_sink(events_stream, state_path, checkpoint, _units)
 
 
 def stream_ab_units(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1175,16 +1185,9 @@ def stream_ab_units(spark: SparkSession, state_path: str) -> DataFrame:
     union (pytest-pinned)."""
     from ..operators.dedup import _md5_long
 
-    return (
-        spark.read.parquet(f"{state_path}/units")
-        .groupBy("user_id")
-        .agg(F.sum("v_partial").cast("bigint").alias("v"))
-        .select(
-            (_md5_long(F.col("user_id").cast("string"), 13) % 2)
-            .cast("int")
-            .alias("t"),
-            "v",
-        )
+    return _merged(spark, state_path, "units", ["user_id"], ["v_partial"]).select(
+        (_md5_long(F.col("user_id").cast("string"), 13) % 2).cast("int").alias("t"),
+        F.col("v_partial").alias("v"),
     )
 
 
@@ -1204,95 +1207,16 @@ def stream_ks_two_sample(spark: SparkSession, state_path: str) -> DataFrame:
     return ks_two_sample(stream_ab_units(spark, state_path))
 
 
-def checkpoint_lineage_id(checkpoint: str) -> str:
-    """The durable identity of a checkpoint lineage: the streaming query
-    id Spark writes to ``<checkpoint>/metadata`` at query start (a fresh
-    checkpoint directory mints a new uuid even at the same path). Falls
-    back to the checkpoint path string when the file is absent — e.g. a
-    test driving an apply function directly, or a non-local checkpoint
-    filesystem this local sandbox never uses."""
-    import json as _json
-    import os as _os
-
-    try:
-        with open(_os.path.join(checkpoint, "metadata")) as f:
-            return str(_json.load(f)["id"])
-    except Exception:
-        return checkpoint
-
-
-def msprt_apply_batch(
-    batch: DataFrame, batch_id: int, state_path: str, lineage_id: str
-) -> None:
-    """One microbatch of the mSPRT/CUSUM monitor sink — module-level so
-    the redelivery/crash tests can drive it directly.
-
-    Per-batch_id overwrite is idempotent only for IDENTICAL batch
-    boundaries: a fresh checkpoint lineage re-reads the whole source but
-    may group files differently (e.g. everything in batch 0), which
-    would overwrite only ``batch_id=0`` and leave stale higher-id
-    partials double-counting events (ADVICE r17 #2). The sink therefore
-    persists the committed lineage id + high-water batch_id in
-    ``<state_path>/msprt_meta``; an incoming batch from a DIFFERENT
-    lineage clears the partial dirs and rebuilds from scratch — loud
-    (warning) and convergent, because the new lineage re-reads every
-    input file from its own batch 0.
-
-    Crash windows: a crash after the partial write but before the meta
-    write leaves meta stale — the streaming checkpoint has not advanced
-    either, so the same (lineage, batch_id) is redelivered and both
-    writes are idempotent overwrites. A crash between the
-    lineage-mismatch clear and the first new-lineage write loses only
-    partials the new lineage will regenerate from scratch."""
-    import os as _os
-    import shutil as _shutil
-    import warnings as _warnings
-
-    from ..operators.msprt import msprt_counts
-
-    spark = batch.sparkSession
-    meta_dir = f"{state_path}/msprt_meta"
-    committed_lineage = None
-    if _os.path.isdir(meta_dir) and any(
-        f.endswith(".parquet") for f in _os.listdir(meta_dir)
-    ):
-        committed_lineage = spark.read.parquet(meta_dir).collect()[0]["lineage_id"]
-    if committed_lineage is not None and committed_lineage != lineage_id:
-        _warnings.warn(
-            f"msprt sink at {state_path}: fresh checkpoint lineage "
-            f"{lineage_id!r} over state committed by {committed_lineage!r}; "
-            "clearing partial dirs and rebuilding from the new lineage's "
-            "re-read (per-batch overwrite is only idempotent for identical "
-            "batch boundaries)",
-            stacklevel=2,
-        )
-        _shutil.rmtree(f"{state_path}/msprt", ignore_errors=True)
-        _shutil.rmtree(meta_dir, ignore_errors=True)
-    msprt_counts(batch).coalesce(1).write.mode("overwrite").parquet(
-        f"{state_path}/msprt/batch_id={batch_id}"
-    )
-    meta = [(str(lineage_id), int(batch_id))]
-    write_local(spark, meta, "lineage_id string, batch_id bigint", meta_dir)
-
-
 def sink_stream_msprt_counts(events_stream: DataFrame, state_path: str, checkpoint: str):
     """Streaming mSPRT monitor sink (r17): per micro-batch, the
     per-(hour, arm) trial/success partial counts land under
-    ``<state_path>/msprt/batch_id=N`` — a sum-merge monoid under the
-    CMS-family per-batch_id idempotent-overwrite discipline, guarded by
-    the lineage meta (see :func:`msprt_apply_batch`). State is bounded
-    by (observation hours × 2 arms) per batch, never by event volume."""
+    ``<state_path>/msprt/batch_id=N`` (:func:`apply_partials`). State is
+    bounded by (observation hours × 2 arms) per batch, never by event
+    volume."""
+    from ..operators.msprt import msprt_counts
 
-    def _sink_batch(batch: DataFrame, batch_id: int) -> None:
-        msprt_apply_batch(
-            batch, batch_id, state_path, checkpoint_lineage_id(checkpoint)
-        )
-
-    return (
-        events_stream.writeStream.foreachBatch(_sink_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _partial_sink(
+        events_stream, state_path, checkpoint, lambda b: {"msprt": msprt_counts(b)}
     )
 
 
@@ -1306,15 +1230,7 @@ def stream_msprt_monitor(spark: SparkSession, state_path: str) -> DataFrame:
     the raw-count monitor lacked (VERDICT r16 ask #6)."""
     from ..operators.msprt import msprt_boundary
 
-    merged = (
-        spark.read.parquet(f"{state_path}/msprt")
-        .groupBy("hr", "t")
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("x").cast("bigint").alias("x"),
-        )
-    )
-    return msprt_boundary(merged)
+    return msprt_boundary(_merged(spark, state_path, "msprt", ["hr", "t"], ["n", "x"]))
 
 
 def stream_cusum_monitor(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1326,11 +1242,7 @@ def stream_cusum_monitor(spark: SparkSession, state_path: str) -> DataFrame:
     construction, pytest-pinned per ingest batch."""
     from ..operators.cusum import cusum_from_hourly
 
-    hourly = (
-        spark.read.parquet(f"{state_path}/msprt")
-        .groupBy("hr")
-        .agg(F.sum("n").cast("bigint").alias("x"))
-    )
+    hourly = _merged(spark, state_path, "msprt", ["hr"], ["n"]).withColumnRenamed("n", "x")
     return cusum_from_hourly(hourly)
 
 
@@ -1349,12 +1261,7 @@ def sink_stream_positional_layer(docs_stream: DataFrame, index_path: str, checkp
     def _ingest_batch(batch: DataFrame, _batch_id: int) -> None:
         repair_positional_append(batch, index_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(docs_stream, _ingest_batch, checkpoint)
 
 
 # ----------------------------------- streaming as-of attribution sink (r15)
@@ -1628,12 +1535,7 @@ def sink_stream_asof_attribution(
             lineage_id=checkpoint_lineage_id(checkpoint),
         )
 
-    return (
-        events_stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(events_stream, _batch, checkpoint)
 
 
 def stream_asof_attributions(spark: SparkSession, state_path: str) -> DataFrame:

@@ -1623,73 +1623,145 @@ def test_stream_asof_fresh_checkpoint_reused_state_is_loud(spark, tmp_path):
     assert spark.read.parquet(f"{state}/lineage_mismatch").count() == 2
 
 
-@pytest.mark.slow
-def test_stream_msprt_fresh_checkpoint_different_grouping_converges(spark, tmp_path):
-    """ADVICE r17 #2: per-batch_id overwrite is idempotent only for
-    identical batch boundaries. A fresh checkpoint that groups the SAME
-    files differently (here: all files in one batch 0, vs one file per
-    batch originally) must not double-count — the sink detects the
-    lineage change via msprt_meta, clears the stale partials, and both
-    decision tables still equal their batch twins."""
-    import os
+def _regroup_case(name):
+    """(schema, three file batches, sink, partial tables, [(reader, batch
+    twin over every row)]) of one SUM-merge partial sink."""
+    import math
 
     from datetime import datetime as dt, timedelta
 
-    from sql_data_warehouse_and_analytics_project_spark.operators import cusum, msprt
-    from sql_data_warehouse_and_analytics_project_spark.streaming import jobs as J
+    from sql_data_warehouse_and_analytics_project_spark.operators import (
+        abstats,
+        approx,
+        cusum,
+        evalmetrics,
+        msprt,
+        pca,
+    )
 
-    input_dir = str(tmp_path / "in")
-    os.makedirs(input_dir)
+    docs = (
+        "doc_id bigint, lang string, text string",
+        [
+            [(i, "en" if i % 2 else "de", f"alpha the tok{i} of is x{i % 3}") for i in range(20)],
+            [(100 + i, "en" if i % 3 else "fr", f"gamma the word{i} alpha") for i in range(20)],
+            # lengths spread over the 64-char histogram bins, so a
+            # double-counted batch moves the quantiles
+            [(200 + i, "de", f"alpha word{i} fresh{i}" + " pad" * (8 * i)) for i in range(20)],
+        ],
+    )
     t0 = dt(2024, 4, 1)
-    eid = 0
+    eid = iter(range(1, 1000))
 
     def ev(minute, user, etype, value):
-        nonlocal eid
-        eid += 1
-        return (eid, t0 + timedelta(minutes=minute), user, etype, value, "{}")
+        return (next(eid), t0 + timedelta(minutes=minute), user, etype, value, "{}")
 
-    batches = [
-        [ev(7 * i, 1 + i % 9, "view", 0.0) for i in range(12)]
-        + [ev(9 * i, 1 + i % 5, "purchase", 2.5 + i) for i in range(4)],
-        [ev(120 + 7 * i, 3 + i % 9, "click", 1.0) for i in range(9)]
-        + [ev(130 + 11 * i, 2 + i % 7, "purchase", 1.25 * (i + 1)) for i in range(3)],
-        [ev(260 + 5 * i, 1 + i % 11, "view", 0.0) for i in range(10)],
-    ]
-    state = str(tmp_path / "msprt_state")
+    # hours and users straddle batch boundaries, so the merged state only
+    # exists after the read-time SUM
+    events = (
+        jobs.EVENTS_SCHEMA,
+        [
+            [ev(7 * i, 1 + i % 9, "view", 0.0) for i in range(12)]
+            + [ev(9 * i, 1 + i % 5, "purchase", 2.5 + i) for i in range(4)],
+            [ev(120 + 7 * i, 3 + i % 9, "click", 1.0) for i in range(9)]
+            + [ev(130 + 11 * i, 2 + i % 7, "purchase", 1.25 * (i + 1)) for i in range(3)],
+            [ev(260 + 5 * i, 1 + i % 11, "view", 0.0) for i in range(10)],
+        ],
+    )
+    embs = (
+        "vec_id bigint, label int, embedding array<float>",
+        [
+            [(b * 100 + t, 0, [math.sin(0.1 * (b + 1) * t * (i + 1)) for i in range(pca.DIM)])
+             for t in range(10)]
+            for b in range(3)
+        ],
+    )
+
+    def terms(d):
+        return d.select(
+            F.explode(
+                F.transform(F.split(F.trim("text"), r"\s+"), lambda x: F.lower(x))
+            ).alias("term")
+        )
+
+    return {
+        "cms": (*docs, jobs.sink_stream_cms_sketch, ["cells"],
+                [(jobs.stream_cms_cells, lambda d: approx.cms_table(terms(d)))]),
+        "hist": (*docs, jobs.sink_stream_hist_sketch, ["bins"],
+                 [(jobs.stream_hist_quantiles, lambda d: approx.hist_quantiles(
+                     approx.hist_bins(d.select(F.length("text").alias("v")), "v")))]),
+        "eval": (*docs, jobs.sink_stream_eval_counts, ["counts"],
+                 [(jobs.stream_eval_counts,
+                   lambda d: evalmetrics._score_counts(evalmetrics.score_label(d)))]),
+        "embed": (*embs, jobs.sink_stream_embed_stats, ["gram", "dims"],
+                  [(jobs.stream_gram_matrix, pca.gram_matrix),
+                   (jobs.stream_dim_stats, pca.dim_stats)]),
+        "ab": (*events, jobs.sink_stream_ab_units, ["units"],
+               [(jobs.stream_ab_units, abstats._per_user_metric)]),
+        "msprt": (*events, jobs.sink_stream_msprt_counts, ["msprt"],
+                  [(jobs.stream_msprt_monitor,
+                    lambda d: msprt.msprt_boundary(msprt.msprt_counts(d))),
+                   (jobs.stream_cusum_monitor, cusum.cusum_hourly)]),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "sink",
+    [
+        pytest.param("cms", marks=pytest.mark.slow),
+        pytest.param("hist"),
+        pytest.param("eval", marks=pytest.mark.slow),
+        pytest.param("embed", marks=pytest.mark.slow),
+        pytest.param("ab", marks=pytest.mark.slow),
+        pytest.param("msprt", marks=pytest.mark.slow),
+    ],
+)
+def test_stream_partial_sink_fresh_checkpoint_different_grouping_converges(
+    spark, tmp_path, sink
+):
+    """ADVICE r17 #2, for every SUM-merge partial sink: per-batch_id
+    overwrite is idempotent only for identical batch boundaries. A fresh
+    checkpoint that groups the SAME files differently (here: all files in
+    one batch 0, vs one file per batch originally) must not double-count
+    — the sink detects the lineage change via ``<table>_meta``, clears the
+    stale partials, and every reader still equals its batch twin."""
+    import os
+
+    schema, batches, sink_fn, tables, readers = _regroup_case(sink)
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
     for bi, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema=J.EVENTS_SCHEMA).coalesce(1).write.parquet(
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
             f"{input_dir}/b{bi}.parquet"
         )
+    every = spark.createDataFrame([r for rs in batches for r in rs], schema)
+    want = [sorted(map(repr, twin(every).collect())) for _, twin in readers]
+    state = str(tmp_path / "state")
+
+    def drain(ck, max_files_per_trigger=None):
+        stream = spark.readStream.schema(schema)
+        if max_files_per_trigger:
+            stream = stream.option("maxFilesPerTrigger", max_files_per_trigger)
+        sink_fn(stream.parquet(f"{input_dir}/*"), state, str(tmp_path / ck)).awaitTermination(120)
+
+    def partial_dirs(table):
+        return sorted(d for d in os.listdir(f"{state}/{table}") if d.startswith("batch_id"))
+
+    def got():
+        return [sorted(map(repr, reader(spark, state).collect())) for reader, _ in readers]
+
     # original lineage: one file per trigger -> batch ids 0, 1, 2
-    J.sink_stream_msprt_counts(
-        J.read_events_stream(spark, f"{input_dir}/*", max_files_per_trigger=1),
-        state,
-        str(tmp_path / "ck1"),
-    ).awaitTermination(120)
-    every = spark.createDataFrame(
-        [r for rs in batches for r in rs], schema=J.EVENTS_SCHEMA
-    )
-    want = [repr(r) for r in msprt.msprt_boundary(msprt.msprt_counts(every)).collect()]
-    want_cu = [repr(r) for r in cusum.cusum_hourly(every).collect()]
-    assert [repr(r) for r in J.stream_msprt_monitor(spark, state).collect()] == want
-    partial_dirs = sorted(
-        d for d in os.listdir(f"{state}/msprt") if d.startswith("batch_id")
-    )
-    assert partial_dirs == ["batch_id=0", "batch_id=1", "batch_id=2"]
+    drain("ck1", max_files_per_trigger=1)
+    for t in tables:
+        assert partial_dirs(t) == ["batch_id=0", "batch_id=1", "batch_id=2"]
+    assert got() == want
 
     # fresh checkpoint, DIFFERENT grouping: all three files in one batch.
     # Without the lineage guard this overwrites only batch_id=0 and the
     # stale batch_id=1,2 partials double-count.
-    J.sink_stream_msprt_counts(
-        J.read_events_stream(spark, f"{input_dir}/*"),
-        state,
-        str(tmp_path / "ck2"),
-    ).awaitTermination(120)
-    assert sorted(
-        d for d in os.listdir(f"{state}/msprt") if d.startswith("batch_id")
-    ) == ["batch_id=0"]
-    assert [repr(r) for r in J.stream_msprt_monitor(spark, state).collect()] == want
-    assert [repr(r) for r in J.stream_cusum_monitor(spark, state).collect()] == want_cu
+    drain("ck2")
+    assert got() == want
+    for t in tables:
+        assert partial_dirs(t) == ["batch_id=0"]
 
 
 @pytest.mark.slow
@@ -1707,7 +1779,7 @@ def test_stream_msprt_crash_redelivery_converges_to_batch_twins(spark, tmp_path)
     from sql_data_warehouse_and_analytics_project_spark.operators import cusum, msprt
     from sql_data_warehouse_and_analytics_project_spark.streaming.jobs import (
         EVENTS_SCHEMA,
-        msprt_apply_batch,
+        apply_partials,
         stream_cusum_monitor,
         stream_msprt_monitor,
     )
@@ -1730,17 +1802,18 @@ def test_stream_msprt_crash_redelivery_converges_to_batch_twins(spark, tmp_path)
     b1 = spark.createDataFrame(rows1, schema=EVENTS_SCHEMA)
     state = str(tmp_path / "st")
 
-    msprt_apply_batch(b0, 0, state, lineage_id="L1")
+    apply_partials({"msprt": msprt.msprt_counts(b0)}, 0, state, lineage_id="L1")
 
     # crash window 1: batch 1's partial landed but the process died
     # before the meta write — meta still says batch 0. The streaming
     # checkpoint did not advance either, so batch 1 is redelivered.
-    msprt_apply_batch(b1, 1, state, lineage_id="L1")
+    apply_partials({"msprt": msprt.msprt_counts(b1)}, 1, state, lineage_id="L1")
     shutil.rmtree(f"{state}/msprt_meta")
     spark.createDataFrame(
         [("L1", 0)], "lineage_id string, batch_id bigint"
     ).coalesce(1).write.parquet(f"{state}/msprt_meta")
-    msprt_apply_batch(b1, 1, state, lineage_id="L1")  # resume: redelivery
+    # resume: redelivery
+    apply_partials({"msprt": msprt.msprt_counts(b1)}, 1, state, lineage_id="L1")
 
     every = spark.createDataFrame(rows0 + rows1, schema=EVENTS_SCHEMA)
     want = [repr(r) for r in msprt.msprt_boundary(msprt.msprt_counts(every)).collect()]
@@ -1750,6 +1823,6 @@ def test_stream_msprt_crash_redelivery_converges_to_batch_twins(spark, tmp_path)
 
     # crash window 2: plain redelivery of the last committed batch
     # (crash after meta write, before checkpoint commit) — idempotent
-    msprt_apply_batch(b1, 1, state, lineage_id="L1")
+    apply_partials({"msprt": msprt.msprt_counts(b1)}, 1, state, lineage_id="L1")
     assert [repr(r) for r in stream_msprt_monitor(spark, state).collect()] == want
     assert [repr(r) for r in stream_cusum_monitor(spark, state).collect()] == want_cu
