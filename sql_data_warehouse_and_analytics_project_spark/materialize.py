@@ -1,16 +1,22 @@
-"""Query-lifetime caches and lineage cuts: pipelines cache with
-:func:`cached`, and the query that runs them owns the release through one
-:func:`released` scope; every lineage cut goes through :func:`checkpoint`,
-which names its job. The scope lives in a ContextVar, so the streaming
-sink's ``foreachBatch`` thread gets its own."""
+"""Query-lifetime caches, lineage cuts and row counts: pipelines cache
+with :func:`cached`, and the query that runs them owns the release through
+one :func:`released` scope; every lineage cut goes through
+:func:`checkpoint`, which names its job; a row count of a frame that is
+about to be cut or written comes from :func:`counted`, observed by that
+job instead of a second one. The scope lives in a ContextVar, so the
+streaming sink's ``foreachBatch`` thread gets its own."""
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 from contextvars import ContextVar
+from typing import TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
+
+T = TypeVar("T")
 
 _scope: ContextVar[list[DataFrame] | None] = ContextVar("release_scope", default=None)
 
@@ -64,20 +70,40 @@ def checkpoint(df: DataFrame, name: str) -> DataFrame:
         sc.setLocalProperty("spark.job.description", prev)
 
 
+def counted(
+    df: DataFrame, run: Callable[[DataFrame], T], where: Column | None = None
+) -> tuple[T, int]:
+    """``(run(observed), rows)``: ``run`` gets ``df`` with a fresh
+    ``Observation`` attached and must run exactly one action on it, a
+    :func:`checkpoint` or a parquet write; ``rows`` is ``df``'s row count,
+    or the count of rows where ``where`` holds, collected by that action's
+    own job instead of a second ``count()`` job over the same frame. The
+    observation also fills when Spark folds the frame empty and runs no
+    job at all."""
+    obs = Observation()
+    n = F.count(F.lit(1)) if where is None else F.count_if(where)
+    out = run(df.observe(obs, n.alias("n")))
+    return out, obs.get["n"]
+
+
 def missing_rows(df: DataFrame, path: str, key: str) -> DataFrame | None:
     """The rows of ``df`` whose ``key`` the parquet table at ``path`` does
     not hold yet, for a caller that appends them there: ``df`` itself while
     the table does not exist, otherwise the anti-join against the stored
     keys, cut by :func:`checkpoint` because its plan reads the path the
-    append writes. ``None`` when no row is missing."""
+    append writes, and counted by the cut. ``None`` when no row is
+    missing."""
     from .warehouse.hdfs import exists
 
     spark = df.sparkSession
-    if exists(spark, path):
-        stored = spark.read.parquet(path).select(key).distinct()
-        table = path.rstrip("/").rsplit("/", 1)[-1]
-        df = checkpoint(df.join(stored, key, "left_anti"), f"missing_rows:{table}")
-    return None if df.isEmpty() else df
+    if not exists(spark, path):
+        return None if df.isEmpty() else df
+    stored = spark.read.parquet(path).select(key).distinct()
+    table = path.rstrip("/").rsplit("/", 1)[-1]
+    missing, n = counted(
+        df.join(stored, key, "left_anti"), lambda d: checkpoint(d, f"missing_rows:{table}")
+    )
+    return missing if n else None
 
 
 def materialized(

@@ -26,7 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import checkpoint, released
+from ..materialize import checkpoint, counted, released
 from ..sources import tpch
 from ..sources.local import local_frame
 from . import dedup
@@ -44,31 +44,32 @@ from .text import (
 _MAX_NEAR_DEDUP_PASSES = 5
 
 
-def _near_dedup_fixpoint(survivors: DataFrame) -> tuple[DataFrame, int]:
-    """(checkpointed survivors, passes run) of near dedup to a FIXPOINT:
-    drop the higher id of every MinHash/LSH pair, then re-run until LSH
-    finds nothing. One pass is not always enough — the deterministic
-    band-bucket cap trims buckets to their smallest doc_ids, so on
-    cap-overflowing corpora a second pass can surface pairs among docs the
-    first pass never compared. Each pass releases the LSH pipeline's caches
-    once its survivor set is checkpointed; the pass cap bounds the cost on
-    adversarial corpora (overflow is audited, not silently retried
-    forever)."""
+def _near_dedup_fixpoint(survivors: DataFrame, n: int) -> tuple[DataFrame, int, int]:
+    """(checkpointed survivors, their count, passes run) of near dedup to
+    a FIXPOINT over ``n`` input survivors: drop the higher id of every
+    MinHash/LSH pair, then re-run until LSH finds nothing. One pass is not
+    always enough — the deterministic band-bucket cap trims buckets to
+    their smallest doc_ids, so on cap-overflowing corpora a second pass
+    can surface pairs among docs the first pass never compared. Each pass
+    releases the LSH pipeline's caches once its survivor set is
+    checkpointed; the pass cap bounds the cost on adversarial corpora
+    (overflow is audited, not silently retried forever)."""
     for n_passes in range(1, _MAX_NEAR_DEDUP_PASSES + 1):
         with released():
             pairs = dedup.minhash_lsh_pairs(survivors.select("doc_id", "lang", "text"))
-            # checkpoint losers WHILE the LSH caches are warm: counting after
-            # the release would re-run the whole pipeline uncached
-            losers = checkpoint(
+            # checkpoint losers WHILE the LSH caches are warm: consuming
+            # them after the release would re-run the whole pipeline uncached
+            losers, n_losers = counted(
                 pairs.select(F.col("doc_id_2").alias("doc_id")).distinct(),
-                "curation:near_dup_losers",
+                lambda d: checkpoint(d, "curation:near_dup_losers"),
             )
-            if losers.count() == 0:
+            if n_losers == 0:
                 break
-            survivors = checkpoint(
-                survivors.join(losers, "doc_id", "left_anti"), "curation:near_dup_survivors"
+            survivors, n = counted(
+                survivors.join(losers, "doc_id", "left_anti"),
+                lambda d: checkpoint(d, "curation:near_dup_survivors"),
             )
-    return survivors, n_passes
+    return survivors, n, n_passes
 
 
 # one constant drives BOTH the Python default and the oracle SQL's split
@@ -90,6 +91,61 @@ class CurationReport:
     n_near_dedup_passes: int = 1
 
 
+def _stages(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[DataFrame], list[int], int]:
+    """Stages 1-4 over the ``documents`` table: ``(documents, survivors,
+    counts, near-dedup passes)``, where ``survivors`` holds the survivor
+    set after the quality gate, decontamination, exact dedup and near
+    dedup, and ``counts`` their sizes.
+
+    Each stage materializes its survivor set and TRUNCATES LINEAGE
+    (localCheckpoint), and the checkpoint job counts the survivors
+    (counted): without the cut, every later stage re-runs all earlier
+    stages' joins from the scan — quadratic stage recompute — and the
+    nested plan trees grow multiplicatively (chained persists embed each
+    prior InMemoryRelation; the minhash stage over such a chain blew the
+    driver heap just RENDERING its AQE plan string). A production run
+    checkpoints stage outputs to the lake for the same two reasons;
+    localCheckpoint is the in-session equivalent."""
+    # spread once at the pipeline head (r12): every stage's survivor
+    # checkpoint inherits the partitioning, so a one-row-group corpus
+    # would otherwise run ALL row-wise stage work single-threaded
+    docs = dedup._spread_rows(tpch.load(spark, sf_dir, "documents"))
+
+    # 1. quality gate
+    keep_ids = text_quality_gopher(spark, sf_dir).filter(F.col("keep")).select("doc_id")
+    s1, n1 = counted(
+        docs.join(keep_ids, "doc_id", "left_semi"), lambda d: checkpoint(d, "curation:quality")
+    )
+
+    # 2. decontamination: drop flagged docs AND the eval slice itself
+    # (the slice predicate is text.is_eval_doc — the SAME definition the
+    # decontamination flags use, so the two can never drift)
+    contaminated = text_decontaminate(spark, sf_dir).select("doc_id")
+    s2, n2 = counted(
+        s1.filter(~is_eval_doc(F.col("doc_id"))).join(contaminated, "doc_id", "left_anti"),
+        lambda d: checkpoint(d, "curation:decontaminated"),
+    )
+
+    # 3. exact dedup: keep the lowest doc_id per normalized content hash
+    # (text.normalize_content — the same normalization dedup_exact and the
+    # document fingerprint use)
+    keeper = (
+        s2.select(F.sha2(normalize_content(F.col("text")), 256).alias("h"), "doc_id")
+        .groupBy("h")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+    s3, n3 = counted(
+        s2.join(keeper, "doc_id", "left_semi"), lambda d: checkpoint(d, "curation:exact_dedup")
+    )
+
+    # 4. near dedup to a fixpoint
+    s4, n4, passes = _near_dedup_fixpoint(s3, n3)
+    return docs, [s1, s2, s3, s4], [n1, n2, n3, n4], passes
+
+
 def curate_documents(
     spark: SparkSession,
     sf_dir: str,
@@ -101,60 +157,8 @@ def curate_documents(
     The valid split is ``1/valid_fraction_buckets`` of survivors, chosen by
     a deterministic content-independent hash of doc_id (never by position —
     positional splits re-shuffle when upstream filters change)."""
-    docs = tpch.load(spark, sf_dir, "documents")
-    from .dedup import _spread_rows
-
-    # spread once at the pipeline head (r12): every stage's survivor
-    # checkpoint inherits the partitioning, so a one-row-group corpus
-    # would otherwise run ALL row-wise stage work single-threaded
-    docs = _spread_rows(docs)
-    n_input = docs.count()
-
-    # Each stage materializes its survivor set and TRUNCATES LINEAGE
-    # (localCheckpoint): without it, every stage's count() re-runs all
-    # earlier stages' joins from the scan — quadratic stage recompute — and
-    # the nested plan trees grow multiplicatively (chained persists embed
-    # each prior InMemoryRelation; the minhash stage over such a chain blew
-    # the driver heap just RENDERING its AQE plan string). A production run
-    # checkpoints stage outputs to the lake for the same two reasons;
-    # localCheckpoint is the in-session equivalent.
-    def _stage(new: DataFrame, name: str) -> tuple[DataFrame, int]:
-        new = checkpoint(new, name)
-        return new, new.count()
-
-    # 1. quality gate
-    keep_ids = text_quality_gopher(spark, sf_dir).filter(F.col("keep")).select("doc_id")
-    survivors, n_quality = _stage(
-        docs.join(keep_ids, "doc_id", "left_semi"), "curation:quality"
-    )
-
-    # 2. decontamination: drop flagged docs AND the eval slice itself
-    # (the slice predicate is text.is_eval_doc — the SAME definition the
-    # decontamination flags use, so the two can never drift)
-    contaminated = text_decontaminate(spark, sf_dir).select("doc_id")
-    survivors, n_decontam = _stage(
-        survivors.filter(~is_eval_doc(F.col("doc_id"))).join(
-            contaminated, "doc_id", "left_anti"
-        ),
-        "curation:decontaminated",
-    )
-
-    # 3. exact dedup: keep the lowest doc_id per normalized content hash
-    # (text.normalize_content — the same normalization dedup_exact and the
-    # document fingerprint use)
-    keeper = (
-        survivors.select(F.sha2(normalize_content(F.col("text")), 256).alias("h"), "doc_id")
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    survivors, n_exact = _stage(
-        survivors.join(keeper, "doc_id", "left_semi"), "curation:exact_dedup"
-    )
-
-    # 4. near dedup to a fixpoint
-    survivors, n_near_passes = _near_dedup_fixpoint(survivors)
-    n_near = survivors.count()
+    docs, (*_, survivors), counts, n_near_passes = _stages(spark, sf_dir)
+    n_quality, n_decontam, n_exact, n_near = counts
 
     # 5. deterministic split (train/valid). The bucket hash is md5-derived
     # (same cross-engine base hash as the LSH signatures) rather than
@@ -169,7 +173,7 @@ def curate_documents(
     n_valid = curated.filter(F.col("split") == "valid").count()
 
     report = CurationReport(
-        n_input=n_input,
+        n_input=docs.count(),
         n_after_quality=n_quality,
         n_after_decontamination=n_decontam,
         n_after_exact_dedup=n_exact,
@@ -319,8 +323,8 @@ def curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set?" — the lineage table a production curation run writes next to its
 # output. One row per input doc tagged with the FIRST stage that dropped
 # it (pipeline order), or its kept split. The Spark side recomputes the
-# stage survivor sets with the same library operators curate_documents
-# wires; the DuckDB oracle reuses the IDENTICAL _sql_survivors CTE chain
+# stage survivor sets with the same _stages curate_documents runs; the
+# DuckDB oracle reuses the IDENTICAL _sql_survivors CTE chain
 # as curation_report, so the two lineage surfaces cannot drift from the
 # count surface (and a consistency pytest pins reason counts == report
 # deltas).
@@ -332,27 +336,7 @@ def curation_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     'kept_valid'), first-failing-stage semantics in pipeline order."""
     from .text import EVAL_SLICE_MOD
 
-    docs = tpch.load(spark, sf_dir, "documents")
-    docs = dedup._spread_rows(docs)
-
-    kept = text_quality_gopher(spark, sf_dir).filter(F.col("keep")).select("doc_id")
-    s1 = checkpoint(
-        docs.join(kept, "doc_id", "left_semi").select("doc_id", "lang", "text"),
-        "curation:quality",
-    )
-    contaminated = text_decontaminate(spark, sf_dir).select("doc_id")
-    s2 = checkpoint(
-        s1.filter(~is_eval_doc(F.col("doc_id"))).join(contaminated, "doc_id", "left_anti"),
-        "curation:decontaminated",
-    )
-    keeper = (
-        s2.select(F.sha2(normalize_content(F.col("text")), 256).alias("h"), "doc_id")
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    s3 = checkpoint(s2.join(keeper, "doc_id", "left_semi"), "curation:exact_dedup")
-    survivors, _ = _near_dedup_fixpoint(s3)
+    docs, (s1, s2, s3, survivors), _, _ = _stages(spark, sf_dir)
 
     def _flag(ids: DataFrame, name: str):
         return ids.select("doc_id").withColumn(name, F.lit(True))

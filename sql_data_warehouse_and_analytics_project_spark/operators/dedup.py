@@ -29,7 +29,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import cached, checkpoint, materialized, missing_rows, released
+from ..materialize import cached, checkpoint, counted, materialized, missing_rows, released
 from ..registry import query
 from ..sources import tpch
 from ..sources.local import local_frame
@@ -1245,7 +1245,8 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
 # pair), so the diameter — and the round count — is small. Each round is
 # one edge-join + partial-agg min per node (no hot key beyond a node's
 # degree, which the LSH bucket cap already bounds), and the frame is
-# localCheckpointed per round so the iterative plan never deepens. At
+# localCheckpointed per round so the iterative plan never deepens; the
+# round's changed-label count is observed by that checkpoint job. At
 # extreme diameters the alternating small-star/large-star formulation
 # (Kiveris et al., "Connected Components in MapReduce") drops rounds to
 # O(log n); not needed at near-dup shapes.
@@ -1278,8 +1279,9 @@ def connected_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
     (columns doc_id_1, doc_id_2): component_id = smallest doc_id reachable,
     is_survivor marks the canonical keeper (min-id policy, matching every
     pipeline's deterministic survivor rule). Driver-looped min-label
-    propagation with a convergence count per round — the loop moves one
-    scalar per round to the driver, never data."""
+    propagation: each round's checkpoint job also counts the labels it
+    changed, so the loop moves one scalar per round to the driver, never
+    data, and runs no job beyond the round's cut."""
     edges = checkpoint(
         pairs.select(F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b"))
         .unionAll(pairs.select(F.col("doc_id_2").alias("a"), F.col("doc_id_1").alias("b")))
@@ -1298,16 +1300,14 @@ def connected_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
             .groupBy("a")
             .agg(F.min("lab").alias("nbr_lab"))
         )
-        new_labels = checkpoint(
-            labels.join(nbr_min, labels.node == nbr_min.a, "left").select(
-                "node",
-                F.least(F.col("lab"), F.coalesce("nbr_lab", F.col("lab"))).alias("lab"),
-                (F.coalesce("nbr_lab", F.col("lab")) < F.col("lab")).alias("_chg"),
+        nbr_lab = F.coalesce("nbr_lab", F.col("lab"))
+        labels, changed = counted(
+            labels.join(nbr_min, labels.node == nbr_min.a, "left"),
+            lambda d: checkpoint(
+                d.select("node", F.least(F.col("lab"), nbr_lab).alias("lab")), "components:round"
             ),
-            "components:round",
+            where=nbr_lab < F.col("lab"),
         )
-        changed = new_labels.filter(F.col("_chg")).count()
-        labels = new_labels.drop("_chg")
         if changed == 0:
             break
     else:

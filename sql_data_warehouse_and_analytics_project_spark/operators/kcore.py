@@ -21,8 +21,9 @@ Engine discipline — the connected_components playbook:
   on adversarial graphs — the flag says which result you got, and the
   DuckDB oracle replays the SAME cap (unrolled chained CTEs, each
   MATERIALIZED), so cross-engine parity holds converged or not. Spark
-  breaks early once a round removes nothing (one scalar count to the
-  driver per round); extra oracle rounds are no-ops by then.
+  breaks early once a round removes nothing (one scalar edge count per
+  round, observed by the round's checkpoint job, so convergence costs no
+  job of its own); extra oracle rounds are no-ops by then.
 
 Scale shape: per round, one degree aggregation + two semi joins over a
 shrinking edge list; O(max_rounds) such passes. No reference
@@ -34,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import checkpoint
+from ..materialize import checkpoint, counted
 from ..registry import query
 from ..sources import tpch
 
@@ -67,22 +68,21 @@ def kcore(edges: DataFrame, k: int = _K, max_rounds: int = _MAX_ROUNDS) -> DataF
     filtering the previous one) breaks that implication and must switch
     to a set-difference check; ``tests/test_kcore.py::
     test_fixpoint_count_equality_requires_monotone_peel`` pins this."""
-    cur = checkpoint(edges.select("a", "b"), "kcore:edges")
+    cur, n_cur = counted(edges.select("a", "b"), lambda d: checkpoint(d, "kcore:edges"))
     for _ in range(max_rounds):
         good = _degrees(cur).filter(F.col("deg") >= k).select("node")
-        nxt = checkpoint(
+        nxt, n_nxt = counted(
             cur.join(good.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(good.withColumnRenamed("node", "b"), "b", "left_semi")
             .select("a", "b"),
-            "kcore:peel_round",
+            lambda d: checkpoint(d, "kcore:peel_round"),
         )
-        # one scalar to the driver per round (the components discipline);
-        # an unchanged edge count means a fixpoint — every extra round
-        # would be a no-op, exactly like the oracle's trailing rounds
-        if nxt.count() == cur.count():
-            cur = nxt
+        # an unchanged edge count means a fixpoint (nxt = cur as sets) —
+        # every extra round would be a no-op, exactly like the oracle's
+        # trailing rounds
+        if n_nxt == n_cur:
             break
-        cur = nxt
+        cur, n_cur = nxt, n_nxt
     # report EVERY survivor of the bounded peel with its degree — when
     # converged, min(deg) >= k makes a >= k filter a no-op; when
     # truncated, the sub-k frontier nodes (the ones the next round would

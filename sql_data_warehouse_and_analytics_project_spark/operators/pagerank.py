@@ -75,6 +75,8 @@ def pagerank(
         )
         nodes = cached(trans.select(F.col("src").alias("node")).distinct())
         n = nodes.count()
+        if n == 0:  # empty graph: no node has a rank
+            return nodes.select("node", F.lit(None).cast("double").alias("rank"))
         base = (1.0 - damp) / float(n)
         ranks = nodes.select("node", F.lit(1.0 / float(n)).alias("r"))
         for _ in range(iters):

@@ -175,4 +175,5 @@ def mix_waterfill_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget = per_source.agg(
         F.expr(f"CAST(sum(c) AS BIGINT) DIV {_BUDGET_DEN}").alias("b")
     ).first()["b"]
-    return waterfill_allocations(per_source, int(budget))
+    # an empty corpus has no sources and a NULL budget: allocate nothing
+    return waterfill_allocations(per_source, budget or 0)

@@ -405,12 +405,13 @@ def _record_ingest(
     batch: DataFrame, key: str, side_path: str, batch_id: int, pipeline: str
 ) -> tuple[DataFrame, bool]:
     """At-least-once ingest sidecar of the foreachBatch index sinks:
-    ``(batch, retried)``. The ``side_path`` table holds (``key``,
+    ``(batch, rows, retried)``. The ``side_path`` table holds (``key``,
     batch_id) rows. ``batch`` loses the ids an EARLIER batch recorded —
     the current batch_id is excluded, so a retry of this batch keeps the
     rows its dead attempt recorded but may not have indexed — is cut by a
     checkpoint (its plan reads the sidecar, and the sink's index paths,
-    that the writes after it append to), and its ids are recorded once.
+    that the writes after it append to) that counts its ``rows``, and its
+    ids are recorded once.
     ``retried`` says this batch_id was already recorded: the sidecar is
     written before the sink's own appends and doubles as the attempt
     marker, so a retried batch routes onto its sink's convergent repair."""
@@ -424,7 +425,9 @@ def _record_ingest(
         batch = batch.join(prior, key, "left_anti")
         mine = side.filter(F.col("batch_id") == batch_id).select(key)
         retried = bool(mine.take(1))
-    batch = materialize.checkpoint(batch, f"{pipeline}:new_ids")
+    batch, rows = materialize.counted(
+        batch, lambda d: materialize.checkpoint(d, f"{pipeline}:new_ids")
+    )
     to_record = batch
     if retried:
         # don't double-record rows the dead attempt wrote
@@ -434,7 +437,7 @@ def _record_ingest(
     to_record.select(key, F.lit(batch_id).cast("bigint").alias("batch_id")).write.mode(
         "append"
     ).parquet(side_path)
-    return batch, retried
+    return batch, rows, retried
 
 
 def sink_stream_neardedup(
@@ -593,7 +596,7 @@ def sink_stream_neardedup(
             # a doc accepted by an EARLIER batch and redelivered now must
             # not re-enter the output; a retry of THIS batch republishes
             # its own rows
-            survivors, retried = _record_ingest(
+            survivors, _, retried = _record_ingest(
                 survivors, "doc_id", f"{index_path}/ingested", batch_id, "neardedup_sink"
             )
             if retried:
@@ -670,14 +673,14 @@ def sink_stream_embeddings(
 
     def _ingest_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch, retried = _record_ingest(
+        batch, rows, retried = _record_ingest(
             batch.select("vec_id", "label", "embedding"),
             "vec_id",
             f"{index_path}/ingested",
             batch_id,
             "embeddings_sink",
         )
-        if batch.isEmpty():  # vec-wise redelivery from earlier batches only
+        if not rows:  # vec-wise redelivery from earlier batches only
             return
         if not _exists(spark, f"{index_path}/centroids"):
             similarity.build_ivf_index(batch, index_path, n_lists=n_lists)
@@ -742,10 +745,10 @@ def sink_stream_inverted_index(
     def _ingest_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         side_path = f"{index_path}/ingested"
-        batch, retried = _record_ingest(
+        batch, rows, retried = _record_ingest(
             batch.select("doc_id", "lang", "text"), "doc_id", side_path, batch_id, "inverted_sink"
         )
-        if batch.isEmpty():  # doc-wise redelivery from earlier batches only
+        if not rows:  # doc-wise redelivery from earlier batches only
             return
         if not _exists(spark, f"{index_path}/stats"):
             retrieval.build_inverted_index(batch, index_path, n_buckets=n_buckets)

@@ -34,6 +34,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..materialize import counted
 from . import commit
 
 
@@ -89,19 +90,10 @@ class Catalog:
         pointer flip, after it is completely written.
 
         Returns the row count written (the reference records @@ROWCOUNT into
-        audit.etl_log after every load, ref: proc_load_bronze.sql:43).
+        audit.etl_log after every load, ref: proc_load_bronze.sql:43),
+        observed by the write job itself rather than a re-read.
         """
-
-        def _write(vdir: str) -> None:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(vdir)
-
-        vdir = commit.publish(self.path(name), _write, keep_versions=self.history)
-        # the table-properties sidecar lives at the table ROOT, outside
-        # version dirs, so it survives commits without copying
-        return self.spark.read.parquet(vdir).count()
+        return self._write(name, df, "overwrite", partition_by, publish=True)
 
     def overwrite_partitions(self, name: str, df: DataFrame, partition_by: list[str]) -> int:
         """Dynamic partition overwrite: replace ONLY the partitions present
@@ -112,23 +104,34 @@ class Catalog:
         replacement is atomic at the directory level; Delta would make the
         multi-partition commit transactional — same documented trade as the
         MERGE fallback in silver.py."""
-        n = df.count()
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .parquet(self.data_dir(name))
-        )
-        return n
+        return self._write(name, df, "overwrite", partition_by, partitionOverwriteMode="dynamic")
 
     def append(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> int:
         """Insert-select sink (ref: proc_load_silver.sql:229-242 delta append)."""
-        n = df.count()
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.data_dir(name))
-        return n
+        return self._write(name, df, "append", partition_by)
+
+    def _write(
+        self, name: str, df: DataFrame, mode: str, partition_by: list[str] | None,
+        publish: bool = False, **options: str
+    ) -> int:
+        """The catalog's one parquet writer: writes ``df`` and returns its
+        row count, counted by the write job (:func:`counted`), so the input
+        plan runs once. ``publish`` commits the rows as a new table version
+        (``commit.publish``); otherwise they land in the current data dir."""
+
+        def run(observed: DataFrame) -> None:
+            def write(path: str) -> None:
+                writer = observed.write.mode(mode).options(**options)
+                if partition_by:
+                    writer = writer.partitionBy(*partition_by)
+                writer.parquet(path)
+
+            if publish:
+                commit.publish(self.path(name), write, keep_versions=self.history)
+            else:
+                write(self.data_dir(name))
+
+        return counted(df, run)[1]
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self.path(name), ignore_errors=True)
@@ -137,10 +140,10 @@ class Catalog:
     #
     # A lakehouse catalog attaches key→value properties to tables (Spark:
     # ALTER TABLE ... SET TBLPROPERTIES); on this parquet-directory catalog
-    # they live in a sidecar JSON inside the table dir. The leading
-    # underscore makes Spark's parquet reader skip it as metadata, and
-    # overwrite() carries the sidecar across its atomic swap so properties
-    # behave like catalog state, not data files.
+    # they live in a sidecar JSON at the table ROOT, outside the version
+    # dirs, so it survives every overwrite() commit without copying and
+    # properties behave like catalog state, not data files. The leading
+    # underscore makes Spark's parquet reader skip it as metadata.
 
     def _props_path(self, name: str) -> str:
         return os.path.join(self.path(name), "_table_properties.json")

@@ -107,7 +107,6 @@ def load_silver_customers(ctx: RunContext) -> int:
 
     if target is None:
         merged = source.withColumn("dwh_create_date", F.lit(ctx.as_of))
-        affected = merged.count()
     else:
         s = source.select(
             F.col("cst_id").alias("s_cst_id"),
@@ -145,7 +144,9 @@ def load_silver_customers(ctx: RunContext) -> int:
         )
         affected = j.filter(changed | inserted).count()
 
-    cat.overwrite(name, merged)
+    slv = cat.overwrite(name, merged)
+    if target is None:
+        affected = slv  # a first load inserts every row
 
     # Watermark advance with 1-day safety buffer (ref: proc_load_silver.sql:119-122)
     if affected > 0:
@@ -159,7 +160,6 @@ def load_silver_customers(ctx: RunContext) -> int:
 
     # DQ: distinct bronze ids vs silver rows (ref: proc_load_silver.sql:127-132)
     brz = bronze.filter(F.col("cst_id").isNotNull()).select("cst_id").distinct().count()
-    slv = cat.read(name).count()
     ctx.dq_compare(name, "Row Count", brz, slv, "Customer record mismatch", "Silver")
     ctx.log(name, affected)
     return affected

@@ -3,6 +3,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -22,13 +23,48 @@ def spark():
     yield s
 
 
-@pytest.fixture(scope="session")
-def duck():
+def duck_over(sf_dir: str):
+    """A DuckDB connection with one view per source table of ``sf_dir``."""
     con = duckdb.connect()
     for t in tpch.TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+@pytest.fixture(scope="session")
+def duck():
+    con = duck_over(SF_DIR)
     yield con
     con.close()
+
+
+def group_jobs(spark, group: str) -> list:
+    """(name, description) of every job job group ``group`` has run."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == group:
+            desc = job.description().get() if job.description().isDefined() else ""
+            out.append((job.name(), desc))
+    return out
+
+
+def jobs_run_by(spark, fn) -> tuple:
+    """``(fn(), jobs)``: ``jobs`` is the (name, description) of every job
+    ``fn`` ran, collected under a fresh job group whose description is the
+    group name itself."""
+    sc = spark.sparkContext
+    group = f"jobs-run-by|{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, group_jobs(spark, group)
 
 
 def _norm_spark(v):

@@ -4,11 +4,15 @@ both routine at 100 TB — neither may throw or mis-pair."""
 
 from __future__ import annotations
 
+import pathlib
 import random
+import shutil
 from itertools import combinations
 
+import pyarrow.parquet as pq
 import pytest
 
+from conftest import SF_DIR, assert_query_matches_oracle, duck_over
 from sql_data_warehouse_and_analytics_project_spark.materialize import released
 from sql_data_warehouse_and_analytics_project_spark.operators import dedup
 
@@ -39,6 +43,31 @@ def test_dedup_pipelines_handle_uniform_corpus(spark):
         sim = dedup.simhash_pairs(uniform).collect()
         assert len(sim) == 45
         assert all(r["hamming"] == 0 for r in sim)
+
+
+@pytest.mark.parametrize(
+    "name, emptied",
+    [
+        ("graph_pagerank_trade", ("orders", "lineitem")),
+        ("mix_waterfill_chars", ("documents",)),
+    ],
+)
+def test_empty_sources_match_the_oracle(spark, tmp_path, name, emptied):
+    """A query over source tables emptied with their schema kept returns
+    what its DuckDB oracle returns: no rows. Pagerank divided by a zero
+    node count and waterfill ran int() on a NULL budget before."""
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    for src in pathlib.Path(SF_DIR).iterdir():  # the source files are read-only
+        shutil.copyfile(src, sf_dir / src.name)
+    for table in emptied:
+        path = sf_dir / f"{table}.parquet"
+        pq.write_table(pq.read_schema(path).empty_table(), path)
+    duck = duck_over(str(sf_dir))
+    try:
+        assert_query_matches_oracle(spark, duck, name, sf_dir=str(sf_dir))
+    finally:
+        duck.close()
 
 
 def test_ivf_training_handles_empty_embeddings(spark, tmp_path):

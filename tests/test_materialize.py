@@ -6,7 +6,8 @@ frames; outside a scope a cached frame stays cached for the session. Every
 registry query that caches intermediates must leave the cache manager
 empty, both when it returns and after its result is consumed. Every eager
 checkpoint job is described by its pipeline step, and the caller's job
-description and group survive the cut.
+description and group survive the cut. A row count taken with
+``counted`` rides the checkpoint job and adds none of its own.
 """
 
 from __future__ import annotations
@@ -15,15 +16,20 @@ import threading
 
 import pytest
 
-from conftest import SF_DIR
+from pyspark.sql import functions as F
+
+from conftest import SF_DIR, group_jobs, jobs_run_by
 
 from sql_data_warehouse_and_analytics_project_spark.materialize import (
     cached,
+    checkpoint,
+    counted,
     materialized,
     missing_rows,
     released,
 )
 from sql_data_warehouse_and_analytics_project_spark.registry import all_queries
+from sql_data_warehouse_and_analytics_project_spark.sources.local import local_frame
 
 
 def _cache_empty(spark) -> bool:
@@ -116,19 +122,6 @@ def test_registry_query_leaves_no_cache(spark, name):
     assert _cache_empty(spark)
 
 
-def _group_jobs(spark, group: str) -> list:
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None)
-    out = []
-    for i in range(jobs.size()):
-        job = jobs.apply(i)
-        if job.jobGroup().isDefined() and job.jobGroup().get() == group:
-            desc = job.description().get() if job.description().isDefined() else ""
-            out.append((job.name(), desc))
-    return out
-
-
 @pytest.mark.parametrize(
     "name",
     [
@@ -152,10 +145,53 @@ def test_checkpoint_jobs_carry_their_step_name(spark, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert after == before == [group, group]
-    jobs = _group_jobs(spark, group)
+    jobs = group_jobs(spark, group)
     cuts = [desc for site, desc in jobs if site.startswith("localCheckpoint at")]
     assert cuts, f"{name} ran no checkpoint job"
     assert all(d and d != group for d in cuts), cuts
+
+
+@pytest.mark.parametrize("name", ["graph_kcore_copurchase", "dedup_components"])
+def test_fixpoint_loops_run_only_named_jobs(spark, name):
+    """The driver loops read their convergence scalar from the round's
+    checkpoint job: every job the build runs is a named cut, none is a
+    bare count under the caller's description."""
+    _, jobs = jobs_run_by(spark, lambda: all_queries()[name].fn(spark, SF_DIR))
+    assert jobs, f"{name} ran no job"
+    bare = [site for site, desc in jobs if ":" not in desc]
+    assert not bare, bare
+
+
+def _aggregate(spark):
+    return spark.range(100).groupBy((F.col("id") % 7).alias("k")).agg(F.count(F.lit(1)).alias("n"))
+
+
+@pytest.mark.parametrize(
+    "frame, rows",
+    [
+        (_aggregate, 7),
+        (lambda spark: local_frame(spark, [], "k bigint"), 0),
+        (lambda spark: spark.range(10).filter(F.lit(False)), 0),
+    ],
+    ids=["shuffled_aggregate", "empty_local", "folded_empty"],
+)
+def test_counted_checkpoint_counts_rows(spark, frame, rows):
+    cut, n = counted(frame(spark), lambda d: checkpoint(d, "test:counted"))
+    assert n == rows
+    assert cut.count() == rows
+
+
+def test_counted_where_counts_matching_rows(spark):
+    _, n = counted(_aggregate(spark), lambda d: checkpoint(d, "test:counted"), where=F.col("k") < 3)
+    assert n == 3
+
+
+def test_counted_checkpoint_runs_no_extra_job(spark):
+    _, plain = jobs_run_by(spark, lambda: checkpoint(_aggregate(spark), "test:plain"))
+    _, observed = jobs_run_by(
+        spark, lambda: counted(_aggregate(spark), lambda d: checkpoint(d, "test:counted"))
+    )
+    assert len(observed) == len(plain), (observed, plain)
 
 
 def test_missing_rows_absent_path_returns_the_frame(spark, tmp_path):

@@ -151,6 +151,25 @@ def test_lineage_cuts_go_through_materialize():
     assert not offenders, offenders
 
 
+def test_row_observations_go_through_counted():
+    """One way to count rows inside a job that already runs:
+    ``Observation(`` and ``.observe(`` appear only in ``materialize.py``,
+    whose ``counted`` attaches the observation. Comment lines are exempt."""
+    import pathlib
+
+    import sql_data_warehouse_and_analytics_project_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root).as_posix()}:{n}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        if path.relative_to(root).as_posix() != "materialize.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ("Observation(" in line or ".observe(" in line) and not line.lstrip().startswith("#")
+    ]
+    assert not offenders, offenders
+
+
 def test_driver_rows_go_through_local_frame():
     """One way for driver-side rows to enter a plan: ``createDataFrame(``
     appears only in ``sources/local.py``, whose ``local_frame`` builds a

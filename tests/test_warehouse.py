@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from conftest import jobs_run_by
+from sql_data_warehouse_and_analytics_project_spark.sources.local import local_frame
 from sql_data_warehouse_and_analytics_project_spark.warehouse import Catalog, RunContext, run_pipeline
 from sql_data_warehouse_and_analytics_project_spark.warehouse import quality as Q
 from sql_data_warehouse_and_analytics_project_spark.warehouse.fixtures import write_fixture
@@ -440,6 +442,39 @@ def test_overwrite_partitions_touches_only_present_partitions(spark, tmp_path):
     got = cat.read("gold.t")
     assert got.count() == 100 + 100 + 10
     assert got.filter("y = 2021").agg(F.min("id")).first()[0] == 1000
+
+
+_CATALOG_WRITES = {
+    "overwrite": (lambda cat, df: cat.overwrite("gold.t", df), None),
+    "overwrite_partition_by": (lambda cat, df: cat.overwrite("gold.t", df, partition_by=["k"]), "k"),
+    "overwrite_partitions": (lambda cat, df: cat.overwrite_partitions("gold.t", df, ["k"]), "k"),
+    "append": (lambda cat, df: cat.append("gold.t", df), None),
+}
+
+
+@pytest.mark.parametrize("rows", [7, 0])
+@pytest.mark.parametrize("write", sorted(_CATALOG_WRITES))
+def test_catalog_write_counts_rows_within_its_write_job(spark, tmp_path, write, rows):
+    """Every catalog write returns the rows it wrote, empty frames
+    included, counted by the write job itself: it runs no more jobs than a
+    bare parquet write of the same frame."""
+
+    def frame():
+        if not rows:
+            return local_frame(spark, [], "k bigint, n bigint")
+        return spark.range(100).groupBy((F.col("id") % rows).alias("k")).agg(F.count("id").alias("n"))
+
+    catalog_write, part = _CATALOG_WRITES[write]
+
+    def bare():
+        writer = frame().write
+        writer = writer.partitionBy(part) if part else writer
+        writer.parquet(str(tmp_path / "bare"))
+
+    _, bare_jobs = jobs_run_by(spark, bare)
+    n, jobs = jobs_run_by(spark, lambda: catalog_write(Catalog(spark, str(tmp_path / "wh")), frame()))
+    assert n == rows
+    assert len(jobs) <= len(bare_jobs), (jobs, bare_jobs)
 
 
 def test_incremental_fact_refresh_idempotent(wh):
